@@ -3,8 +3,8 @@
 plans/r06/<query>_<label>.txt  (label = before|after).
 
 Iterative kernels (pagerank, cc, sssp) run at reduced scale with
-``Materializer.materialize`` / ``SuperstepRunner.persist_state`` patched to
-dump the FIRST superstep's physical plan — the plan shape is scale- and
+``SuperstepRunner._materialize`` patched to dump the FIRST supersteps'
+physical plans — the plan shape is scale- and
 iteration-invariant, so a small run documents the superstep structure the
 bench executes. Non-iterative queries explain their result DataFrame
 directly at sf0.01.
@@ -39,8 +39,8 @@ def write(label, name, sections):
 
 
 class SuperstepPlanTap:
-    """Patch the two superstep-materialization seams to record the first
-    superstep plan of the next kernel invocation."""
+    """Patch the runner's superstep-materialization seam to record the
+    first superstep plans of the next kernel invocation."""
 
     def __init__(self):
         self.plans: list[tuple[str, str]] = []
@@ -48,23 +48,23 @@ class SuperstepPlanTap:
     def __enter__(self):
         from networkx_graph_spark.plans import supersteps
 
-        self._orig_mat = supersteps.Materializer.materialize
+        self._orig_mat = supersteps.SuperstepRunner._materialize
         tap = self
 
-        def materialize(self, df, free_prev=True):
+        def materialize(self, plan, name, i, durable):
             if len(tap.plans) < 2:
                 tap.plans.append(
-                    (f"superstep materialize #{len(tap.plans)}", explain_str(df))
+                    (f"superstep materialize #{len(tap.plans)}", explain_str(plan))
                 )
-            return tap._orig_mat(self, df, free_prev)
+            return tap._orig_mat(self, plan, name, i, durable)
 
-        supersteps.Materializer.materialize = materialize
+        supersteps.SuperstepRunner._materialize = materialize
         return self
 
     def __exit__(self, *exc):
         from networkx_graph_spark.plans import supersteps
 
-        supersteps.Materializer.materialize = self._orig_mat
+        supersteps.SuperstepRunner._materialize = self._orig_mat
         return False
 
 

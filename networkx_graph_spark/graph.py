@@ -207,16 +207,17 @@ class SparkDiGraph:
                 F.lit(float(default_length)).alias("length"),
             )
         else:
-            vdf = endpoint_ids.join(vertices, "id", "left").select(
+            # listed vertices with a NULL node/length get the same defaults
+            # as unlisted endpoints, whether or not they touch an edge
+            vcols = (
                 "id",
                 F.coalesce(F.col("node"), F.col("id").cast("string")).alias("node"),
                 F.coalesce(F.col("length"), F.lit(float(default_length)))
                 .cast("double")
                 .alias("length"),
             )
-            extra = vertices.join(endpoint_ids, "id", "left_anti").select(
-                "id", "node", F.col("length").cast("double")
-            )
+            vdf = endpoint_ids.join(vertices, "id", "left").select(*vcols)
+            extra = vertices.join(endpoint_ids, "id", "left_anti").select(*vcols)
             vdf = vdf.unionByName(extra)
         return cls(spark, vdf, edges, round_n=round_n)
 

@@ -23,7 +23,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.supersteps import Materializer, SuperstepRunner, SuperstepResult
+from ..plans.supersteps import SuperstepRunner, SuperstepResult
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -82,9 +82,8 @@ def connected_components(
         if runner is not None or resume:
             raise ValueError(
                 "algorithm='blocked' does not support runner/resume — its "
-                "supersteps run inside bounded_sssp_csr, outside the "
-                "SuperstepRunner checkpoint protocol; use hashmin/twophase "
-                "for resumable runs"
+                "supersteps run inside bounded_sssp_csr on a non-durable "
+                "runner; use hashmin/twophase for resumable runs"
             )
         return _cc_blocked(edges, max_iter, num_partitions)
     raise ValueError(f"unknown algorithm: {algorithm}")
@@ -142,15 +141,8 @@ def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     runner = runner or SuperstepRunner(spark)
-    durable = runner.wants_step_persist()
-    if durable and (runner.bucket_cols != ["id"] or runner.bucket_count != num_partitions):
-        raise ValueError(
-            "durable co-partitioned CC needs bucket_cols=['id'], "
-            f"bucket_count={num_partitions}"
-        )
     sym = _sym_clustered(edges, num_partitions).persist()
     sym.count()
-    mat = Materializer()
     vertices = sym.select(F.col("src").alias("id")).distinct()
     isolated = (
         edges.select(F.col("src").alias("id"))
@@ -162,9 +154,7 @@ def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
         num_partitions, "id"
     )
 
-    def step(state: DataFrame, i: int):
-        from pyspark.sql import Observation
-
+    def step(state: DataFrame, i: int, prev):
         ss = sym.select(F.col("src").alias("_ssrc"), F.col("dst").alias("_sdst"))
         nbr_min = (
             state.join(ss, state["id"] == F.col("_ssrc"))
@@ -183,31 +173,16 @@ def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
             )
             .repartition(num_partitions, "id")
         )
-        obs = Observation()
-        observed = new_state.observe(
-            obs,
-            F.coalesce(
+        return new_state, {
+            "changed": F.coalesce(
                 F.sum((F.col("component") != F.col("prev_component")).cast("long")),
                 F.lit(0),
-            ).alias("changed"),
-        ).select("id", "component")
-        if durable:
-            # bucketed write = the superstep action; the read-back scan
-            # keeps hashpartitioning(id), so the next round's state join
-            # needs no vertex-state exchange
-            new_state = runner.persist_state(observed, name, i)
-        else:
-            new_state = mat.materialize(observed)
-        return new_state, {
-            "changed": obs.get["changed"],
-            "_checkpointed": True,
-            "_durable": durable,
+            )
         }
 
     result = runner.run(
         name, init, step, max_iter=max_iter, converged_key="changed", tol=0, resume=resume
     )
-    mat.release()
     sym.unpersist()
     # self-components for isolated vertices (self-loop-only or none)
     result.state = result.state.select("id", "component").unionByName(
@@ -239,7 +214,7 @@ def _cc_twophase(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     runner = runner or SuperstepRunner(spark)
-    if runner.wants_step_persist():
+    if runner.bucket_cols is not None:
         raise ValueError(
             "two-phase CC state is the EDGE set (u, v), not id-keyed vertex "
             "state — bucketed co-partitioned checkpoints apply to "
@@ -323,40 +298,26 @@ def _cc_twophase(
             .dropDuplicates(["u", "v"])
         )
 
-    mat2 = Materializer()
     # convergence = the edge SET stopped changing. Instead of two anti-join
     # count() jobs per superstep, observe an order-insensitive set signature
     # (count + sum of xxhash64(u, v)) ON the materialize action and compare
-    # driver-side — one Spark job per superstep (same trick as PageRank's
-    # Observation metrics).
-    prev_sig: list = [None]
+    # driver-side with the previous superstep's record — one Spark job per
+    # superstep (same trick as PageRank's Observation metrics).
+    def step(state: DataFrame, i: int, prev):
+        def changed(new_state, got):
+            if prev is None or prev.get("cnt") != got["cnt"]:
+                return 1
+            if exact_convergence:
+                # equal cardinality + both sides distinct: new ⊆ old ⇒
+                # equal (the runner frees the old state only after this)
+                return new_state.join(state, ["u", "v"], "left_anti").limit(1).count()
+            return int(prev.get("chk") != got["chk"])
 
-    def step(state: DataFrame, i: int):
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_state = small_star(large_star(state)).observe(
-            obs,
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("chk"),
-        )
-        if exact_convergence:
-            # keep the old state's blocks alive one extra round: the exact
-            # check reads it after the new state is materialized
-            new_state = mat2.materialize(new_state, free_prev=False)
-            cnt = obs.get["cnt"]
-            if prev_sig[0] is not None and prev_sig[0] == cnt:
-                # equal cardinality + both sides distinct: new ⊆ old ⇒ equal
-                changed = new_state.join(state, ["u", "v"], "left_anti").limit(1).count()
-            else:
-                changed = 1
-            prev_sig[0] = cnt
-        else:
-            new_state = mat2.materialize(new_state)
-            sig = (obs.get["cnt"], obs.get["chk"])
-            changed = 0 if sig == prev_sig[0] else 1
-            prev_sig[0] = sig
-        return new_state, {"changed": changed, "_checkpointed": True}
+        return small_star(large_star(state)), {
+            "cnt": F.count(F.lit(1)),
+            "chk": F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+            "changed": changed,
+        }
 
     result = runner.run(
         name, init, step, max_iter=max_iter, converged_key="changed", tol=0, resume=resume

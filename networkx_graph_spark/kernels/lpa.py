@@ -21,7 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.supersteps import Materializer, SuperstepRunner, SuperstepResult
+from ..plans.supersteps import SuperstepRunner, SuperstepResult
 from .components import _sym_clustered
 
 
@@ -38,12 +38,6 @@ def label_propagation(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     runner = runner or SuperstepRunner(spark)
-    durable = runner.wants_step_persist()
-    if durable and (runner.bucket_cols != ["id"] or runner.bucket_count != num_partitions):
-        raise ValueError(
-            "durable co-partitioned LPA needs bucket_cols=['id'], "
-            f"bucket_count={num_partitions}"
-        )
     sym = _sym_clustered(edges, num_partitions).persist()
     sym.count()
     all_vertices = (
@@ -53,12 +47,11 @@ def label_propagation(
         .persist()
     )
     all_vertices.count()
-    mat = Materializer()
     init = all_vertices.select("id", F.col("id").alias("label")).repartition(
         num_partitions, "id"
     )
 
-    def step(state: DataFrame, i: int):
+    def step(state: DataFrame, i: int, prev):
         ss = sym.select(F.col("src").alias("_ssrc"), F.col("dst").alias("_sdst"))
         votes = (
             state.join(ss, state["id"] == F.col("_ssrc"))
@@ -78,8 +71,6 @@ def label_propagation(
             )
             .select("id", F.col("m.l").alias("new_label"))
         )
-        from pyspark.sql import Observation
-
         new_state = (
             state.join(winner, "id", "left")
             .select(
@@ -89,30 +80,15 @@ def label_propagation(
             )
             .repartition(num_partitions, "id")
         )
-        obs = Observation()
-        observed = new_state.observe(
-            obs,
-            F.coalesce(
-                F.sum((F.col("label") != F.col("prev_label")).cast("long")), F.lit(0)
-            ).alias("changed"),
-        ).select("id", "label")
-        if durable:
-            # bucketed write = the superstep action (co-partitioned state,
-            # see SuperstepRunner.persist_state)
-            new_state = runner.persist_state(observed, name, i)
-        else:
-            new_state = mat.materialize(observed)
         return new_state, {
-            "changed": obs.get["changed"],
-            "_checkpointed": True,
-            "_durable": durable,
+            "changed": F.coalesce(
+                F.sum((F.col("label") != F.col("prev_label")).cast("long")), F.lit(0)
+            )
         }
 
     result = runner.run(
         name, init, step, max_iter=max_iter, converged_key="changed", tol=0, resume=resume
     )
-    result.state = result.state.select("id", "label")
-    mat.release()
     sym.unpersist()
     all_vertices.unpersist()
     return result

@@ -30,10 +30,11 @@ from __future__ import annotations
 
 from typing import Optional
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.supersteps import Materializer, SuperstepRunner, SuperstepResult
+from ..plans.supersteps import SuperstepRunner, SuperstepResult
 
 
 def pagerank(
@@ -50,22 +51,18 @@ def pagerank(
 ) -> SuperstepResult:
     """edges: (src BIGINT, dst BIGINT). Returns state (id, rank).
 
-    ``fuse``: power iterations per OUTER superstep — the checkpoint /
-    metrics / convergence-check cadence. Each outer step runs ``fuse``
-    rank updates (the last step runs the remainder, so the exact
-    iteration COUNT is preserved), records one metrics line, makes at
-    most one durable checkpoint, and checks convergence once, on the
-    final sub-iteration's delta — so a tolerance run may refine up to
-    ``fuse-1`` iterations past the first sub-tol delta (each ≤ tol).
-    Every sub-iteration is materialized individually and the dangling
-    mass enters each sub-plan as a driver literal from the previous
-    sub-iteration's Observation: in-plan chaining (intermediate dangling
-    mass as a broadcast scalar) was measured strictly slower — see the
-    step-function comment. Sub-iteration plans are identical to fuse=1
-    plans, so results match fuse=1 up to the Observation accumulator
-    merge order (ulp-level, contention-dependent — the same seam every
-    outer-step boundary already has). Oracle-pinned fixed-round queries
-    keep fuse=1.
+    ``fuse``: the runner cadence — one power iteration per superstep
+    (each materialized and recorded individually, numbered by iteration),
+    with the convergence test and the durable checkpoint every ``fuse``-th
+    superstep and on the last one. The iteration COUNT is unchanged; a
+    tolerance run may refine up to ``fuse-1`` iterations past the first
+    sub-tol delta (each ≤ tol). The dangling mass enters each plan as a
+    driver literal from the previous superstep's Observation: in-plan
+    chaining of several iterations (intermediate dangling mass as a
+    broadcast scalar) was measured strictly slower — see the step
+    function comment. Plans are identical to fuse=1 plans, so results
+    match fuse=1 up to the Observation accumulator merge order (ulp-level,
+    contention-dependent). Oracle-pinned fixed-round queries keep fuse=1.
 
     ``assume_distinct``: the caller asserts ``edges`` carries no duplicate
     (src, dst) rows, skipping the ingest dedup entirely. Duplicate edges
@@ -85,16 +82,8 @@ def pagerank(
     if fuse < 1:
         raise ValueError("fuse must be >= 1")
     runner = runner or SuperstepRunner(spark)
-    durable = runner.wants_step_persist()
-    if durable:
-        if runner.bucket_cols != ["id"] or runner.bucket_count != num_partitions:
-            raise ValueError(
-                "durable co-partitioned PageRank needs "
-                f"bucket_cols=['id'], bucket_count={num_partitions} "
-                f"(got {runner.bucket_cols}, {runner.bucket_count})"
-            )
     args = (edges, damping, tol, max_iter, runner, name, resume,
-            num_partitions, fuse, assume_distinct, durable, spark)
+            num_partitions, fuse, assume_distinct)
     # Kernel-scoped session conf, restored on exit (the kernel's actions
     # are driver-sequential within this call):
     # - shuffle partitions aligned with the caller's explicit partition
@@ -148,7 +137,7 @@ def _plan_is_distinct_on(df: DataFrame, cols: tuple) -> bool:
         out = plan.output()
         out_names = {out.apply(i).name() for i in range(out.size())}
         return key_names == out_names == set(cols)
-    except Exception:
+    except Py4JError:
         return False
 
 
@@ -163,8 +152,6 @@ def _pagerank_impl(
     num_partitions: int,
     fuse: int,
     assume_distinct: bool,
-    durable: bool,
-    spark,
 ) -> SuperstepResult:
     # Setup: ONE full-edge exchange total. The src-hash repartition the
     # superstep join needs anyway is established first; the dedup then runs
@@ -232,34 +219,16 @@ def _pagerank_impl(
         (~F.col("_ho")).alias("dangling"),
     ).sortWithinPartitions("id")
 
-    mat = Materializer()
-    # dm of the uniform init state; afterwards maintained via observations.
-    # Resume path: prefer the RECORDED dangling mass of the checkpointed
-    # iteration (metrics.jsonl roundtrips the double exactly) so the
-    # resumed plan's dm literal is bitwise the one an uninterrupted run
-    # would use; None forces a recompute from the loaded state (old
-    # checkpoints without the field, torn metrics at a kill seam).
-    dm0: Optional[float] = None if resume else (n_dangling / n if n else 0.0)
-    if resume:
-        last = runner.latest_checkpoint(name)
-        if last is not None:
-            rec = runner.metrics_for(name, last)
-            if rec is not None and isinstance(
-                rec.get("dangling_mass"), (int, float)
-            ):
-                dm0 = float(rec["dangling_mass"])
-    dm_holder = {"dm": dm0}
-
-    # Loop-invariant plan fragments, built ONCE: the per-sub-iteration
+    # Loop-invariant plan fragments, built ONCE: the per-iteration
     # driver cost was measured (BENCH/r06/probe_tri_phases.py) at ~0.14 s
     # of py4j Column/DataFrame construction + ~0.04 s Catalyst per
     # materialized iteration — ~40% of a 750k-edge superstep's wall.
     # Column objects are immutable unresolved expressions, so every
     # name-based fragment is reusable across iterations; only the
-    # dangling-mass literal changes per sub-iteration. All names are
+    # dangling-mass literal changes per iteration. All names are
     # unambiguous across the join (state: id/rank/dangling; edges:
-    # _csrc/_cdst/_cinv), so no DataFrame-bound refs or per-sub-iteration
-    # alias tags are needed (each sub-iteration is planned separately).
+    # _csrc/_cdst/_cinv), so no DataFrame-bound refs or per-iteration
+    # alias tags are needed (each iteration is planned separately).
     ce = cedges.select(
         F.col("src").alias("_csrc"),
         F.col("dst").alias("_cdst"),
@@ -275,10 +244,8 @@ def _pagerank_impl(
     _coal_c = F.coalesce(F.col("_c"), F.lit(0.0))
     _base_lit = F.lit((1.0 - damping) / n)
     _damp_lit = F.lit(damping)
-    _delta_metric = F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta")
-    _dm_metric = F.coalesce(
-        F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0)
-    ).alias("dm")
+    _delta_metric = F.max(F.abs(F.col("rank") - F.col("prev_rank")))
+    _dm_metric = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
     _n_f = float(n)
 
     def _one_update(cur: DataFrame, dm: float) -> DataFrame:
@@ -303,114 +270,60 @@ def _pagerank_impl(
             )
         )
 
-    def step(state: DataFrame, i: int):
-        from pyspark.sql import Observation
-
-        from ..plans.supersteps import _free_checkpoint
-
-        dm = dm_holder["dm"]
-        if dm is None:
-            # resume path: recompute the dangling mass from the loaded state
+    def step(state: DataFrame, i: int, prev: Optional[dict]):
+        # The dangling mass enters the plan as a driver literal: the
+        # previous superstep's observed value (resumed from its
+        # metrics.jsonl record, which roundtrips the double exactly, so a
+        # resumed plan is bitwise an uninterrupted one), the uniform
+        # init's value, or — resuming without a readable record — a
+        # recompute from the loaded state.
+        # In-plan chaining of several iterations per materialization (the
+        # former fused shape: intermediate dangling mass as a broadcast
+        # scalar cross-joined into the next update) was MEASURED strictly
+        # slower at compute scale: the executed fuse=2 plan had 13
+        # SortMergeJoins and ZERO ReusedExchange — column pruning
+        # specializes each consumer's copy of the sub-plan, the id-hash
+        # repartition cap is elided by the optimizer (child already
+        # hash(id, P)-partitioned), and the whole first iteration
+        # re-executed up to 4x per step (twice in the main job plus two
+        # broadcast-future jobs). At 16M edges: 5.9-6.4 s per fused pair
+        # vs 1.1-1.2 s per materialized iteration (same session, warm); a
+        # persist()-barrier variant that stopped the re-execution still
+        # paid cache write + two broadcast futures and stayed ~3x slower
+        # than materializing. Every iteration is therefore its own
+        # superstep; ``fuse`` is only the runner cadence.
+        dm = prev.get("dangling_mass") if prev else None
+        if dm is None and i == 0:
+            dm = n_dangling / n if n else 0.0
+        elif dm is None:
             dm = (
                 state.filter(F.col("dangling"))
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
                 .collect()[0][0]
             )
-        # completed sub-iterations derive from the runner-supplied OUTER
-        # index (not a process-local counter) so fuse>1 plans the correct
-        # remainder after a checkpoint resume in a fresh process
-        k = min(fuse, max_iter - i * fuse)
-        # Each sub-iteration materializes INDIVIDUALLY (one localCheckpoint
-        # job per power iteration); the dangling mass always enters the
-        # next sub-plan as a driver literal from the previous
-        # sub-iteration's Observation — exactly the mechanism that already
-        # carried it across outer steps. In-plan chaining of fused
-        # sub-iterations (the previous shape: intermediate dangling mass
-        # as a broadcast scalar cross-joined into the next update) was
-        # MEASURED strictly slower at compute scale: the executed fuse=2
-        # step plan had 13 SortMergeJoins and ZERO ReusedExchange —
-        # column pruning specializes each consumer's copy of the
-        # sub-plan, the id-hash repartition cap is elided by the
-        # optimizer (child already hash(id, P)-partitioned), and the
-        # whole first sub-iteration re-executed up to 4x per step (twice
-        # in the main job plus two broadcast-future jobs). At 16M edges:
-        # 5.9-6.4 s per fused pair vs 1.1-1.2 s per materialized
-        # iteration (same session, warm); a persist()-barrier variant
-        # that stopped the re-execution still paid cache write + two
-        # broadcast futures and stayed ~3x slower than materializing.
-        # ``fuse`` therefore now controls ONLY the checkpoint / metrics /
-        # convergence-check cadence (unchanged contract: one durable
-        # write and one convergence check per outer step, up to fuse-1
-        # refinement iterations past the first sub-tol delta).
-        cur = state
-        subs = []
-        prev_ck: Optional[DataFrame] = None  # durable-mode intermediate
-        for j in range(k):
-            upd = _one_update(cur, float(dm))
-            obs = Observation()
-            upd = upd.observe(obs, _delta_metric, _dm_metric)
-            # prev_rank exists only for the delta Observation above; it
-            # is projected OUT of the materialized state (the metric
-            # expressions keep the CollectMetrics node's inputs alive,
-            # the checkpoint shrinks by 8 bytes/row — ~30% of the
-            # per-iteration state write+scan)
-            upd = upd.select("id", "rank", "dangling")
-            last = j == k - 1
-            if durable and last:
-                # the bucketed write IS the outer-step action: Observation
-                # metrics ride it, and the read-back scan keeps
-                # hashpartitioning(id) so the next superstep's joins need
-                # no vertex-state exchange. Pre-cluster per
-                # persist_state's contract (one bucket file per task).
-                upd = upd.repartition(num_partitions, "id").sortWithinPartitions("id")
-                cur = runner.persist_state(upd, name, i)
-            elif durable:
-                # durable intermediates stay in-memory (durable cadence is
-                # per OUTER step, unchanged); freed once the next
-                # sub-iteration is materialized from them
-                cur = upd.localCheckpoint(eager=True)
-            else:
-                # the sub-iteration plan ends in the id-keyed sort-merge
-                # join, whose output is already hash(id)-partitioned and
-                # id-sorted; the non-adaptive localCheckpoint preserves
-                # both into the next sub-iteration's state scan
-                cur = mat.materialize(upd)
-            if prev_ck is not None:
-                _free_checkpoint(prev_ck)
-                prev_ck = None
-            if durable and not last:
-                prev_ck = cur
-            got = obs.get
-            subs.append(got)
-            dm = got["dm"]
-        new_state = cur
-        dm_holder["dm"] = subs[-1]["dm"]
-        return new_state, {
-            "max_delta": subs[-1]["delta"],
-            "sub_deltas": [s["delta"] for s in subs],
-            "dangling_mass": subs[-1]["dm"],
-            "fused": k,
-            "n": n,
-            "_checkpointed": True,
-            "_durable": durable,
+        # the plan ends in the id-keyed sort-merge join, whose output is
+        # already hash(id)-partitioned and id-sorted; the non-adaptive
+        # localCheckpoint preserves both into the next superstep's state
+        # scan. prev_rank exists only for the delta metric: the runner
+        # projects it OUT of the materialized state (the metric keeps the
+        # CollectMetrics node's inputs alive, the checkpoint shrinks by 8
+        # bytes/row — ~30% of the per-iteration state write+scan)
+        return _one_update(state, float(dm)), {
+            "max_delta": _delta_metric,
+            "dangling_mass": _dm_metric,
         }
 
-    outer_max = (max_iter + fuse - 1) // fuse
     result = runner.run(
         name,
         init,
         step,
-        max_iter=outer_max,
+        max_iter=max_iter,
         converged_key="max_delta",
         tol=tol,
         resume=resume,
+        cadence=fuse,
     )
     result.state = result.state.select("id", "rank")
-    # runner.iterations counts OUTER steps (absolute, resume-inclusive);
-    # the last step runs only the remainder, so total sub-iterations is
-    # capped at max_iter
-    result.iterations = min(result.iterations * fuse, max_iter)
-    mat.release()
     for df in (vstate, cedges):
         df.unpersist()
     return result

@@ -34,6 +34,7 @@ from typing import Optional, Sequence
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
+from ..plans.supersteps import SuperstepRunner
 from ..rounding import clip
 from .paths import all_paths_from, all_paths_to
 from .sssp import NEG_INF, PathResult, bounded_sssp
@@ -320,24 +321,20 @@ def _enumerate_to_bindings(
     edges_w = graph.edges_w_rev if reverse else graph.edges_w
     if edges_w.filter(F.col("src") == sid).isEmpty():
         return []
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
     binding_nodes = {n for n, lst in b.items() if lst and n != sid}
     # flagged single state (the repo-wide 1-action/round pattern): hit
     # rows accumulate with _hit=true, live frontier rows carry _hit=false;
     # the live count rides the round's checkpoint action as an
     # Observation metric — no isEmpty / per-round hit collect jobs
-    state = spark.createDataFrame(
+    seed = spark.createDataFrame(
         [([sid], float(init_offset), False)],
         "nodes array<bigint>, length double, _hit boolean",
     )
     lengths = graph.vertices.select(
         F.col("id").alias("tail"), F.col("length").alias("tail_len")
     )
-    mat = Materializer()
-    for _ in range(10_000):
+
+    def step(state, i: int, prev):
         cur = (
             state.filter(~F.col("_hit"))
             .filter(F.col("length") <= cutoff)
@@ -377,19 +374,19 @@ def _enumerate_to_bindings(
             )
         )
         new_state = state.filter(F.col("_hit")).unionByName(hits).unionByName(expanded)
-        obs = Observation()
-        observed = new_state.observe(
-            obs,
-            F.coalesce(F.sum((~F.col("_hit")).cast("long")), F.lit(0)).alias("n_live"),
-        )
-        state = mat.materialize(observed)
-        if obs.get["n_live"] == 0:
-            break
+        return new_state, {
+            "n_live": F.coalesce(F.sum((~F.col("_hit")).cast("long")), F.lit(0))
+        }
+
+    # the seed round's plan is the runner's init: its checkpoint is the
+    # round's one job (the seed itself is driver data, nothing to truncate)
+    state = SuperstepRunner(spark).run(
+        "bindings", step(seed, 0, None)[0], step, max_iter=10_000, converged_key="n_live"
+    ).state
     found = [
         (list(r["nodes"]), r["length"])
         for r in state.filter(F.col("_hit")).select("nodes", "length").collect()
     ]
-    mat.release()
     out = []
     for nodes, length in found:
         tail = nodes[-1]

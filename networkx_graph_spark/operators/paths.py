@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
+from ..plans.supersteps import SuperstepRunner
 from ..rounding import clip
 from .sssp import PathResult
 
@@ -61,12 +62,8 @@ def _enumerate_paths(
         return spark.createDataFrame([], _DONE_SCHEMA)
 
     # single flagged state (one Spark job per round — the active-row count
-    # rides the checkpoint as an Observation metric): active rows carry
-    # (nodes, length); finished rows carry (nodes, dist, end_offset)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
+    # rides the runner's checkpoint as an Observation metric): active rows
+    # carry (nodes, length); finished rows carry (nodes, dist, end_offset)
     def _as_state(active_df, done_df):
         a = active_df.select(
             "nodes", "length",
@@ -80,30 +77,15 @@ def _enumerate_paths(
         )
         return a.unionByName(d)
 
-    def _active_obs(df):
-        obs = Observation()
-        return obs, df.observe(
-            obs,
-            F.coalesce(F.sum(F.col("_active").cast("long")), F.lit(0)).alias("n"),
-        )
-
-    mat = Materializer()
-    obs, observed = _active_obs(
-        _as_state(
-            spark.createDataFrame(
-                [([source_id], 0.0)], "nodes array<bigint>, length double"
-            ),
-            spark.createDataFrame([], _DONE_SCHEMA),
-        )
+    init = _as_state(
+        spark.createDataFrame([([source_id], 0.0)], "nodes array<bigint>, length double"),
+        spark.createDataFrame([], _DONE_SCHEMA),
     )
-    state = mat.materialize(observed)
     lengths = graph.vertices.select(
         F.col("id").alias("tail"), F.col("length").alias("tail_len")
     )
 
-    for it in range(max_iter):
-        if obs.get["n"] == 0:
-            break
+    def step(state: DataFrame, i: int, prev):
         active = state.filter(F.col("_active")).select("nodes", "length")
         done = state.filter(~F.col("_active")).select("nodes", "dist", "end_offset")
         rows = active.withColumn("tail", F.element_at("nodes", -1)).join(
@@ -173,11 +155,14 @@ def _enumerate_paths(
                 F.concat("nodes", F.array("nxt")).alias("nodes"), "length"
             )
         )
-        obs, observed = _active_obs(_as_state(new_active, done))
-        state = mat.materialize(observed)
-    out = state.filter(~F.col("_active")).select("nodes", "dist", "end_offset")
-    mat.release()
-    return out
+        return _as_state(new_active, done), {
+            "n": F.coalesce(F.sum(F.col("_active").cast("long")), F.lit(0))
+        }
+
+    state = SuperstepRunner(spark).run(
+        "all_paths", init, step, max_iter=max_iter, converged_key="n"
+    ).state
+    return state.filter(~F.col("_active")).select("nodes", "dist", "end_offset")
 
 
 def _to_results(

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..graph import SparkDiGraph
+from ..plans.supersteps import SuperstepRunner
 from ..rounding import clip, round_half_up
 
 NEG_INF = float("-inf")
@@ -116,27 +117,16 @@ def bounded_sssp(
     mid-iteration with per-superstep metrics/lineage; ``tbest`` for p2p
     early termination is recomputed from the loaded state on resume.
     """
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer, SuperstepRunner, _free_checkpoint
-
     pl = list(payload_cols)
-    # the hoisted name-resolved message projection below requires payload
-    # names disjoint from the edge columns (they always were in spirit —
-    # the seeds schema is (qid, node, dist, prev, prev_dist, payload...))
-    _reserved = {"src", "dst", "weight", "cutoff"}
+    # payload names must be disjoint from the edge columns (the hoisted
+    # name-resolved message projection below) and from the state columns
+    _reserved = {"src", "dst", "weight", "cutoff", "qid", "node", "dist", "prev",
+                 "prev_dist", "_new"}
     if _reserved & set(pl):
-        raise ValueError(f"payload_cols may not use reserved names {_reserved}")
+        raise ValueError(f"payload_cols may not use reserved names {sorted(_reserved)}")
     key = ["dist", "prev_dist", "prev", *pl]
     cols = ["qid", "node", "dist", "prev", "prev_dist", *pl]
     runner = runner or SuperstepRunner(spark)
-    durable = runner.wants_step_persist()
-    if durable and runner.bucket_cols != ["qid", "node"]:
-        raise ValueError(
-            "durable co-partitioned SSSP needs bucket_cols=['qid', 'node'] "
-            f"(got {runner.bucket_cols})"
-        )
-    mat = Materializer()
     tbest: dict[int, float] = {}
     tb_seeded = {"done": False}
     tmark = None
@@ -179,12 +169,12 @@ def bounded_sssp(
         *[F.col(f"_m.{c}").alias(c) for c in key],
         "_new",
     )
-    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt")
+    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))
     _hits_metric = F.collect_list(
         F.when(F.col("_is_tgt") & F.col("_new"), F.struct("qid", "dist"))
-    ).alias("hits")
+    )
 
-    def step(state: DataFrame, i: int):
+    def step(state: DataFrame, i: int, prev):
         if targets is not None and not tb_seeded["done"]:
             # first step (fresh or resumed): seed tbest from current state
             for r in state.join(F.broadcast(targets), ["qid", "node"]).groupBy(
@@ -192,6 +182,10 @@ def bounded_sssp(
             ).agg(F.min("dist").alias("d")).collect():
                 tbest[r["qid"]] = r["d"]
             tb_seeded["done"] = True
+        for h in (prev or {}).get("hits", ()):
+            q, d = h["qid"], h["dist"]
+            if q not in tbest or d < tbest[q]:
+                tbest[q] = d
         frontier = state.filter(F.col("_new")).select(*cols)
         if targets is not None and tbest and i > 0:
             # prune frontier rows strictly above their query's best target
@@ -226,42 +220,16 @@ def bounded_sssp(
             .withColumn("_new", _better)
             .select(*_state_proj)
         )
-        obs = Observation()
-        metric_exprs = [_cnt_metric]
+        metrics = {"cnt": _cnt_metric}
         if targets is not None:
             new_state = new_state.join(tmark, ["qid", "node"], "left")
-            metric_exprs.append(_hits_metric)
-        observed = new_state.observe(obs, *metric_exprs).select(*cols, "_new")
-        if durable:
-            # bucketed write = the superstep action (metrics ride it; the
-            # read-back keeps hashpartitioning(qid, node)); pre-cluster on
-            # the bucket cols per persist_state's contract so each task
-            # writes exactly one bucket file (not tasks x buckets smalls)
-            observed = observed.repartition(
-                runner.bucket_count, *runner.bucket_cols
-            )
-            out_state = runner.persist_state(observed, name, i)
-        else:
-            out_state = mat.materialize(observed)
-        if i == 0:
-            # the runner's init checkpoint isn't Materializer-tracked;
-            # free it now that the first round's state is self-contained
-            # (no-op for a parquet-resumed state)
-            _free_checkpoint(state)
-        got = obs.get
-        if targets is not None:
-            for h in got["hits"]:
-                q, d = h["qid"], h["dist"]
-                if q not in tbest or d < tbest[q]:
-                    tbest[q] = d
-        return out_state, {"cnt": got["cnt"], "_checkpointed": True, "_durable": durable}
+            metrics["hits"] = _hits_metric
+        return new_state, metrics
 
     result = runner.run(
         name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
     )
-    out = result.state.select(*cols)
-    mat.release()
-    return out
+    return result.state.select(*cols)
 
 
 def backtrace(
@@ -280,20 +248,8 @@ def backtrace(
     (prev-order; callers reverse for forward paths). Iterative join — the
     loop count is the longest chain, bounded by the cutoff.
     """
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
-    def _pending_obs(df):
-        obs = Observation()
-        return obs, df.observe(
-            obs,
-            F.coalesce(F.sum((~F.col("done")).cast("long")), F.lit(0)).alias("pending"),
-        )
-
     pmap = state.select("qid", F.col("node").alias("_pn"), F.col("prev").alias("_pp"))
-    mat = Materializer()
-    obs, observed = _pending_obs(
+    init = (
         ends.join(F.broadcast(sources), "qid")
         .select(
             "qid",
@@ -304,13 +260,9 @@ def backtrace(
         )
         .withColumn("done", F.col("head") == F.col("start"))
     )
-    cur = mat.materialize(observed)
-    # one action per round: the pending count rides each checkpoint
-    for _ in range(max_iter):
-        if obs.get["pending"] == 0:
-            break
+
+    def step(cur: DataFrame, i: int, prev):
         todo = cur.filter(~F.col("done"))
-        done_rows = cur.filter(F.col("done"))
         stepped = (
             todo.join(
                 pmap,
@@ -336,11 +288,14 @@ def backtrace(
             )
             .drop("_miss")
         )
-        obs, observed = _pending_obs(done_rows.unionByName(stepped))
-        cur = mat.materialize(observed)
-    out = cur.select("qid", "node", "chain")
-    mat.release()
-    return out
+        return cur.filter(F.col("done")).unionByName(stepped), {
+            "pending": F.coalesce(F.sum((~F.col("done")).cast("long")), F.lit(0))
+        }
+
+    result = SuperstepRunner(state.sparkSession).run(
+        "backtrace", init, step, max_iter=max_iter, converged_key="pending"
+    )
+    return result.state.select("qid", "node", "chain")
 
 
 # --------------------------------------------------------------------------

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.supersteps import SuperstepRunner
+
 NEG_INF = float("-inf")
 
 
@@ -179,19 +181,14 @@ def zigzag_sssp_csr(
     fn = _zigzag_local_relax_factory(num_blocks, float(cutoff), block_width)
     schema = "node long, dist double, g int, prev long"
 
-    # one Spark job per superstep (``_new`` flag + Observation count on the
-    # checkpoint action — see bounded_sssp)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
+    # one Spark job per superstep (``_new`` flag + improved-row count
+    # observed on the runner's checkpoint action — see bounded_sssp)
     cols = ["node", "dist", "g", "prev"]
-    mat = Materializer()
-    state = mat.materialize(
-        spark.createDataFrame([(s, 0.0, 0, -1) for s in seed_states], schema)
-        .withColumn("_new", F.lit(True))
-    )
-    for _ in range(max_iter):
+    init = spark.createDataFrame(
+        [(s, 0.0, 0, -1) for s in seed_states], schema
+    ).withColumn("_new", F.lit(True))
+
+    def step(state: DataFrame, i: int, prev):
         frontier = state.filter(F.col("_new")).select(*cols)
         msgs = (
             frontier.withColumn("_blk", blk("node"))
@@ -210,22 +207,23 @@ def zigzag_sssp_csr(
             .filter(F.col("_old").isNull() | (F.struct("dist", "g", "prev") < F.col("_old")))
             .select(*cols)
         )
-        obs = Observation()
-        state = mat.materialize(
-            state.join(improved.select("node"), "node", "left_anti")
-            .select(*cols)
-            .withColumn("_new", F.lit(False))
-            .unionByName(improved.withColumn("_new", F.lit(True)))
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt"),
-            )
-        )
-        if obs.get["cnt"] == 0:
-            break
-    out = state.select(*cols)
-    mat.release()
-    return out
+        return _merge_improved(state, improved, cols, ["node"])
+
+    result = SuperstepRunner(spark).run(
+        "zigzag_csr", init, step, max_iter=max_iter, converged_key="cnt"
+    )
+    return result.state.select(*cols)
+
+
+def _merge_improved(state: DataFrame, improved: DataFrame, cols: list, key: list):
+    """Next state = old rows not improved (``_new`` false) + improved rows
+    (``_new`` true), with the improved-row count as the metric."""
+    return (
+        state.join(improved.select(*key), key, "left_anti")
+        .select(*cols)
+        .withColumn("_new", F.lit(False))
+        .unionByName(improved.withColumn("_new", F.lit(True)))
+    ), {"cnt": F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))}
 
 
 def bounded_sssp_csr(
@@ -259,18 +257,12 @@ def bounded_sssp_csr(
     schema = "qid long, node long, dist double, prev long, prev_dist double"
 
     # one Spark job per superstep: the state carries a ``_new`` frontier
-    # flag and the improved-row count rides the checkpoint action as an
-    # Observation metric (same pattern as bounded_sssp / PageRank / CC)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
+    # flag and the improved-row count rides the runner's checkpoint action
+    # as an Observation metric (same pattern as bounded_sssp / PageRank / CC)
     cols = ["qid", "node", "dist", "prev", "prev_dist"]
-    mat = Materializer()
-    state = mat.materialize(seeds.select(*cols).withColumn("_new", F.lit(True)))
-    converged = False
-    iters = 0
-    for iters in range(1, max_iter + 1):
+    init = seeds.select(*cols).withColumn("_new", F.lit(True))
+
+    def step(state: DataFrame, i: int, prev):
         frontier = state.filter(F.col("_new")).select(*cols)
         msgs = (
             frontier.withColumn("_blk", blk("node"))
@@ -294,22 +286,12 @@ def bounded_sssp_csr(
             )
             .select(*cols)
         )
-        obs = Observation()
-        state = mat.materialize(
-            state.join(improved.select("qid", "node"), ["qid", "node"], "left_anti")
-            .select(*cols)
-            .withColumn("_new", F.lit(False))
-            .unionByName(improved.withColumn("_new", F.lit(True)))
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt"),
-            )
-        )
-        if obs.get["cnt"] == 0:
-            converged = True
-            break
-    out = state.select(*cols)
-    mat.release()
+        return _merge_improved(state, improved, cols, ["qid", "node"])
+
+    result = SuperstepRunner(spark).run(
+        "sssp_csr", init, step, max_iter=max_iter, converged_key="cnt"
+    )
+    out = result.state.select(*cols)
     if return_info:
-        return out, converged, iters
+        return out, result.converged, result.iterations
     return out

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
+from ..plans.supersteps import SuperstepRunner
 from ..rounding import round_col
 from .sssp import NEG_INF, PathResult, bounded_sssp
 
@@ -161,21 +162,7 @@ class UbodtIndex:
             F.col("source_next").alias("_n"),
             F.col("cost").alias("_c"),
         )
-        from pyspark.sql import Observation
-
-        from ..plans.supersteps import Materializer
-
-        def _pending_obs(df):
-            obs = Observation()
-            return obs, df.observe(
-                obs,
-                F.coalesce(
-                    F.sum((~F.col("done")).cast("long")), F.lit(0)
-                ).alias("pending"),
-            )
-
-        mat = Materializer()
-        obs, observed = _pending_obs(
+        init = (
             pairs.join(
                 u, (pairs["source"] == u["_s"]) & (pairs["target"] == u["_t"])
             )
@@ -188,13 +175,10 @@ class UbodtIndex:
             )
             .withColumn("done", F.col("head") == F.col("target"))
         )
-        cur = mat.materialize(observed)
-        # one action per round: pending count rides each checkpoint
-        for _ in range(max_iter):
-            if obs.get["pending"] == 0:
-                break
+
+        # one action per round: the pending count rides each checkpoint
+        def step(cur: DataFrame, i: int, prev):
             todo = cur.filter(~F.col("done"))
-            done_rows = cur.filter(F.col("done"))
             stepped = (
                 todo.join(
                     u,
@@ -215,9 +199,14 @@ class UbodtIndex:
                 )
                 .withColumn("done", F.col("head").isNull() | (F.col("head") == F.col("target")))
             )
-            obs, observed = _pending_obs(done_rows.unionByName(stepped))
-            cur = mat.materialize(observed)
-        out = (
+            return cur.filter(F.col("done")).unionByName(stepped), {
+                "pending": F.coalesce(F.sum((~F.col("done")).cast("long")), F.lit(0))
+            }
+
+        cur = SuperstepRunner(self.graph.spark).run(
+            "ubodt_paths", init, step, max_iter=max_iter, converged_key="pending"
+        ).state
+        return (
             cur.filter(F.col("head").isNotNull())
             .select(
                 "qid",
@@ -225,8 +214,6 @@ class UbodtIndex:
                 F.concat("nodes", F.array("target")).alias("nodes"),
             )
         )
-        mat.release()
-        return out
 
     def by_source(
         self, source: str, cutoff: Optional[float] = None

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
+from ..plans.supersteps import SuperstepRunner
 from ..rounding import round_half_up
 
 
@@ -130,20 +131,13 @@ def zigzag_sssp(
         from .sssp_csr import zigzag_sssp_csr
 
         return zigzag_sssp_csr(spark, se, seed_states, cutoff, max_iter=max_iter)
-    # one Spark job per superstep: ``_new`` frontier flag + Observation
-    # count on the single checkpoint action (pattern of bounded_sssp)
-    from pyspark.sql import Observation
-
-    from ..plans.supersteps import Materializer
-
-    cols = ["node", "dist", "g", "prev"]
-    mat = Materializer()
-    state = mat.materialize(
-        spark.createDataFrame(
-            [(s, 0.0, 0, -1) for s in seed_states],
-            "node long, dist double, g int, prev long",
-        ).withColumn("_new", F.lit(True))
-    )
+    # one Spark job per superstep: ``_new`` frontier flag + improved-row
+    # count observed on the runner's checkpoint action (pattern of
+    # bounded_sssp)
+    init = spark.createDataFrame(
+        [(s, 0.0, 0, -1) for s in seed_states],
+        "node long, dist double, g int, prev long",
+    ).withColumn("_new", F.lit(True))
     # loop-invariant plan fragments (same driver-latency lever as
     # bounded_sssp/PageRank: Columns are immutable and resolve by name;
     # state columns node/dist/g and edge columns src/dst/weight/is_flip
@@ -164,8 +158,9 @@ def zigzag_sssp(
         F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
     )
     _merge = F.when(_better, F.col("_cand")).otherwise(F.col("_old"))
-    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0)).alias("cnt")
-    for _ in range(max_iter):
+    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))
+
+    def step(state: DataFrame, i: int, prev):
         # single full-outer merge of old state vs candidate minima (same
         # rewrite as bounded_sssp: the former left-join + anti-join +
         # union walked the state three times per superstep for the
@@ -178,20 +173,18 @@ def zigzag_sssp(
             .filter(_cut_filter)
         )
         best = msgs.groupBy("node").agg(_cand_agg)
-        obs = Observation()
-        state = mat.materialize(
+        return (
             state.select(*_old_proj)
             .join(best, "node", "full")
             .withColumn("_m", _merge)
             .withColumn("_new", _better)
             .select("node", "_m.dist", "_m.g", "_m.prev", "_new")
-            .observe(obs, _cnt_metric)
-        )
-        if obs.get["cnt"] == 0:
-            break
-    out = state.select(*cols)
-    mat.release()
-    return out
+        ), {"cnt": _cnt_metric}
+
+    result = SuperstepRunner(spark).run(
+        "zigzag", init, step, max_iter=max_iter, converged_key="cnt"
+    )
+    return result.state.select("node", "dist", "g", "prev")
 
 
 @dataclass

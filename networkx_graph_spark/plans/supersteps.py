@@ -1,31 +1,54 @@
-"""Generic superstep runtime: iteration + lineage control + checkpoint/resume.
+"""The superstep engine: the one driver loop behind every iterative kernel.
 
-Every iterative kernel (PageRank, CC, LPA, SSSP at scale) is a driver-side
-loop over DataFrame jobs. Two things make that safe at 100 TB:
+Every iterative operator (PageRank, CC, LPA, SSSP, zigzag, path
+enumeration, backtraces) is a driver-side loop of DataFrame supersteps —
+one dataflow plan per superstep under one generic driver, as in Pregelix.
+A kernel supplies only
 
-1. **Lineage truncation** — without it the logical plan doubles per
-   iteration and the driver dies on plan analysis long before executors
-   struggle. Default is ``localCheckpoint(eager=True)`` (cluster-reliable
-   alternative: parquet checkpoints, below).
-2. **Durable checkpoint/resume** (north rule, BASELINE.json:14): with a
-   ``checkpoint_dir``, every k-th superstep writes the state DataFrame to
-   ``{dir}/{name}/iter=NNNNN`` (parquet, partitioned the same way it will
-   be re-read) and appends a metrics line to ``{dir}/{name}/metrics.jsonl``
-   (iteration, wall-clock, convergence metric, row count, lineage of which
-   checkpoint it resumed from). ``resume()`` finds the newest complete
-   checkpoint (``_SUCCESS`` marker) and restarts the loop mid-iteration.
+    step_fn(state, i, prev) -> (next_plan, {name: metric})
+
+``state`` is the materialized state of the previous superstep, ``i`` the
+absolute superstep index, ``prev`` the previous superstep's record (None
+on a fresh start; reloaded from ``metrics.jsonl`` on resume). A metric is
+an aggregate ``Column`` over ``next_plan`` — observed on the superstep's
+single action, never a separate job — or a callable
+``(new_state, observed)`` evaluated after that action while the previous
+state is still alive (two-phase CC's exact edge-set comparison). ``SuperstepRunner.run`` owns
+everything else:
+
+1. **One action per superstep.** The metrics ride the materialization of
+   ``next_plan`` projected back to the init schema: a bucketed
+   ``persist_state`` write, a durable parquet write on cadence steps, or
+   ``localCheckpoint(eager=True)`` otherwise. Lineage stays O(1) per
+   superstep — without truncation the logical plan doubles per iteration
+   and the driver dies on plan analysis long before executors struggle.
+2. **Bounded memory.** The previous state's checkpoint blocks are freed
+   explicitly once the convergence test has run (``Dataset.unpersist``
+   does not touch checkpoint RDDs; waiting for driver GC leaks one state
+   copy per superstep).
+3. **Durable checkpoint/resume** (north rule, BASELINE.json:14): with a
+   ``checkpoint_dir``, durable steps write ``{dir}/{name}/iter=NNNNN``
+   and every superstep appends its record to ``{dir}/{name}/metrics.jsonl``.
+   ``resume()`` finds the newest complete checkpoint (``_SUCCESS``
+   marker) and restarts the loop mid-iteration.
+4. **Cadence.** ``run(cadence=k)`` tests convergence and writes durable
+   checkpoints only every k-th superstep and on the last one (PageRank's
+   ``fuse``); every superstep is still materialized and recorded.
 """
 
 from __future__ import annotations
 
+import decimal
 import hashlib
 import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Any, Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 
 
 @dataclass
@@ -36,54 +59,30 @@ class SuperstepResult:
     metrics: list[dict]
 
 
-class Materializer:
-    """Iteration-state materialization with bounded memory.
-
-    Every call ``localCheckpoint(eager)``s the state (lineage stays O(1)
-    per superstep) and then explicitly frees the PREVIOUS checkpoint's
-    blocks through the JVM handle
-    (``df._jdf.queryExecution().analyzed().rdd().unpersist``) —
-    ``Dataset.unpersist`` does not touch checkpoint RDDs, and waiting for
-    driver GC + ContextCleaner leaks one vertex-state copy per superstep
-    (measured as progressive slowdown on long convergence runs). Freeing
-    is safe because the next state was just materialized from it: the new
-    blocks are self-contained.
-    """
-
-    def __init__(self):
-        self._prev: Optional[DataFrame] = None
-        self._deferred: list[DataFrame] = []
-
-    def materialize(self, df: DataFrame, free_prev: bool = True) -> DataFrame:
-        """free_prev=False defers freeing the previous state one round —
-        for steps that still read it AFTER materializing the new one
-        (e.g. convergence checks that join old vs new)."""
-        out = df.localCheckpoint(eager=True)
-        for d in self._deferred:
-            _free_checkpoint(d)
-        self._deferred = []
-        if self._prev is not None:
-            if free_prev:
-                _free_checkpoint(self._prev)
-            else:
-                self._deferred.append(self._prev)
-        self._prev = out
-        return out
-
-    def release(self):
-        """Stop tracking WITHOUT freeing (the caller owns the last state)."""
-        self._prev = None
-
-
 def _free_checkpoint(df: DataFrame) -> None:
-    """Best-effort explicit release of a localCheckpointed DataFrame's
-    cached blocks (no-op on anything that isn't a plain LogicalRDD)."""
+    """Explicit release of a localCheckpointed DataFrame's cached blocks
+    (no-op on anything that isn't a plain LogicalRDD)."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:
+    except Py4JError:
         pass
+
+
+def _jsonable(v: Any) -> Any:
+    """Observed metric values as JSON types, so a record reads the same in
+    memory and after a ``metrics.jsonl`` round trip (a decimal sum comes
+    back as an exact int, a struct as a dict)."""
+    if isinstance(v, Row):
+        return {k: _jsonable(x) for k, x in v.asDict().items()}
+    if isinstance(v, dict):
+        return {k: _jsonable(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_jsonable(x) for x in v]
+    if isinstance(v, decimal.Decimal):
+        return int(v) if v == v.to_integral_value() else float(v)
+    return v
 
 
 class SuperstepRunner:
@@ -133,6 +132,8 @@ class SuperstepRunner:
             if checkpoint_dir is not None
             else ""
         )
+        # per job name: the iterations whose bucketed catalog entry is live
+        self._tables: dict[str, list[int]] = {}
 
     # ------------------------------------------------------------ plumbing
     def _job_dir(self, name: str) -> str:
@@ -173,21 +174,29 @@ class SuperstepRunner:
         plain parquet read: correct, but one extra exchange AND an
         ulp-level float-summation-order divergence at the resume seam —
         measured max rel diff ~5e-16 at 2M edges.)"""
+        got = self._resume(name)
+        return None if got is None else got[:2]
+
+    def _resume(self, name: str) -> Optional[tuple[DataFrame, int, Optional[str]]]:
+        """``resume`` plus the reason a bucketed resume fell back to the
+        plain parquet read (None when it did not)."""
         i = self.latest_checkpoint(name)
         if i is None:
             return None
+        fallback = None
         if self.bucket_cols is not None:
             tbl = self._table_name(name, i)
             try:
                 if self.spark.catalog.tableExists(tbl):
-                    return self.spark.table(tbl), i + 1
-            except Exception:
-                pass
+                    return self.spark.table(tbl), i + 1, None
+            except (Py4JError, AnalysisException):
+                pass  # re-register below
             try:
-                return self._register_bucketed(name, i), i + 1
-            except Exception:
-                pass  # fall through to the plain (re-exchanged) read
-        return self.spark.read.parquet(self._iter_dir(name, i)), i + 1
+                return self._register_bucketed(name, i), i + 1, None
+            except (OSError, ValueError, AnalysisException, Py4JError) as e:
+                # the plain read is re-exchanged but always correct
+                fallback = f"{type(e).__name__}: {e}"
+        return self.spark.read.parquet(self._iter_dir(name, i)), i + 1, fallback
 
     def _register_bucketed(self, name: str, i: int) -> DataFrame:
         """Re-create the external bucketed table definition over the
@@ -228,11 +237,11 @@ class SuperstepRunner:
 
     def metrics_for(self, name: str, iteration: int) -> Optional[dict]:
         """The recorded metrics line for ``iteration`` (newest wins), or
-        None. Lets kernels resume driver-side scalars (e.g. PageRank's
-        dangling mass) from the exact recorded value instead of
-        re-aggregating the loaded state — JSON roundtrips doubles exactly,
-        so the resumed plan's literals are bitwise those of an
-        uninterrupted run."""
+        None. ``run`` resumes ``prev`` from it, so driver-side scalars
+        (e.g. PageRank's dangling mass) continue from the exact recorded
+        value instead of re-aggregating the loaded state — JSON roundtrips
+        doubles exactly, so the resumed plan's literals are bitwise those
+        of an uninterrupted run."""
         if self.checkpoint_dir is None:
             return None
         p = os.path.join(self._job_dir(name), "metrics.jsonl")
@@ -252,31 +261,24 @@ class SuperstepRunner:
                     rec = m
         return rec
 
-    def wants_step_persist(self) -> bool:
-        """True when the kernel should route its per-superstep
-        materialization through ``persist_state`` so the durable bucketed
-        write IS the superstep action (Observation metrics ride it) — no
-        extra localCheckpoint copy of the state."""
-        return self.bucket_cols is not None
-
     def _table_name(self, name: str, i: int) -> str:
         safe = "".join(c if c.isalnum() else "_" for c in name)
         return f"ckpt_{self._ns}_{safe}_{i:05d}"
 
     def persist_state(self, state: DataFrame, name: str, i: int) -> DataFrame:
         """Write ``state`` as a bucketed external table under the iteration
-        dir and return the bucketed scan. The caller must pre-cluster the
-        plan on ``bucket_cols`` (e.g. ``repartition(bucket_count, *cols)``)
-        so each task writes exactly one bucket file. Drops the i-2 catalog
-        entry (files stay on disk for resume)."""
-        if not self.wants_step_persist():
-            raise RuntimeError("persist_state requires bucketed checkpoints")
+        dir and return the bucketed scan. The plan is clustered on
+        ``bucket_cols`` first so each task writes exactly one bucket file
+        (the repartition is elided when the plan is already partitioned
+        that way). Keeps the catalog entries of the last two writes of
+        ``name`` (files stay on disk for resume)."""
         path = self._iter_dir(name, i)
         os.makedirs(self._job_dir(name), exist_ok=True)
         tbl = self._table_name(name, i)
         self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         (
-            state.write.mode("overwrite")
+            state.repartition(self.bucket_count, *self.bucket_cols)
+            .write.mode("overwrite")
             .format("parquet")
             .option("path", path)
             .bucketBy(self.bucket_count, *self.bucket_cols)
@@ -289,84 +291,121 @@ class SuperstepRunner:
         # _register_bucketed, which refuses to register without it)
         with open(os.path.join(path, "_bucket_spec.json"), "w") as f:
             json.dump({"cols": self.bucket_cols, "count": self.bucket_count}, f)
-        if i >= 2:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._table_name(name, i - 2)}")
+        live = self._tables.setdefault(name, [])
+        live.append(i)
+        while len(live) > 2:
+            self.spark.sql(f"DROP TABLE IF EXISTS {self._table_name(name, live.pop(0))}")
         return self.spark.table(tbl)
 
-    def _persist(
-        self,
-        state: DataFrame,
-        name: str,
-        i: int,
-        pre_checkpointed: bool = False,
-        durable: bool = False,
-    ) -> DataFrame:
+    def _check_buckets(self, columns: list[str]) -> None:
+        """Bucketed checkpoints pay only when the bucketed scan lines up
+        with every id-keyed exchange of the superstep: the bucket columns
+        must be the state's key (its leading columns) and the bucket count
+        the shuffle partition count the superstep plans with."""
+        if self.bucket_cols is None:
+            return
+        parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        if columns[: len(self.bucket_cols)] != self.bucket_cols or self.bucket_count != parts:
+            raise ValueError(
+                f"bucketed checkpoints of state {columns} need bucket_cols="
+                f"{columns[:len(self.bucket_cols)]} (its key) and bucket_count="
+                f"{parts} (shuffle partitions); got {self.bucket_cols}, "
+                f"{self.bucket_count}"
+            )
+
+    def _materialize(self, plan: DataFrame, name: str, i: int, durable: bool) -> DataFrame:
+        """The superstep's single action."""
+        if durable and self.bucket_cols is not None:
+            return self.persist_state(plan, name, i)
         if durable:
-            # step_fn already persisted via persist_state (bucketed write
-            # was the superstep action) — nothing left to do
-            return state
-        if self.checkpoint_dir is not None and i % self.checkpoint_every == 0:
             path = self._iter_dir(name, i)
-            state.write.mode("overwrite").parquet(path)
+            plan.write.mode("overwrite").parquet(path)
             return self.spark.read.parquet(path)
-        if pre_checkpointed:
-            # step_fn already localCheckpoint'ed (it needed an action, e.g.
-            # a convergence agg) — avoid a second copy of the state
-            return state
-        return state.localCheckpoint(eager=True)
+        return plan.localCheckpoint(eager=True)
 
     # ---------------------------------------------------------------- loop
     def run(
         self,
         name: str,
         state: DataFrame,
-        step_fn: Callable[[DataFrame, int], tuple[DataFrame, dict]],
+        step_fn: Callable[[DataFrame, int, Optional[dict]], tuple[DataFrame, dict]],
         max_iter: int = 100,
         converged_key: Optional[str] = None,
         tol: float = 0.0,
         resume: bool = False,
+        cadence: int = 1,
     ) -> SuperstepResult:
-        """Iterate ``step_fn(state, i) -> (new_state, metrics)`` until
-        ``metrics[converged_key] <= tol`` or ``max_iter``.
+        """Iterate ``step_fn(state, i, prev) -> (next_plan, metrics)`` from
+        ``state`` (the init) until ``rec[converged_key] <= tol`` or
+        ``max_iter`` supersteps.
 
-        ``step_fn`` must return fully-computed metrics (it may run
-        actions); the runtime handles checkpointing, metrics logging and
-        the resume protocol.
+        ``metrics`` maps a record field to an aggregate ``Column`` over
+        ``next_plan`` (observed on the superstep's action) or to a callable
+        ``(new_state, observed) -> value`` run right after that action
+        (``observed``: the Column metrics' values). The step runs no
+        action of its own; the runner materializes
+        ``next_plan`` projected to the init's columns (durable on cadence
+        steps when a ``checkpoint_dir`` is set), appends one record per
+        superstep (``name``, ``iteration``, ``wall_sec``, ``resumed_from``,
+        the metrics, and ``resume_fallback`` on the first record when a
+        bucketed resume fell back to the plain parquet read), tests
+        convergence, then frees the previous state.
+
+        ``cadence``: convergence is tested, and durable checkpoints are
+        written (every ``checkpoint_every``-th time), only on supersteps
+        ``i`` with ``(i + 1) % cadence == 0`` and on superstep
+        ``max_iter - 1``. ``resume=True`` restarts after the newest
+        durable checkpoint with ``prev`` reloaded from its record.
         """
-        start_iter = 0
+        columns = state.columns
+        self._check_buckets(columns)
+        start, prev, fallback = 0, None, None
         if resume:
-            got = self.resume(name)
+            got = self._resume(name)
             if got is not None:
-                state, start_iter = got
-        if start_iter == 0:
+                state, start, fallback = got
+                prev = self.metrics_for(name, start - 1)
+        if start == 0:
             state = state.localCheckpoint(eager=True)
-        all_metrics: list[dict] = []
+        records: list[dict] = []
         converged = False
-        i = start_iter
-        for i in range(start_iter, max_iter):
+        i = start
+        while i < max_iter and not converged:
             t0 = time.time()
-            new_state, metrics = step_fn(state, i)
-            pre_ck = bool(metrics.pop("_checkpointed", False))
-            durable = bool(metrics.pop("_durable", False))
-            new_state = self._persist(
-                new_state, name, i, pre_checkpointed=pre_ck, durable=durable
+            plan, metrics = step_fn(state, i, prev)
+            observed = {k: m for k, m in metrics.items() if isinstance(m, Column)}
+            obs = Observation()
+            plan = plan.observe(obs, *[m.alias(k) for k, m in observed.items()])
+            cadence_step = (i + 1) % cadence == 0 or i == max_iter - 1
+            durable = (
+                self.checkpoint_dir is not None
+                and cadence_step
+                and (i // cadence) % self.checkpoint_every == 0
             )
-            dt = time.time() - t0
+            new_state = self._materialize(plan.select(*columns), name, i, durable)
+            vals = _jsonable(obs.get)
+            for k, m in metrics.items():
+                if k not in observed:
+                    vals[k] = _jsonable(m(new_state, vals))
             rec = {
                 "name": name,
                 "iteration": i,
-                "wall_sec": round(dt, 4),
-                "resumed_from": start_iter - 1 if resume and start_iter else None,
-                **metrics,
+                "wall_sec": round(time.time() - t0, 4),
+                "resumed_from": start - 1 if start else None,
+                **vals,
             }
+            if fallback is not None and not records:
+                rec["resume_fallback"] = fallback
             self._append_metrics(name, rec)
-            all_metrics.append(rec)
-            state = new_state
-            if converged_key is not None and metrics.get(converged_key) is not None:
-                if metrics[converged_key] <= tol:
-                    converged = True
-                    i += 1
-                    break
-        else:
-            i = max_iter
-        return SuperstepResult(state, i, converged, all_metrics)
+            records.append(rec)
+            converged = (
+                cadence_step
+                and converged_key is not None
+                and rec.get(converged_key) is not None
+                and rec[converged_key] <= tol
+            )
+            # only now is nothing left that reads the previous state
+            _free_checkpoint(state)
+            state, prev = new_state, rec
+            i += 1
+        return SuperstepResult(state, i, converged, records)

@@ -89,6 +89,24 @@ def test_graph_auto_create_endpoint(spark):
     assert lm[g.node_id("a")] == 5.0
 
 
+def test_from_edge_df_null_extra_vertex_gets_defaults(spark):
+    """A listed vertex that touches no edge and carries a NULL node/length
+    gets the same defaults as an unlisted endpoint (it used to keep the
+    NULL, and vertex_length raised TypeError on it)."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.sssp import shortest_path
+
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
+    verts = spark.createDataFrame(
+        [(0, "a", 2.0), (9, None, None)], "id long, node string, length double"
+    )
+    g = SparkDiGraph.from_edge_df(spark, edges, vertices=verts, default_length=4.0)
+    assert g.vertex_length(9) == 4.0
+    assert g.node_id("9") == 9
+    assert shortest_path(g, "9", "a", 10.0) is None
+    assert g.lengths_map[9] == 4.0
+
+
 def test_edges_w(graph1):
     ew = {(r["src"], r["dst"]): r["weight"] for r in graph1.edges_w.collect()}
     assert ew[(1, 2)] == 10.0  # weight = length(src)

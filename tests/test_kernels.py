@@ -246,9 +246,10 @@ def test_pagerank_fused_resume_iteration_count(spark, edges_df, tmp_path):
     full = pagerank(edges_df, tol=-1.0, max_iter=7, fuse=2, runner=r1, name="prf")
     assert full.iterations == 7
     a = {r["id"]: r["rank"] for r in full.state.collect()}
-    # crash after outer iteration 1 (= 4 sub-iterations done at fuse=2);
-    # emulate a FRESH process: a new runner + a new pagerank() call whose
-    # internal state starts cold
+    # checkpoints are numbered by power iteration; at fuse=2 the durable
+    # ones are iterations 1, 3, 5 and 6. Crash after iteration 1 (= 2
+    # iterations done); emulate a FRESH process: a new runner + a new
+    # pagerank() call whose internal state starts cold
     for entry in os.listdir(os.path.join(d, "prf")):
         if entry.startswith("iter=") and int(entry.split("=")[1]) > 1:
             shutil.rmtree(os.path.join(d, "prf", entry))
@@ -256,7 +257,7 @@ def test_pagerank_fused_resume_iteration_count(spark, edges_df, tmp_path):
     resumed = pagerank(
         edges_df, tol=-1.0, max_iter=7, fuse=2, runner=r2, name="prf", resume=True
     )
-    assert resumed.iterations == 7  # not 8: last outer step runs k=1
+    assert resumed.iterations == 7  # not 8: counted from the runner's index
     b = {r["id"]: r["rank"] for r in resumed.state.collect()}
     assert set(a) == set(b)
     assert all(abs(a[k] - b[k]) < 1e-12 for k in a)
@@ -801,3 +802,9 @@ def test_bucketed_resume_rejects_mixed_spec_dir(spark, edges_df, tmp_path):
         # same iteration count resumed under a different partitioning:
         # identical math up to FP summation order
         assert abs({r["id"]: r["rank"] for r in resumed.state.collect()}[k] - v) < 1e-12
+    # the fallback is recorded on the first record of a resumed run that
+    # has supersteps left (the run above had none)
+    more = pagerank(edges_df, tol=-1.0, max_iter=5, runner=r4,
+                    name="prm", resume=True, num_partitions=4)
+    assert more.metrics[0]["iteration"] == 4
+    assert "bucket spec" in more.metrics[0]["resume_fallback"]

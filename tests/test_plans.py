@@ -187,3 +187,70 @@ def test_cosine_topk_two_stage_plan(spark):
         "(otherwise the full scored corpus shuffles into one task per "
         "query)\n" + plan
     )
+
+
+def test_runner_contract_countdown(spark):
+    """The superstep engine's contract on a toy countdown loop of 10
+    supersteps: (a) one Spark job per superstep plus one for the init
+    checkpoint; (b) the cached-RDD count stays flat across supersteps
+    (each superstep frees the previous state's checkpoint blocks);
+    (c) one JSON-serializable record per superstep carrying iteration,
+    wall_sec and the step's metrics, handed back to the next step as
+    ``prev`` — a decimal(38,0) sum included."""
+    import json
+
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    sc = spark.sparkContext
+    first_rdd = sc.emptyRDD().id()
+    cached: list[int] = []
+    prevs: list = []
+
+    def step(state, i, prev):
+        infos = sc._jsc.sc().getRDDStorageInfo()
+        cached.append(sum(1 for r in infos if r.id() > first_rdd))
+        prevs.append(prev)
+        return state.select("id", (F.col("left") - 1).alias("left")), {
+            "left": F.max("left"),
+            "sig": F.sum(F.xxhash64("id", "left").cast("decimal(38,0)")),
+        }
+
+    init = spark.range(8).select("id", F.lit(10).alias("left"))
+    res = []
+    jobs = _count_jobs(
+        spark,
+        lambda: res.append(
+            SuperstepRunner(spark).run("countdown", init, step, max_iter=50,
+                                       converged_key="left")
+        ),
+    )
+    out = res[0]
+    assert out.converged and out.iterations == 10
+    assert jobs == 11, f"expected 1 init + 10 superstep jobs, got {jobs}"
+    assert max(cached) - min(cached) <= 1, cached  # async unpersist may lag one
+    assert len(out.metrics) == 10
+    for i, rec in enumerate(out.metrics):
+        assert rec["iteration"] == i and rec["left"] == 9 - i
+        assert isinstance(rec["wall_sec"], float)
+        assert isinstance(rec["sig"], int)
+        assert json.loads(json.dumps(rec)) == rec
+    assert prevs[0] is None and prevs[1:] == out.metrics[:-1]
+    assert out.state.columns == ["id", "left"]
+
+
+def test_supersteps_only_in_the_runner():
+    """Operators and kernels hand their loops to SuperstepRunner: neither
+    an Observation nor a localCheckpoint is built outside plans/. The
+    triangle counter's one-off localCheckpoint is not a loop."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "networkx_graph_spark"
+    allowed = {("kernels/triangles.py", "localCheckpoint(")}
+    found = set()
+    for sub in ("operators", "kernels"):
+        for path in sorted((pkg / sub).glob("*.py")):
+            rel = f"{sub}/{path.name}"
+            for token in re.findall(r"\b(?:Observation|localCheckpoint)\(", path.read_text()):
+                found.add((rel, token))
+    assert found - allowed == set(), sorted(found - allowed)

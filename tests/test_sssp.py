@@ -4,6 +4,8 @@ The distance invariant: path cost = sum of *interior* node lengths
 (source/target excluded); golden w1->w7 dist 30 = len(w2)+len(w5).
 """
 
+import pytest
+
 from networkx_graph_spark.operators.sssp import shortest_path, shortest_paths
 
 
@@ -204,6 +206,21 @@ def test_p2p_early_termination_chain(spark):
     assert got[1].dist == 6.0 and len(got[1].nodes) == 8
     assert got[2] is None  # cutoff-bounded miss
     g.unpersist()
+
+
+@pytest.mark.parametrize("payload", ["weight", "prev_dist"])
+def test_bounded_sssp_rejects_reserved_payload_names(spark, payload):
+    """Payload columns may collide neither with the edge columns nor with
+    the kernel's state columns."""
+    from networkx_graph_spark.operators.sssp import NEG_INF, bounded_sssp
+
+    edges = spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, weight double")
+    seeds = spark.createDataFrame(
+        [(0, 0, 0.0, -1, NEG_INF)],
+        "qid long, node long, dist double, prev long, prev_dist double",
+    )
+    with pytest.raises(ValueError, match="reserved"):
+        bounded_sssp(spark, edges, seeds, cutoffs=10.0, payload_cols=[payload])
 
 
 def test_bounded_sssp_durable_resume(spark, tmp_path):

@@ -121,6 +121,9 @@ def main(argv=None) -> int:
     nparts = args.num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+    # every aggregation of a superstep then plans with the kernel's
+    # partition count (bucketed checkpoints require bucket_count to match)
+    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
     runner_kw = {}
     if args.checkpoint_dir:
         runner_kw = dict(
