@@ -343,15 +343,29 @@ class SparkDiGraph:
             self._v_persisted = False
 
     # -------------------------------------------------- name/id translation
+    @cached_property
+    def _ids_by_name(self) -> dict[str, int]:
+        """``names_map`` inverted (first id per name). Built only from an
+        existing ``names_map``: a name lookup never pays for the |V|-row
+        maps by itself."""
+        out: dict[str, int] = {}
+        for i, n in self.__dict__["names_map"].items():
+            out.setdefault(n, i)
+        return out
+
     def node_id(self, name: str) -> Optional[int]:
         if self.indexer is not None:
             return self.indexer.get_id(name)
+        if "names_map" in self.__dict__:
+            return self._ids_by_name.get(name)
         row = self.ids.filter(F.col("node") == name).head(1)
         return row[0]["id"] if row else None
 
     def node_ids(self, names: Iterable[str]) -> dict[str, Optional[int]]:
         if self.indexer is not None:
             return {n: self.indexer.get_id(n) for n in names}
+        if "names_map" in self.__dict__:
+            return {n: self._ids_by_name.get(n) for n in names}
         names = list(names)
         rows = self.ids.filter(F.col("node").isin(names)).collect()
         got = {r["node"]: r["id"] for r in rows}

@@ -34,6 +34,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import local_df
+
 _STOLL = re.compile(r"^\s*([+-]?[0-9]+)")
 _CURSOR0 = 1_000_000
 
@@ -183,8 +185,8 @@ def build_ids(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)], "_pid int, _off long"
+    off_df = local_df(
+        spark, [(p, o) for p, o in offsets.items()] or [(0, 0)], "_pid int, _off long"
     )
     wl = Window.partitionBy("_pid").orderBy(*sort_cols)
     ranked = (

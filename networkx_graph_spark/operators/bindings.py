@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepRunner
 from ..rounding import clip
+from ..session import local_df
 from .paths import all_paths_from, all_paths_to
 from .sssp import NEG_INF, PathResult, bounded_sssp
 
@@ -140,7 +141,7 @@ def _shortest_many(
         return out
     spark = graph.spark
     edges_w = graph.edges_w_rev if reverse else graph.edges_w
-    src_df = spark.createDataFrame(pend, "qid long, sid long, ioff double")
+    src_df = local_df(spark, pend, "qid long, sid long, ioff double")
     # distributed seeding: successors of every source in one broadcast
     # join (no per-query driver collect)
     seeds = F.broadcast(src_df).join(
@@ -156,7 +157,7 @@ def _shortest_many(
     barrier = sink_ids | binding_nodes
     sinks_df = None
     if barrier:
-        bar_df = spark.createDataFrame([(x,) for x in barrier], "node long")
+        bar_df = local_df(spark, [(x,) for x in barrier], "node long")
         # per-qid barrier: every sink/binding node EXCEPT the query's own
         # source (a binding source never barriers its own walk,
         # /root/reference/src/main.cpp:1540-1545)
@@ -175,7 +176,7 @@ def _shortest_many(
     # query reaches the driver — the converged state is never collected.
     nm = graph.names_map
     lm = graph.lengths_map
-    bn_df = spark.createDataFrame([(x,) for x in binding_nodes], "node long")
+    bn_df = local_df(spark, [(x,) for x in binding_nodes], "node long")
     winners = {
         r["qid"]: (r["m"]["dist"], r["m"]["node"])
         for r in (
@@ -203,9 +204,9 @@ def _shortest_many(
     if ends:
         from .sssp import backtrace
 
-        ends_df = spark.createDataFrame(ends, "qid long, node long")
-        sources_df = spark.createDataFrame(
-            [(q, s) for q, s, _ in pend], "qid long, start long"
+        ends_df = local_df(spark, ends, "qid long, node long")
+        sources_df = local_df(
+            spark, [(q, s) for q, s, _ in pend], "qid long, start long"
         )
         chains = {
             r["qid"]: list(r["chain"])
@@ -326,7 +327,8 @@ def _enumerate_to_bindings(
     # rows accumulate with _hit=true, live frontier rows carry _hit=false;
     # the live count rides the round's checkpoint action as an
     # Observation metric — no isEmpty / per-round hit collect jobs
-    seed = spark.createDataFrame(
+    seed = local_df(
+        spark,
         [([sid], float(init_offset), False)],
         "nodes array<bigint>, length double, _hit boolean",
     )

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepRunner
 from ..rounding import clip
+from ..session import local_df
 from .sssp import PathResult
 
 _DONE_SCHEMA = "nodes array<bigint>, dist double, end_offset double"
@@ -59,7 +60,7 @@ def _enumerate_paths(
     target_mode = target_id is not None
     if cutoff < 0:
         # root entry guard `length > cutoff` (/root/reference/src/main.cpp:1715)
-        return spark.createDataFrame([], _DONE_SCHEMA)
+        return local_df(spark, [], _DONE_SCHEMA)
 
     # single flagged state (one Spark job per round — the active-row count
     # rides the runner's checkpoint as an Observation metric): active rows
@@ -78,8 +79,8 @@ def _enumerate_paths(
         return a.unionByName(d)
 
     init = _as_state(
-        spark.createDataFrame([([source_id], 0.0)], "nodes array<bigint>, length double"),
-        spark.createDataFrame([], _DONE_SCHEMA),
+        local_df(spark, [([source_id], 0.0)], "nodes array<bigint>, length double"),
+        local_df(spark, [], _DONE_SCHEMA),
     )
     lengths = graph.vertices.select(
         F.col("id").alias("tail"), F.col("length").alias("tail_len")

@@ -35,15 +35,16 @@ Exact-match semantics replicated:
 Scale notes: state and frontier are hash-partitioned on the join key;
 ``edges_w`` is pre-partitioned by ``src`` (graph build) so the per-superstep
 join reuses its exchange; every superstep ``localCheckpoint``s to truncate
-lineage; queries/sinks are broadcast (they are small per-batch dimension
-tables). Skewed hub vertices are handled by AQE skew-join splitting
-(enabled in session.py) — the min-merge aggregation is already map-side
-partial.
+lineage; queries/sinks/targets are small per-batch dimension tables built
+on the driver as Arrow ``LocalRelation``s (``session.local_df``) and
+broadcast, so no superstep starts a Python worker. Skewed hub vertices
+are handled by AQE skew-join splitting (enabled in session.py) — the
+min-merge aggregation is already map-side partial.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,8 +52,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..graph import SparkDiGraph
-from ..plans.supersteps import SuperstepRunner
+from ..plans.supersteps import SuperstepResult, SuperstepRunner
 from ..rounding import clip, round_half_up
+from ..session import local_df
 
 NEG_INF = float("-inf")
 
@@ -104,19 +106,45 @@ def bounded_sssp(
 
     Job budget: exactly ONE Spark job per superstep. The state carries a
     ``_new`` frontier flag; the improved-row count (emptiness/convergence)
-    and the per-query target hits (p2p early termination) are
-    ``Observation`` metrics collected as side effects of the single state
-    checkpoint action — no separate ``isEmpty``/frontier checkpoint/target
+    and the target hits (p2p early termination) are ``Observation``
+    metrics collected as side effects of the single state checkpoint
+    action — no separate ``isEmpty``/frontier checkpoint/target
     ``collect`` jobs (the same 1-job/superstep pattern as the PageRank and
-    CC kernels).
+    CC kernels). ``hits`` lists every target row of the new state (not
+    only improved ones), so the previous record alone gives each query's
+    best target distance ``tbest`` (the min over its rows). The pruning
+    table built from it is a ``LocalRelation``, like every driver-built
+    dimension table here: no superstep starts a Python worker.
 
     Durability (north rule): pass a ``SuperstepRunner`` with a
     ``checkpoint_dir`` (optionally ``bucket_cols=["qid", "node"]`` for
     co-partitioned bucketed checkpoints) plus ``name``/``resume`` to make
     long fixpoints — the UBODT build seeds EVERY vertex — resumable
-    mid-iteration with per-superstep metrics/lineage; ``tbest`` for p2p
-    early termination is recomputed from the loaded state on resume.
+    mid-iteration with per-superstep metrics/lineage; on resume ``tbest``
+    comes from the reloaded record of the checkpointed superstep.
     """
+    return _run_sssp(
+        spark, edges_w, seeds, cutoffs, sinks, max_iter, payload_cols, targets,
+        runner, name, resume,
+    ).state
+
+
+def _run_sssp(
+    spark: SparkSession,
+    edges_w: DataFrame,
+    seeds: DataFrame,
+    cutoffs: DataFrame,
+    sinks: Optional[DataFrame] = None,
+    max_iter: int = 10_000,
+    payload_cols: Sequence[str] = (),
+    targets: Optional[DataFrame] = None,
+    runner=None,
+    name: str = "sssp",
+    resume: bool = False,
+) -> SuperstepResult:
+    """``bounded_sssp`` returning the runner's result: the converged state
+    (projected to the state columns) plus the per-superstep records, whose
+    last ``hits`` are the final target rows."""
     pl = list(payload_cols)
     # payload names must be disjoint from the edge columns (the hoisted
     # name-resolved message projection below) and from the state columns
@@ -127,8 +155,6 @@ def bounded_sssp(
     key = ["dist", "prev_dist", "prev", *pl]
     cols = ["qid", "node", "dist", "prev", "prev_dist", *pl]
     runner = runner or SuperstepRunner(spark)
-    tbest: dict[int, float] = {}
-    tb_seeded = {"done": False}
     tmark = None
     if targets is not None:
         tmark = F.broadcast(
@@ -170,29 +196,22 @@ def bounded_sssp(
         "_new",
     )
     _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))
-    _hits_metric = F.collect_list(
-        F.when(F.col("_is_tgt") & F.col("_new"), F.struct("qid", "dist"))
-    )
+    _hits_metric = F.collect_list(F.when(F.col("_is_tgt"), F.struct("qid", "dist")))
 
     def step(state: DataFrame, i: int, prev):
-        if targets is not None and not tb_seeded["done"]:
-            # first step (fresh or resumed): seed tbest from current state
-            for r in state.join(F.broadcast(targets), ["qid", "node"]).groupBy(
-                "qid"
-            ).agg(F.min("dist").alias("d")).collect():
-                tbest[r["qid"]] = r["d"]
-            tb_seeded["done"] = True
+        # the previous record's hits are every target row of ``state``;
+        # the seed frontier (i == 0) has no record, so it is never pruned
+        # (parity with pre-loop insertion)
+        tbest: dict[int, float] = {}
         for h in (prev or {}).get("hits", ()):
             q, d = h["qid"], h["dist"]
             if q not in tbest or d < tbest[q]:
                 tbest[q] = d
         frontier = state.filter(F.col("_new")).select(*cols)
-        if targets is not None and tbest and i > 0:
+        if tbest:
             # prune frontier rows strictly above their query's best target
-            # distance (reference first-pop semantics, see docstring); the
-            # seed frontier (i == 0) is never pruned (parity with pre-loop
-            # insertion)
-            tb = spark.createDataFrame(list(tbest.items()), "qid long, _tbest double")
+            # distance (reference first-pop semantics, see docstring)
+            tb = local_df(spark, list(tbest.items()), "qid long, _tbest double")
             frontier = frontier.join(F.broadcast(tb), "qid", "left").filter(
                 F.col("_tbest").isNull() | (F.col("dist") <= F.col("_tbest"))
             ).drop("_tbest")
@@ -229,7 +248,7 @@ def bounded_sssp(
     result = runner.run(
         name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
     )
-    return result.state.select(*cols)
+    return replace(result, state=result.state.select(*cols))
 
 
 def backtrace(
@@ -433,14 +452,12 @@ class ShortestPathGen:
         """(node BIGINT, dist DOUBLE) excluding the start (the reference
         erases it, /root/reference/src/main.cpp:1164)."""
         if self.state is None:
-            return self.graph.spark.createDataFrame(
-                [], "node long, dist double"
-            )
+            return local_df(self.graph.spark, [], "node long, dist double")
         return self.state.filter(F.col("node") != self.start_id).select("node", "dist")
 
     def prevs_df(self) -> DataFrame:
         if self.state is None:
-            return self.graph.spark.createDataFrame([], "node long, prev long")
+            return local_df(self.graph.spark, [], "node long, prev long")
         return self.state.select("node", "prev")
 
     def dists(self) -> dict[str, float]:
@@ -553,16 +570,6 @@ class ShortestPathGen:
         return self._decorate(nid, chain)
 
 
-def _encode_sinks_df(
-    graph: SparkDiGraph, sinks: Optional[Sequence[str]], qid: int = 0
-) -> Optional[DataFrame]:
-    if not sinks:
-        return None
-    ids = [graph.node_id(s) for s in sinks]
-    rows = [(qid, i) for i in ids if i is not None]
-    return graph.spark.createDataFrame(rows or [], "qid long, node long")
-
-
 def shortest_paths(
     graph: SparkDiGraph,
     start: str,
@@ -597,7 +604,7 @@ def shortest_paths(
     if cutoff < init_offset:
         return gen  # kernel skipped (/root/reference/src/main.cpp:1111-1113)
     edges_w = graph.edges_w_rev if reverse else graph.edges_w
-    sink_ids = {graph.node_id(s) for s in sinks} if sinks else set()
+    sink_ids = {graph.node_id(s) for s in sinks or ()} - {None}
     if sid in sink_ids:
         return gen  # start is a sink: no seeds (/root/reference/src/main.cpp:1120)
     spark = graph.spark
@@ -607,9 +614,7 @@ def shortest_paths(
     # with no successors (/root/reference/src/main.cpp:1114-1117) simply
     # yields an empty seed set, which the kernel converges on immediately
     # and every accessor reads as the same empty result.
-    src_df = spark.createDataFrame(
-        [(0, sid, float(init_offset))], "qid long, sid long, ioff double"
-    )
+    src_df = local_df(spark, [(0, sid, float(init_offset))], "qid long, sid long, ioff double")
     seeds = (
         F.broadcast(src_df)
         .join(edges_w, F.col("sid") == edges_w["src"])
@@ -621,8 +626,10 @@ def shortest_paths(
             F.lit(NEG_INF).alias("prev_dist"),
         )
     )
-    cutoffs = spark.createDataFrame([(0, float(cutoff))], "qid long, cutoff double")
-    sinks_df = _encode_sinks_df(graph, sinks)
+    cutoffs = local_df(spark, [(0, float(cutoff))], "qid long, cutoff double")
+    sinks_df = (
+        local_df(spark, [(0, s) for s in sink_ids], "qid long, node long") if sink_ids else None
+    )
     state = bounded_sssp(spark, edges_w, seeds, cutoffs, sinks_df)
     gen.state = state.drop("qid")
     return gen
@@ -722,9 +729,7 @@ def shortest_paths_pairs(
     if not live:
         return results
     spark = graph.spark
-    qdf = spark.createDataFrame(
-        live, "qid long, sid long, tid long, cutoff double, delta double"
-    )
+    qdf = local_df(spark, live, "qid long, sid long, tid long, cutoff double, delta double")
     # seeds: successors of each query's source (cutoff-exempt, dist 0)
     seeds = (
         qdf.join(graph.edges_w, qdf["sid"] == graph.edges_w["src"])
@@ -739,10 +744,10 @@ def shortest_paths_pairs(
     cutoffs = qdf.select("qid", "cutoff")
     sinks_df = None
     if sink_ids:
-        sinks_df = qdf.select("qid").crossJoin(
-            spark.createDataFrame([(s,) for s in sink_ids], "node long")
+        sinks_df = local_df(
+            spark, [(q[0], s) for q in live for s in sink_ids], "qid long, node long"
         )
-    state = bounded_sssp(
+    result = _run_sssp(
         spark,
         graph.edges_w,
         seeds,
@@ -750,14 +755,13 @@ def shortest_paths_pairs(
         sinks_df,
         targets=qdf.select("qid", F.col("tid").alias("node")),
     )
-    hits = state.join(
-        F.broadcast(qdf.select("qid", F.col("tid").alias("node"))), ["qid", "node"]
-    ).select("qid", "dist")
-    hit_rows = {r["qid"]: r["dist"] for r in hits.collect()}
+    state = result.state
+    # the last superstep's hits are the converged state's target rows
+    hit_rows = {h["qid"]: h["dist"] for h in result.metrics[-1]["hits"]}
     if not hit_rows:
         return results
-    ends = spark.createDataFrame(
-        [(q, t) for q, s, t, c, d in live if q in hit_rows], "qid long, node long"
+    ends = local_df(
+        spark, [(q, t) for q, s, t, c, d in live if q in hit_rows], "qid long, node long"
     )
     sources = qdf.select("qid", F.col("sid").alias("start"))
     chains = backtrace(state, ends, sources)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.supersteps import SuperstepRunner
+from ..session import local_df
 
 NEG_INF = float("-inf")
 
@@ -184,8 +185,8 @@ def zigzag_sssp_csr(
     # one Spark job per superstep (``_new`` flag + improved-row count
     # observed on the runner's checkpoint action — see bounded_sssp)
     cols = ["node", "dist", "g", "prev"]
-    init = spark.createDataFrame(
-        [(s, 0.0, 0, -1) for s in seed_states], schema
+    init = local_df(
+        spark, [(s, 0.0, 0, -1) for s in seed_states], schema
     ).withColumn("_new", F.lit(True))
 
     def step(state: DataFrame, i: int, prev):

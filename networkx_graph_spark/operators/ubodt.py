@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepRunner
 from ..rounding import round_col
+from ..session import local_df
 from .sssp import NEG_INF, PathResult, bounded_sssp
 
 
@@ -45,7 +46,8 @@ def build_ubodt(
     ``checkpoint_dir`` (+ ``resume=True`` after a crash) to make it
     restartable mid-iteration (north rule)."""
     if thresh < 0:
-        return graph.spark.createDataFrame(
+        return local_df(
+            graph.spark,
             [],
             "source long, target long, source_next long, target_prev long, cost double",
         )
@@ -292,7 +294,8 @@ def load_ubodt_binary(spark, path: str) -> DataFrame:
                 break
             s, t, sn, tp, c = struct.unpack("<qqqqd", chunk)
             rows.append((s, t, sn, tp, c))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows,
         "source long, target long, source_next long, target_prev long, cost double",
     )

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepRunner
 from ..rounding import round_half_up
+from ..session import local_df
 
 
 def state_id(node: int, direction: int) -> int:
@@ -134,7 +135,8 @@ def zigzag_sssp(
     # one Spark job per superstep: ``_new`` frontier flag + improved-row
     # count observed on the runner's checkpoint action (pattern of
     # bounded_sssp)
-    init = spark.createDataFrame(
+    init = local_df(
+        spark,
         [(s, 0.0, 0, -1) for s in seed_states],
         "node long, dist double, g int, prev long",
     ).withColumn("_new", F.lit(True))

@@ -7,13 +7,19 @@ driver contract all run with the same posture:
 - Arrow on (vectorized pandas-UDF transfer — the only sanctioned Python path);
 - UTC session timezone (DuckDB oracle comparisons are TZ-naive);
 - shuffle partitions sized to cores, not the 200 default.
+
+``local_df`` is the one way query code builds a small table on the driver.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -62,3 +68,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+    """A driver-built table (``rows`` of tuples, schema ``ddl``) as a
+    ``LocalRelation``: the rows travel to the JVM once as an Arrow table and
+    every scan or broadcast of the result stays in the JVM.
+    ``createDataFrame(<python list>)`` is a parallelized PythonRDD instead,
+    so each scan starts Python workers (an empty *pandas* frame falls back
+    to that path too, hence the explicit pyarrow Table). Doubles, ``-inf``
+    included, round-trip bit-exactly."""
+    schema = to_arrow_schema(DataType.fromDDL(ddl))
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    )

@@ -78,6 +78,64 @@ def test_graph_core(graph1):
     assert graph1.vertices.count() == 7
 
 
+def test_node_id_served_from_maps_without_jobs(spark, graph1):
+    """Once the driver maps exist, name lookups on an indexer-less graph
+    answer from them: the same ids as the Spark lookup, None for a missing
+    name, and no Spark job."""
+    from networkx_graph_spark.graph import SparkDiGraph
+
+    g = SparkDiGraph(spark, graph1.vertices, graph1.edges)
+    assert g.indexer is None
+    names = [r["node"] for r in graph1.vertices.select("node").collect()]
+    want = {n: g.node_id(n) for n in names}  # Spark lookups: maps not built
+    assert "names_map" not in g.__dict__
+    assert g.node_id("nope") is None
+    assert g.node_ids(names + ["nope"]) == {**want, "nope": None}
+
+    g.names_map
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setLocalProperty("spark.jobGroup.id", "node_id_maps")
+    try:
+        got = {n: g.node_id(n) for n in names}
+        missing = g.node_id("nope")
+        batch = g.node_ids(names + ["nope"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(tracker.getJobIdsForGroup("node_id_maps")) == []
+    assert got == want and missing is None
+    assert batch == {**want, "nope": None}
+
+
+def test_local_df_is_a_local_relation(spark):
+    """Driver-built tables are LocalRelations (no Python worker on any
+    scan), with doubles -- -inf included -- carried bit-exactly."""
+    import struct
+
+    from networkx_graph_spark.session import local_df
+
+    def relation(df):
+        return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+    empty = local_df(spark, [], "qid long, node long")
+    assert relation(empty) == "LocalRelation"
+    assert empty.schema.simpleString() == "struct<qid:bigint,node:bigint>"
+    assert empty.collect() == []
+
+    x = 0.1 + 0.2  # not a dyadic rational
+    one = local_df(spark, [(7, float("-inf"), x)], "qid long, a double, b double")
+    assert relation(one) == "LocalRelation"
+    (r,) = one.collect()
+    assert r["qid"] == 7
+    assert struct.pack("<d", r["a"]) == struct.pack("<d", float("-inf"))
+    assert struct.pack("<d", r["b"]) == struct.pack("<d", x)
+
+    arr = local_df(spark, [([3, 1, 2], 0.5)], "nodes array<bigint>, length double")
+    assert relation(arr) == "LocalRelation"
+    assert arr.schema.simpleString() == "struct<nodes:array<bigint>,length:double>"
+    assert [tuple(r) for r in arr.collect()] == [([3, 1, 2], 0.5)]
+
+
 def test_graph_auto_create_endpoint(spark):
     from networkx_graph_spark.graph import SparkDiGraph
 

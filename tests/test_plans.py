@@ -254,3 +254,20 @@ def test_supersteps_only_in_the_runner():
             for token in re.findall(r"\b(?:Observation|localCheckpoint)\(", path.read_text()):
                 found.add((rel, token))
     assert found - allowed == set(), sorted(found - allowed)
+
+
+def test_no_parallelized_tables_on_the_query_path():
+    """Operators, kernels and the id indexer build their driver-side
+    tables with ``session.local_df`` (a LocalRelation), never with
+    ``createDataFrame`` over a Python list, whose every scan starts Python
+    workers. Graph constructors and the contract's oracle tables are
+    one-time inputs, not query-path tables."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "networkx_graph_spark"
+    paths = [*sorted((pkg / "operators").glob("*.py")), *sorted((pkg / "kernels").glob("*.py"))]
+    paths.append(pkg / "indexer.py")
+    found = [
+        str(p.relative_to(pkg)) for p in paths if "createDataFrame(" in p.read_text()
+    ]
+    assert found == [], found

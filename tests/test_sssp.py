@@ -279,6 +279,61 @@ def test_bounded_sssp_durable_resume(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
+def test_p2p_bounded_sssp_resume_parity(spark, tmp_path):
+    """A p2p run resumed after superstep 1 takes each query's best target
+    distance from the reloaded record and prunes exactly as the
+    uninterrupted run: the final states are identical row for row,
+    pruned rows included."""
+    import os
+    import shutil
+
+    from networkx_graph_spark.operators.sssp import NEG_INF, bounded_sssp
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    # qid 0: 0->1->2->3->4 (weight 1) and 0->10->11 (weight 5), target 1;
+    # qid 1: 20->21->22->23->24 (weight 1), target 22
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in (0, 1, 2, 3, 20, 21, 22, 23)] + [(0, 10, 5.0), (10, 11, 5.0)],
+        "src long, dst long, weight double",
+    )
+    seeds = spark.createDataFrame(
+        [(0, 0, 0.0, -1, NEG_INF), (1, 20, 0.0, -1, NEG_INF)],
+        "qid long, node long, dist double, prev long, prev_dist double",
+    )
+    targets = spark.createDataFrame([(0, 1), (1, 22)], "qid long, node long")
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    d = str(tmp_path / "ckp")
+
+    def run(resume):
+        r = SuperstepRunner(
+            spark, checkpoint_dir=d, bucket_cols=["qid", "node"], bucket_count=nparts
+        )
+        out = bounded_sssp(
+            spark, edges, seeds, cutoffs=100.0, targets=targets, runner=r, name="p2p",
+            resume=resume,
+        )
+        return sorted(map(tuple, out.collect()))
+
+    want = run(False)
+    reached = {(q, n) for q, n, *_ in want}
+    unpruned = {
+        (r["qid"], r["node"])
+        for r in bounded_sssp(spark, edges, seeds, cutoffs=100.0).collect()
+    }
+    # pruning did cut the walk: past the target at dist 1 (qid 0), one
+    # step past the target at dist 2 (qid 1, ties keep expanding)
+    assert reached == {(0, 0), (0, 1), (0, 2), (0, 10), (1, 20), (1, 21), (1, 22), (1, 23)}
+    assert {(0, 3), (0, 11), (1, 24)} <= unpruned - reached
+
+    for entry in os.listdir(os.path.join(d, "p2p")):
+        if entry.startswith("iter=") and int(entry.split("=")[1]) > 1:
+            shutil.rmtree(os.path.join(d, "p2p", entry))
+    assert run(True) == want
+    for t in spark.catalog.listTables():
+        if t.name.startswith("ckpt_") and "_p2p_" in t.name:
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+
 def test_build_ubodt_durable_resume(graph1, tmp_path):
     """UBODT build through a durable runner resumes to identical records."""
     import os
