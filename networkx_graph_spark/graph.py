@@ -31,6 +31,8 @@ from __future__ import annotations
 from functools import cached_property
 from typing import Iterable, Optional, Sequence
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -341,6 +343,10 @@ class SparkDiGraph:
         if self.__dict__.get("_v_persisted"):
             self.vertices.unpersist()
             self._v_persisted = False
+        # the doubled-state edge table operators/zigzag.py caches per graph
+        se = self.__dict__.pop("_zigzag_state_edges", None)
+        if se is not None:
+            se.unpersist()
 
     # -------------------------------------------------- name/id translation
     @cached_property
@@ -538,7 +544,7 @@ class SparkDiGraph:
             try:
                 have = spark.catalog.tableExists(tv) and spark.catalog.tableExists(te)
                 have_rev = have and spark.catalog.tableExists(tr)
-            except Exception:
+            except (Py4JError, AnalysisException):
                 have = have_rev = False
             if (
                 have

@@ -89,19 +89,19 @@ def connected_components(
     raise ValueError(f"unknown algorithm: {algorithm}")
 
 
-def _cc_blocked(edges, max_iter, num_partitions, block_width: int = 1024):
+def _cc_blocked(edges, max_iter, num_partitions):
     """Block-centric CC through the CSR kernel (operators/sssp_csr.py).
 
     Hash-min label propagation IS a shortest-path relaxation: seed every
     vertex with ``dist = float(id)``, give every (symmetric) edge weight
     0, and the converged min-"dist" at each vertex is the minimum id
     reachable — its component. The CSR kernel's block-local fixpoint then
-    collapses arbitrarily long intra-block chains into one superstep, so
-    global rounds ≈ block-boundary crossings instead of graph diameter
-    (the high-diameter lever; twophase remains the O(log n) default).
-    Float labels are exact: ids are integers < 2^53.
+    collapses arbitrarily long intra-block chains (range blocks of 1024
+    ids) into one superstep, so global rounds ≈ block-boundary crossings
+    instead of graph diameter (the high-diameter lever; twophase remains
+    the O(log n) default). Float labels are exact: ids are integers < 2^53.
     """
-    from ..operators.sssp_csr import NEG_INF, bounded_sssp_csr
+    from ..operators.sssp_csr import NEG_INF, _run_sssp_csr
 
     spark = edges.sparkSession
     if num_partitions is None:
@@ -120,20 +120,18 @@ def _cc_blocked(edges, max_iter, num_partitions, block_width: int = 1024):
         F.lit(NEG_INF).alias("prev_dist"),
     )
     ew = sym.select("src", "dst", F.lit(0.0).alias("weight"))
-    state, converged, iters = bounded_sssp_csr(
-        spark, ew, seeds, cutoff=float("inf"),
-        num_blocks=num_partitions, block_width=block_width, max_iter=max_iter,
-        return_info=True,
+    result = _run_sssp_csr(
+        spark, ew, seeds, float("inf"), num_partitions, 1024, max_iter
     )
-    if not converged:
+    if not result.converged:
         raise RuntimeError(
             f"blocked CC did not reach the fixpoint in max_iter={max_iter} "
             "supersteps — components would be wrong; raise max_iter"
         )
-    out = state.select(
+    out = result.state.select(
         F.col("node").alias("id"), F.col("dist").cast("long").alias("component")
     )
-    return SuperstepResult(state=out, iterations=iters, converged=True, metrics=[])
+    return SuperstepResult(state=out, iterations=result.iterations, converged=True, metrics=[])
 
 
 def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):

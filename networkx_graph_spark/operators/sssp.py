@@ -55,6 +55,7 @@ from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepResult, SuperstepRunner
 from ..rounding import clip, round_half_up
 from ..session import local_df
+from .relax import min_label_merge
 
 NEG_INF = float("-inf")
 
@@ -183,19 +184,7 @@ def _run_sssp(
     else:
         _cut_filter = F.col("dist") <= F.col("cutoff")
         _cut_bcast = F.broadcast(cutoffs)
-    _cand_agg = F.min(F.struct(*key)).alias("_cand")
-    _old_proj = ("qid", "node", F.struct(*key).alias("_old"))
-    _better = F.col("_cand").isNotNull() & (
-        F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
-    )
-    _merge = F.when(_better, F.col("_cand")).otherwise(F.col("_old"))
-    _state_proj = (
-        "qid",
-        "node",
-        *[F.col(f"_m.{c}").alias(c) for c in key],
-        "_new",
-    )
-    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))
+    _merge = min_label_merge(["qid", "node"], key)
     _hits_metric = F.collect_list(F.when(F.col("_is_tgt"), F.struct("qid", "dist")))
 
     def step(state: DataFrame, i: int, prev):
@@ -223,23 +212,7 @@ def _run_sssp(
             msgs = msgs.filter(_cut_filter)
         else:
             msgs = msgs.join(_cut_bcast, "qid").filter(_cut_filter).drop("cutoff")
-        # Single full-outer merge of old state vs candidate minima: the
-        # previous shape (left-join to find improvements, anti-join to
-        # drop replaced rows, union back) walked the state three times
-        # with two (qid, node) joins per superstep; one full-outer join
-        # computes the identical row set — kept rows where the old
-        # tie-break struct wins or no candidate exists (_new false),
-        # updated/new rows where the candidate struct strictly wins
-        # (_new true).
-        best = msgs.groupBy("qid", "node").agg(_cand_agg)
-        new_state = (
-            state.select(*_old_proj)
-            .join(best, ["qid", "node"], "full")
-            .withColumn("_m", _merge)
-            .withColumn("_new", _better)
-            .select(*_state_proj)
-        )
-        metrics = {"cnt": _cnt_metric}
+        new_state, metrics = _merge(state, msgs)
         if targets is not None:
             new_state = new_state.join(tmark, ["qid", "node"], "left")
             metrics["hits"] = _hits_metric

@@ -17,9 +17,11 @@ transition system (:1425-1465):
 
 Spark shape: states encode as ``node*2 + (dir==+1)``; the transition
 system is materialized ONCE per graph as a ``state_edges(src, dst,
-weight)`` DataFrame (4 unions + flips); the same label-correcting
-superstep loop as the SSSP kernel runs over it, with per-query flip
-exclusion at the source.
+weight, is_flip)`` DataFrame (4 unions + flips, released by
+``SparkDiGraph.unpersist``); the same label-correcting superstep loop as
+the SSSP kernel runs over it — frontier ⋈ edges, then the shared
+``min_label_merge`` (operators/relax.py) keyed by ``node`` with the label
+``(dist, g, prev)`` — with per-query flip exclusion at the source.
 
 Tie-breaking: the reference keeps the first setter under heap+eager-flip
 event order. All non-flip zigzag edges cost 0, so we carry a derivation
@@ -40,9 +42,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
-from ..plans.supersteps import SuperstepRunner
+from ..plans.supersteps import SuperstepRunner, _free_checkpoint
 from ..rounding import round_half_up
 from ..session import local_df
+from .relax import min_label_merge
 
 
 def state_id(node: int, direction: int) -> int:
@@ -120,26 +123,25 @@ def zigzag_sssp(
     tie-break. Returns (node=state, dist, g, prev) — seeds excluded from
     prev-map semantics (prev = -1).
 
-    ``use_csr``: route through the block-centric local-fixpoint kernel
-    (operators/sssp_csr.zigzag_sssp_csr) — same converged labels (unique
-    least fixpoint), far fewer global supersteps on 0-cost-dominated state
-    graphs."""
+    ``use_csr``: route through the block-centric local-fixpoint loop
+    (operators/sssp_csr.py) with the same label rule — same converged
+    labels (unique least fixpoint), far fewer global supersteps on
+    0-cost-dominated state graphs. Its blocks are the session's shuffle
+    partitions at width 2, so both states of a node share a block."""
     spark = graph.spark
     se_all = _graph_state_edges(graph)
     # flips out of seeded source states never fire
     se = se_all.filter(~(F.col("src").isin(seed_states) & F.col("is_flip")))
+    schema = "node long, dist double, g int, prev long"
+    init = local_df(spark, [(s, 0.0, 0, -1) for s in seed_states], schema)
     if use_csr:
-        from .sssp_csr import zigzag_sssp_csr
+        from .sssp_csr import run_block_centric
 
-        return zigzag_sssp_csr(spark, se, seed_states, cutoff, max_iter=max_iter)
-    # one Spark job per superstep: ``_new`` frontier flag + improved-row
-    # count observed on the runner's checkpoint action (pattern of
-    # bounded_sssp)
-    init = local_df(
-        spark,
-        [(s, 0.0, 0, -1) for s in seed_states],
-        "node long, dist double, g int, prev long",
-    ).withColumn("_new", F.lit(True))
+        return run_block_centric(
+            spark, "zigzag_csr", se, init, ["node"], ["dist", "g", "prev"], schema,
+            lambda lu, u, c, w, flip: (c, 0 if flip and w > 0 else lu[1] + 1, u),
+            cutoff, None, 2, max_iter, extra=["is_flip"],
+        ).state
     # loop-invariant plan fragments (same driver-latency lever as
     # bounded_sssp/PageRank: Columns are immutable and resolve by name;
     # state columns node/dist/g and edge columns src/dst/weight/is_flip
@@ -154,19 +156,9 @@ def zigzag_sssp(
         F.col("src").alias("prev"),
     )
     _cut_filter = F.col("dist") <= cutoff
-    _cand_agg = F.min(F.struct("dist", "g", "prev")).alias("_cand")
-    _old_proj = ("node", F.struct("dist", "g", "prev").alias("_old"))
-    _better = F.col("_cand").isNotNull() & (
-        F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
-    )
-    _merge = F.when(_better, F.col("_cand")).otherwise(F.col("_old"))
-    _cnt_metric = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))
+    _merge = min_label_merge(["node"], ["dist", "g", "prev"])
 
     def step(state: DataFrame, i: int, prev):
-        # single full-outer merge of old state vs candidate minima (same
-        # rewrite as bounded_sssp: the former left-join + anti-join +
-        # union walked the state three times per superstep for the
-        # identical row set)
         msgs = (
             state.filter(F.col("_new"))
             .select("node", "dist", "g")
@@ -174,17 +166,14 @@ def zigzag_sssp(
             .select(*_msg_proj)
             .filter(_cut_filter)
         )
-        best = msgs.groupBy("node").agg(_cand_agg)
-        return (
-            state.select(*_old_proj)
-            .join(best, "node", "full")
-            .withColumn("_m", _merge)
-            .withColumn("_new", _better)
-            .select("node", "_m.dist", "_m.g", "_m.prev", "_new")
-        ), {"cnt": _cnt_metric}
+        return _merge(state, msgs)
 
+    # one Spark job per superstep: ``_new`` frontier flag + improved-row
+    # count observed on the runner's checkpoint action (pattern of
+    # bounded_sssp)
     result = SuperstepRunner(spark).run(
-        "zigzag", init, step, max_iter=max_iter, converged_key="cnt"
+        "zigzag", init.withColumn("_new", F.lit(True)), step, max_iter=max_iter,
+        converged_key="cnt",
     )
     return result.state.select("node", "dist", "g", "prev")
 
@@ -395,9 +384,11 @@ def shortest_zigzag_path(
     # tie -> dir=-1 (heap index order (idx,-1) < (idx,+1))
     cand = sorted(rows, key=lambda r: (r["dist"], r["node"]))
     cand = [r for r in cand if r["prev"] >= 0 or state_node(r["node"]) == sid]
-    if not cand:
-        return None
-    gen = ZigzagGen(graph, cutoff, source=sid, state_df=state)
-    pmap, dmap = gen._maps()
-    p = _decode(graph, cand[0]["node"], sid, pmap, dmap)
+    p = None
+    if cand:
+        pmap, dmap = ZigzagGen(graph, cutoff, source=sid, state_df=state)._maps()
+        p = _decode(graph, cand[0]["node"], sid, pmap, dmap)
+    # the answer is decoded: release the converged state's checkpoint
+    # blocks now, not at the JVM's next garbage collection
+    _free_checkpoint(state)
     return p.round(graph.scale) if p else None

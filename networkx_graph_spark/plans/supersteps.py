@@ -61,10 +61,15 @@ class SuperstepResult:
 
 def _free_checkpoint(df: DataFrame) -> None:
     """Explicit release of a localCheckpointed DataFrame's cached blocks
-    (no-op on anything that isn't a plain LogicalRDD)."""
+    (no-op on anything that isn't a plain LogicalRDD or a column selection
+    over one)."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
+        kind = plan.getClass().getSimpleName()
+        while kind == "Project":
+            plan = plan.child()
+            kind = plan.getClass().getSimpleName()
+        if kind == "LogicalRDD":
             plan.rdd().unpersist(False)
     except Py4JError:
         pass

@@ -100,6 +100,54 @@ def test_sssp_one_job_per_superstep(spark):
     assert jobs <= 9, f"expected <=9 jobs (1 seed + 7 supersteps + collect), got {jobs}"
 
 
+def test_csr_kernels_one_job_per_superstep(spark, graph1, monkeypatch):
+    """Both block-centric kernels (bounded_sssp_csr and zigzag_sssp with
+    use_csr=True) schedule one Spark job per superstep plus one for the
+    init checkpoint: the improved-row count rides the state-checkpoint
+    action, and the min-label merge adds no job."""
+    from networkx_graph_spark.operators.sssp_csr import bounded_sssp_csr
+    from networkx_graph_spark.operators.zigzag import (
+        _graph_state_edges,
+        state_id,
+        zigzag_sssp,
+    )
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    supersteps: list[int] = []
+    run = SuperstepRunner.run
+
+    def counted_run(self, *args, **kwargs):
+        result = run(self, *args, **kwargs)
+        supersteps.append(result.iterations)
+        return result
+
+    monkeypatch.setattr(SuperstepRunner, "run", counted_run)
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(6)], "src long, dst long, weight double"
+    )
+    seeds = spark.createDataFrame(
+        [(0, 0, 0.0, -1, float("-inf"))],
+        "qid long, node long, dist double, prev long, prev_dist double",
+    )
+    jobs = _count_jobs(
+        spark,
+        lambda: bounded_sssp_csr(spark, edges, seeds, 100.0, num_blocks=3, block_width=2),
+    )
+    # blocks of width 2 over a 0..6 chain: one block crossing per superstep
+    assert supersteps == [4], supersteps
+    assert jobs == 1 + supersteps[0], f"expected 1 init + {supersteps[0]} supersteps, got {jobs}"
+
+    _graph_state_edges(graph1)  # the per-graph state-edge build is not a superstep
+    sid = graph1.node_id("w4")
+    supersteps.clear()
+    jobs = _count_jobs(
+        spark,
+        lambda: zigzag_sssp(graph1, [state_id(sid, 1), state_id(sid, -1)], 30.0, use_csr=True),
+    )
+    assert len(supersteps) == 1 and supersteps[0] > 1, supersteps
+    assert jobs == 1 + supersteps[0], f"expected 1 init + {supersteps[0]} supersteps, got {jobs}"
+
+
 def test_pagerank_one_job_per_superstep(spark):
     """PageRank at fuse=1: one job per iteration plus fixed setup jobs
     (vertex count, edge persist count, dangling count)."""

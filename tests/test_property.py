@@ -60,6 +60,7 @@ def test_sssp_matches_oracle(spark, edges, cutoff_k, hypothesis_bucket):
     from pyspark.sql import functions as F  # noqa: F401
 
     from networkx_graph_spark.operators.sssp import bounded_sssp
+    from networkx_graph_spark.operators.sssp_csr import bounded_sssp_csr
 
     assume(edges)  # self-loop stripping can empty the list
     cutoff = cutoff_k * 0.5
@@ -69,12 +70,78 @@ def test_sssp_matches_oracle(spark, edges, cutoff_k, hypothesis_bucket):
         [(0, source, 0.0, -1, NEG_INF)],
         "qid long, node long, dist double, prev long, prev_dist double",
     )
-    got = {
-        r["node"]: (r["dist"], r["prev_dist"], r["prev"])
-        for r in bounded_sssp(spark, edf, seeds, cutoffs=cutoff).collect()
-    }
     want = _sssp_oracle(edges, source, cutoff)
-    assert got == want
+    # the plain kernel, then the block-centric one at one block and at
+    # three range blocks of width 2
+    for state in (
+        bounded_sssp(spark, edf, seeds, cutoffs=cutoff),
+        bounded_sssp_csr(spark, edf, seeds, cutoff, num_blocks=1, block_width=1),
+        bounded_sssp_csr(spark, edf, seeds, cutoff, num_blocks=3, block_width=2),
+    ):
+        got = {r["node"]: (r["dist"], r["prev_dist"], r["prev"]) for r in state.collect()}
+        assert got == want
+
+
+def _zigzag_oracle(state_edges, seeds, cutoff):
+    """Label-correcting fixpoint over the doubled-state edges with the
+    kernel's (dist, g, prev) rule: g resets to 0 across a positive-weight
+    flip, else grows by one; flips out of the seed states never fire."""
+    best = {s: (0.0, 0, -1) for s in seeds}
+    edges = [e for e in state_edges if not (e[3] and e[0] in seeds)]
+    changed = True
+    while changed:
+        changed = False
+        for a, b, w, flip in edges:
+            if a not in best:
+                continue
+            da, ga, _ = best[a]
+            nd = da + w
+            if nd > cutoff:
+                continue
+            cand = (nd, 0 if flip and w > 0 else ga + 1, a)
+            if b not in best or cand < best[b]:
+                best[b] = cand
+                changed = True
+    return best
+
+
+node_weighted_graphs = st.tuples(
+    st.lists(st.integers(0, 6), min_size=2, max_size=6),  # length = k * 0.5
+    st.lists(st.tuples(st.integers(0, 5), st.integers(0, 5)), min_size=1, max_size=10),
+).map(
+    lambda t: (
+        [(f"n{i}", k * 0.5) for i, k in enumerate(t[0])],
+        sorted({(f"n{a}", f"n{b}") for a, b in t[1] if a != b and max(a, b) < len(t[0])}),
+    )
+)
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(graph=node_weighted_graphs, direction=st.sampled_from([-1, 0, 1]),
+       cutoff_k=st.integers(0, 16))
+def test_zigzag_matches_oracle(spark, graph, direction, cutoff_k):
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.zigzag import (
+        build_state_edges,
+        state_id,
+        zigzag_sssp,
+    )
+
+    nodes, edges = graph
+    assume(edges)
+    g = SparkDiGraph.from_lists(spark, nodes, edges)
+    sid = g.node_id(edges[0][0])
+    seeds = [state_id(sid, d) for d in (1, -1) if d * direction >= 0]
+    cutoff = cutoff_k * 0.5
+    state_edges = [tuple(r) for r in build_state_edges(g).collect()]
+    want = _zigzag_oracle(state_edges, seeds, cutoff)
+    for use_csr in (False, True):
+        got = {
+            r["node"]: (r["dist"], r["g"], r["prev"])
+            for r in zigzag_sssp(g, seeds, cutoff, use_csr=use_csr).collect()
+        }
+        assert got == want, use_csr
+    g.unpersist()
 
 
 def _cc_oracle(edges):

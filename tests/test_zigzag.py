@@ -176,3 +176,25 @@ def test_zigzag_csr_kernel_parity(graph1):
         "nodes": ["w4", "w3", "w2"],
         "directions": [-1, -1, 1],
     }
+
+
+def test_unpersist_releases_zigzag_state_edges(spark):
+    """The doubled-state edge table cached on the graph by the first
+    zigzag query, and the query's converged state, are released: after
+    ``unpersist()`` no RDD created since the graph was built is cached."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from tests.conftest import GRAPH1_EDGES, GRAPH1_NODES
+
+    sc = spark.sparkContext
+    g = SparkDiGraph.from_lists(spark, GRAPH1_NODES, GRAPH1_EDGES)
+    mark = sc.emptyRDD().id()
+
+    def cached():
+        return sum(1 for r in sc._jsc.sc().getRDDStorageInfo() if r.id() > mark)
+
+    before = cached()
+    path = shortest_zigzag_path(g, "w4", "w2", cutoff=30)
+    assert path.to_dict()["dist"] == 10.0
+    assert cached() > before
+    g.unpersist()
+    assert cached() == before
