@@ -20,8 +20,8 @@ Scale design (per-superstep job count matters as much as shuffle volume):
   no broadcast subjob) — the dangling mass enters the following plan as a
   literal;
 - the contribution aggregation is map-side-partial ``sum`` — power-law
-  in-degree hubs reduce per-partition before the shuffle; AQE skew-join
-  handles residual join skew (session defaults);
+  in-degree hubs reduce per-partition before the shuffle, so the kernel
+  runs with AQE off (``session.KERNEL_CONF`` has the measurement);
 - state checkpoints via SuperstepRunner (lineage truncation + durable
   parquet resume, north rule).
 """
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.supersteps import SuperstepRunner, SuperstepResult
+from ..session import KERNEL_CONF, kernel_conf
 
 
 def pagerank(
@@ -72,9 +73,10 @@ def pagerank(
 
     Concurrency note: for the duration of the call the kernel adjusts
     session-level SQL conf (shuffle partitions to ``num_partitions``;
-    adaptive execution off — see the wrapper comment) and restores it on
-    exit. Calls are driver-sequential by design; do not run other
-    queries on the same SparkSession concurrently with a pagerank call.
+    adaptive execution off) through ``session.kernel_conf``, which
+    restores it on exit, also on error. Calls are driver-sequential by
+    design; do not run other queries on the same SparkSession
+    concurrently with a pagerank call.
     """
     spark = edges.sparkSession
     if num_partitions is None:
@@ -84,38 +86,14 @@ def pagerank(
     runner = runner or SuperstepRunner(spark)
     args = (edges, damping, tol, max_iter, runner, name, resume,
             num_partitions, fuse, assume_distinct)
-    # Kernel-scoped session conf, restored on exit (the kernel's actions
-    # are driver-sequential within this call):
-    # - shuffle partitions aligned with the caller's explicit partition
-    #   count — otherwise a tuned num_partitions (small convergence
-    #   graphs) still plans every aggregation at the session default and
-    #   pays a re-exchange between the mismatched counts every superstep;
-    # - AQE off for the power-iteration jobs: localCheckpoint captures the
-    #   state's hash(id) partitioning + id-sort only from a NON-adaptive
-    #   executed plan (under AQE the checkpointed scan reports unknown
-    #   partitioning and every superstep re-exchanges + re-sorts the
-    #   vertex state twice). Measured at 16M edges / 5 iters: 23.7s vs
-    #   27.5s warm (probe, steal<0.5%). The kernel's stages have no
-    #   skew for AQE to fix (hub in-degree collapses in the map-side
-    #   partial sum; out-degree hubs are far below a partition's row
-    #   count). SPARK_GRAFT_KERNEL_AQE=on restores adaptive planning
-    #   inside the kernel for clusters where that trade-off differs.
-    import os as _os
-
-    confs = {}
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if int(prev_shuffle) != num_partitions:
-        confs["spark.sql.shuffle.partitions"] = str(num_partitions)
-    if _os.environ.get("SPARK_GRAFT_KERNEL_AQE", "").lower() not in ("on", "true", "1"):
-        confs["spark.sql.adaptive.enabled"] = "false"
-    saved = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    # Shuffle partitions follow the caller's explicit partition count:
+    # otherwise a tuned num_partitions (small convergence graphs) still
+    # plans every aggregation at the session default and pays a
+    # re-exchange between the mismatched counts every superstep. AQE is
+    # off (KERNEL_CONF in session.py has the measurement).
+    confs = {**KERNEL_CONF["pagerank"], "spark.sql.shuffle.partitions": str(num_partitions)}
+    with kernel_conf(spark, confs):
         return _pagerank_impl(*args)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def _plan_is_distinct_on(df: DataFrame, cols: tuple) -> bool:

@@ -38,7 +38,7 @@ from ..plans.supersteps import SuperstepRunner
 from ..rounding import clip
 from ..session import local_df
 from .paths import all_paths_from, all_paths_to
-from .sssp import NEG_INF, PathResult, bounded_sssp
+from .sssp import NEG_INF, PathResult, bounded_sssp, walk_chains
 
 Binding = tuple[float, float, object]
 
@@ -111,7 +111,7 @@ def _shortest_many(
 ) -> list[Optional[PathResult]]:
     """qid-batched binding search: ALL queries advance through ONE
     multi-source run of the bounded-SSSP kernel (binding nodes as per-qid
-    barriers), then per-query argmin + backtrace driver-side. One Spark
+    barriers), then per-query argmin + chain walk driver-side. One Spark
     fixpoint for |Q| queries instead of |Q| sequential kernels — the same
     batching shape as ``shortest_paths_pairs``."""
     nm = graph.names_map
@@ -189,8 +189,9 @@ def _shortest_many(
         )
     }
     # total-cost check with NO fallthrough to the next candidate
-    # (:1582 break); survivors get a distributed backtrace
-    ends, meta = [], {}
+    # (:1582 break); survivors' chains are walked on the driver from the
+    # state's rows up to the winner's distance
+    ends, meta = {}, {}
     for qid, sid, _ in pend:
         if qid not in winners:
             continue
@@ -199,23 +200,12 @@ def _shortest_many(
         total = dist_u + cost
         if total > cutoff:
             continue
-        ends.append((qid, u))
-        meta[qid] = (sid, u, total, t, c)
+        ends[qid] = (sid, u, dist_u)
+        meta[qid] = (u, total, t, c)
     if ends:
-        from .sssp import backtrace
-
-        ends_df = local_df(spark, ends, "qid long, node long")
-        sources_df = local_df(
-            spark, [(q, s) for q, s, _ in pend], "qid long, start long"
-        )
-        chains = {
-            r["qid"]: list(r["chain"])
-            for r in backtrace(state, ends_df, sources_df).collect()
-        }
-        for qid, (sid, u, total, t, c) in meta.items():
-            chain = chains.get(qid)  # [u .. sid]
-            if not chain:
-                continue
+        chains = walk_chains(state, ends)
+        for qid, (u, total, t, c) in meta.items():
+            chain = chains[qid]  # [u .. sid]
             offset = queries[qid][1]
             if not reverse:
                 nodes = [nm[i] for i in reversed(chain)]

@@ -37,9 +37,15 @@ Scale notes: state and frontier are hash-partitioned on the join key;
 join reuses its exchange; every superstep ``localCheckpoint``s to truncate
 lineage; queries/sinks/targets are small per-batch dimension tables built
 on the driver as Arrow ``LocalRelation``s (``session.local_df``) and
-broadcast, so no superstep starts a Python worker. Skewed hub vertices
-are handled by AQE skew-join splitting (enabled in session.py) — the
-min-merge aggregation is already map-side partial.
+broadcast, so no superstep starts a Python worker. The supersteps run
+with AQE off (``session.KERNEL_CONF``): a superstep moves a few hundred
+rows, and under AQE each of its shuffle stages runs as its own Spark job.
+Hub vertices need no skew-join split, because the min-merge aggregation
+is map-side partial.
+
+Paths are read off the converged state on the driver (``walk_chains``),
+the way the reference walks its predecessor map (its ``main.cpp``,
+lines 3022-3060).
 """
 
 from __future__ import annotations
@@ -54,7 +60,7 @@ from pyspark.sql import types as T
 from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepResult, SuperstepRunner
 from ..rounding import clip, round_half_up
-from ..session import local_df
+from ..session import KERNEL_CONF, kernel_conf, local_df
 from .relax import min_label_merge
 
 NEG_INF = float("-inf")
@@ -218,76 +224,52 @@ def _run_sssp(
             metrics["hits"] = _hits_metric
         return new_state, metrics
 
-    result = runner.run(
-        name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
-    )
+    with kernel_conf(spark, KERNEL_CONF["sssp"]):
+        result = runner.run(
+            name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
+        )
     return replace(result, state=result.state.select(*cols))
 
 
-def backtrace(
-    state: DataFrame,
-    ends: DataFrame,
-    sources: DataFrame,
-    max_iter: int = 10_000,
-) -> DataFrame:
-    """Reconstruct node chains by walking the predecessor map.
+def _chain(prev_of: dict[int, int], end: int, start: int) -> list[int]:
+    """``[end, ..., start]`` along ``prev_of``. The walk also stops at a
+    node without a predecessor and before a node already on the chain
+    (zero-length nodes can tie into a predecessor cycle)."""
+    chain, seen = [end], {end}
+    while chain[-1] != start:
+        p = prev_of.get(chain[-1])
+        if p is None or p in seen:
+            break
+        chain.append(p)
+        seen.add(p)
+    return chain
 
-    state   : (qid, node, prev, ...) — converged SSSP state
-    ends    : (qid, node) — nodes to trace back from
-    sources : (qid, start) — per-query termination node
 
-    Returns (qid, node, chain ARRAY<BIGINT>) where chain = [end, ..., start]
-    (prev-order; callers reverse for forward paths). Iterative join — the
-    loop count is the longest chain, bounded by the cutoff.
+def walk_chains(
+    state: DataFrame, ends: dict[int, tuple[int, int, float]]
+) -> dict[int, list[int]]:
+    """Predecessor chains of a converged state, walked on the driver.
+
+    state : (qid, node, dist, prev, ...) — converged SSSP state
+    ends  : {qid: (start, end, dist of end)}
+
+    Returns ``{qid: [end, ..., start]}`` (prev order; callers reverse for
+    forward paths). One job collects ``(qid, node, prev)`` for the rows
+    with ``dist`` ≤ their query's end distance: lengths are non-negative
+    and ``dist(v) = dist(prev) + length(prev)``, so every ancestor of the
+    end is among them. They are the Dijkstra-settled set the reference
+    holds in memory too. The bounds are a literal map in the filter, not
+    a joined table, whose broadcast would cost a second job.
     """
-    pmap = state.select("qid", F.col("node").alias("_pn"), F.col("prev").alias("_pp"))
-    init = (
-        ends.join(F.broadcast(sources), "qid")
-        .select(
-            "qid",
-            "node",
-            F.array("node").alias("chain"),
-            F.col("node").alias("head"),
-            "start",
-        )
-        .withColumn("done", F.col("head") == F.col("start"))
-    )
-
-    def step(cur: DataFrame, i: int, prev):
-        todo = cur.filter(~F.col("done"))
-        stepped = (
-            todo.join(
-                pmap,
-                (todo["qid"] == pmap["qid"]) & (todo["head"] == pmap["_pn"]),
-                "left",
-            )
-            .select(
-                todo["qid"],
-                todo["node"],
-                F.when(
-                    pmap["_pp"].isNotNull(),
-                    F.concat(todo["chain"], F.array(pmap["_pp"])),
-                )
-                .otherwise(todo["chain"])
-                .alias("chain"),
-                F.coalesce(pmap["_pp"], todo["head"]).alias("head"),
-                todo["start"],
-                pmap["_pp"].isNull().alias("_miss"),
-            )
-            .withColumn(
-                "done",
-                F.col("_miss") | (F.col("head") == F.col("start")),
-            )
-            .drop("_miss")
-        )
-        return cur.filter(F.col("done")).unionByName(stepped), {
-            "pending": F.coalesce(F.sum((~F.col("done")).cast("long")), F.lit(0))
-        }
-
-    result = SuperstepRunner(state.sparkSession).run(
-        "backtrace", init, step, max_iter=max_iter, converged_key="pending"
-    )
-    return result.state.select("qid", "node", "chain")
+    bound = F.create_map(
+        *[x for q, (_, _, d) in ends.items() for x in (F.lit(q).cast("long"), F.lit(d))]
+    )[F.col("qid")]
+    prev_of: dict[int, dict[int, int]] = {q: {} for q in ends}
+    for q, node, prev in (
+        state.filter(F.col("dist") <= bound).select("qid", "node", "prev").collect()
+    ):
+        prev_of[q][node] = prev
+    return {q: _chain(prev_of[q], end, start) for q, (start, end, _) in ends.items()}
 
 
 # --------------------------------------------------------------------------
@@ -517,14 +499,7 @@ class ShortestPathGen:
         prev_of = {r["node"]: r["prev"] for r in rows}
         non_leaves = set(prev_of.values())
         ends = [n for n in prev_of if n not in non_leaves]
-        out = []
-        for end in ends:
-            chain = [end]
-            cur = end
-            while cur != self.start_id:
-                cur = prev_of[cur]
-                chain.append(cur)
-            out.append(self._decorate(end, chain))
+        out = [self._decorate(end, _chain(prev_of, end, self.start_id)) for end in ends]
         out.sort(key=lambda p: (-p.dist, p.nodes))
         return out
 
@@ -535,12 +510,7 @@ class ShortestPathGen:
         prev_of = {r["node"]: r["prev"] for r in rows}
         if nid is None or nid not in prev_of:
             return None
-        chain = [nid]
-        cur = nid
-        while cur != self.start_id:
-            cur = prev_of[cur]
-            chain.append(cur)
-        return self._decorate(nid, chain)
+        return self._decorate(nid, _chain(prev_of, nid, self.start_id))
 
 
 def shortest_paths(
@@ -599,11 +569,10 @@ def shortest_paths(
             F.lit(NEG_INF).alias("prev_dist"),
         )
     )
-    cutoffs = local_df(spark, [(0, float(cutoff))], "qid long, cutoff double")
     sinks_df = (
         local_df(spark, [(0, s) for s in sink_ids], "qid long, node long") if sink_ids else None
     )
-    state = bounded_sssp(spark, edges_w, seeds, cutoffs, sinks_df)
+    state = bounded_sssp(spark, edges_w, seeds, float(cutoff), sinks_df)
     gen.state = state.drop("qid")
     return gen
 
@@ -631,9 +600,10 @@ def shortest_path(
     no heap, so endpoints do not change results (see operators/astar.py
     for the heuristic surface and the optional pruning rationale).
 
-    Delegates to ``shortest_paths_pairs`` (a batch of one): seeding,
-    kernel, and backtrace are all join-based and distributed — no
-    driver-side successor collect even for a hub source.
+    Delegates to ``shortest_paths_pairs`` (a batch of one): seeding and
+    the kernel are join-based and distributed — no driver-side successor
+    collect even for a hub source — and the path is walked on the driver
+    from the converged state's rows up to the target's distance.
     """
     return shortest_paths_pairs(
         graph,
@@ -654,8 +624,10 @@ def shortest_paths_pairs(
     corresponding single ``shortest_path`` call. This is the
     scale-intended API (the single-pair wrapper exists for reference
     parity): seeds for all queries are built with one edges join, the
-    label-correcting kernel relaxes all qids together, and backtraces run
-    as one batched iterative join.
+    label-correcting kernel relaxes all qids together, and one collect of
+    the rows up to each target's distance feeds every path walk
+    (``walk_chains``). When every query shares one cutoff, the kernel
+    gets it as a scalar instead of a per-qid table.
     """
     lm = graph.lengths_map
     nm = graph.names_map
@@ -714,7 +686,8 @@ def shortest_paths_pairs(
             F.lit(NEG_INF).alias("prev_dist"),
         )
     )
-    cutoffs = qdf.select("qid", "cutoff")
+    inner = {c for _, _, _, c, _ in live}
+    cutoffs = inner.pop() if len(inner) == 1 else qdf.select("qid", "cutoff")
     sinks_df = None
     if sink_ids:
         sinks_df = local_df(
@@ -728,23 +701,18 @@ def shortest_paths_pairs(
         sinks_df,
         targets=qdf.select("qid", F.col("tid").alias("node")),
     )
-    state = result.state
     # the last superstep's hits are the converged state's target rows
     hit_rows = {h["qid"]: h["dist"] for h in result.metrics[-1]["hits"]}
     if not hit_rows:
         return results
-    ends = local_df(
-        spark, [(q, t) for q, s, t, c, d in live if q in hit_rows], "qid long, node long"
+    chains = walk_chains(
+        result.state, {q: (s, t, hit_rows[q]) for q, s, t, _, _ in live if q in hit_rows}
     )
-    sources = qdf.select("qid", F.col("sid").alias("start"))
-    chains = backtrace(state, ends, sources)
-    chain_rows = {r["qid"]: list(r["chain"]) for r in chains.collect()}
-    delta_of = {q: d for q, s, t, c, d in live}
-    for qid, dist in hit_rows.items():
-        chain = chain_rows.get(qid)
-        if not chain:
-            continue
+    delta_of = {q: d for q, _, _, _, d in live}
+    for qid, chain in chains.items():
         so, to = meta[qid]
         nodes = [nm[i] for i in reversed(chain)]
-        results[qid] = PathResult(dist + delta_of[qid], nodes, so, to).round(scale).with_graph(graph)
+        results[qid] = PathResult(
+            hit_rows[qid] + delta_of[qid], nodes, so, to
+        ).round(scale).with_graph(graph)
     return results

@@ -1,7 +1,7 @@
 """The superstep engine: the one driver loop behind every iterative kernel.
 
 Every iterative operator (PageRank, CC, LPA, SSSP, zigzag, path
-enumeration, backtraces) is a driver-side loop of DataFrame supersteps —
+enumeration) is a driver-side loop of DataFrame supersteps —
 one dataflow plan per superstep under one generic driver, as in Pregelix.
 A kernel supplies only
 

@@ -9,12 +9,16 @@ driver contract all run with the same posture:
 - shuffle partitions sized to cores, not the 200 default.
 
 ``local_df`` is the one way query code builds a small table on the driver.
+``kernel_conf`` is the one way a kernel overrides session conf; the
+per-kernel overrides and the measurements behind them are in
+``KERNEL_CONF``.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Sequence
+from contextlib import contextmanager
+from typing import Iterator, Mapping, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -85,3 +89,50 @@ def local_df(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
             [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
         )
     )
+
+
+# Per-kernel session conf, applied with ``kernel_conf`` for the duration of
+# one kernel call. Each decision is per kernel and carries its measurement:
+# - pagerank: AQE off. ``localCheckpoint`` keeps the state's hash(id)
+#   partitioning and id-sort only from a non-adaptive executed plan (under
+#   AQE the checkpointed scan reports unknown partitioning and every
+#   superstep re-exchanges and re-sorts the vertex state twice). 16M edges,
+#   5 iterations, warm: 23.7 s with AQE off vs 27.5 s with it on. There is
+#   no skew for AQE to split: in-degree hubs collapse in the map-side
+#   partial sum, and out-degree hubs are far below a partition.
+# - sssp (every ``bounded_sssp`` caller: pairs, single source, bindings,
+#   UBODT): AQE off. A point query's supersteps move a few hundred rows,
+#   so its time is in Spark jobs, and under AQE every shuffle stage of a
+#   superstep runs as its own job. perfbench road_paths on a 4-vCPU host,
+#   10 paired untraced runs: pass_s 9.11 -> 6.33 s median (faster in
+#   10/10); traced, 33 -> 14 jobs per query. A dense UBODT build (70x70
+#   grid, threshold 12, 180k rows) is not slower: 6.5 s warm median with
+#   AQE on vs 6.1 s off. The min-merge aggregation is map-side partial,
+#   so hub vertices need no skew-join split.
+# - connected components keep AQE: 16.9 s with it vs 41.2 s without at
+#   bench scale.
+# - zigzag keeps AQE: no workload measures it.
+KERNEL_CONF: dict[str, dict[str, str]] = {
+    "pagerank": {"spark.sql.adaptive.enabled": "false"},
+    "sssp": {"spark.sql.adaptive.enabled": "false"},
+}
+
+
+@contextmanager
+def kernel_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set the SQL ``confs`` for the block and restore them exactly as they
+    were when it exits, also when it raises: a key that was set gets its
+    old value back, a key that was unset is unset again. Calls are
+    driver-sequential; another query running on the same session
+    concurrently would see the kernel's conf."""
+    before = spark.conf.getAll
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k in confs:
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)

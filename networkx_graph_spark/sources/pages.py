@@ -37,6 +37,8 @@ import re
 from typing import Iterator, Optional
 
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -232,10 +234,13 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
         return spark.read.parquet(source)
     try:
         in_catalog = spark.catalog.tableExists(source)
-    except Exception as exc:
-        # tableExists raises ParseException for names that are not valid
-        # SQL identifiers (e.g. 'my-pages', 'pages dir'); such a name can
-        # still be a perfectly good bare relative directory, which the
+    except (AnalysisException, Py4JError) as exc:
+        # tableExists raises ParseException (an AnalysisException) for
+        # names that are not valid SQL identifiers (e.g. 'my-pages',
+        # 'pages dir'), AnalysisException for an unknown catalog, and
+        # Py4JError for a JVM error PySpark leaves unconverted (as in
+        # SparkDiGraph.load). A name that fails to parse can still be a
+        # perfectly good bare relative directory, which the
         # filesystem fallback below must keep serving. Reserve the error
         # for names that are neither parseable identifiers nor existing
         # paths.

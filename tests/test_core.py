@@ -136,6 +136,73 @@ def test_local_df_is_a_local_relation(spark):
     assert [tuple(r) for r in arr.collect()] == [([3, 1, 2], 0.5)]
 
 
+def test_kernel_conf_restores_exactly(spark):
+    """``kernel_conf`` puts every key back as it found it: a set key gets
+    its old value, an unset key is unset again -- on exit, when the block
+    raises, and when setting a later key fails."""
+    import pytest
+    from pyspark.errors import IllegalArgumentException
+
+    from networkx_graph_spark.session import kernel_conf
+
+    unset_key, set_key = "spark.sql.files.maxRecordsPerFile", "spark.sql.shuffle.partitions"
+    before = spark.conf.getAll
+    assert unset_key not in before and set_key in before
+    with kernel_conf(spark, {unset_key: "7", set_key: "3"}):
+        assert spark.conf.get(unset_key) == "7" and spark.conf.get(set_key) == "3"
+    assert spark.conf.getAll == before
+
+    with pytest.raises(ZeroDivisionError):
+        with kernel_conf(spark, {unset_key: "7", set_key: "3"}):
+            1 / 0
+    assert spark.conf.getAll == before
+
+    # the second set is rejected (not an int) after the first took effect
+    with pytest.raises(IllegalArgumentException, match="shuffle.partitions"):
+        with kernel_conf(spark, {unset_key: "7", set_key: "three"}):
+            pass
+    assert spark.conf.getAll == before
+
+
+def test_kernels_restore_conf_on_error(spark, monkeypatch):
+    """``bounded_sssp`` and ``pagerank`` run with AQE off and leave the
+    session conf exactly as they found it when a superstep raises."""
+    import pytest
+
+    from networkx_graph_spark.kernels.pagerank import pagerank
+    from networkx_graph_spark.operators.sssp import bounded_sssp
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    materialize = SuperstepRunner._materialize
+    aqe_inside: list[str] = []
+
+    def failing(self, plan, name, i, durable):
+        aqe_inside.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        if i == 1:
+            raise RuntimeError("injected superstep failure")
+        return materialize(self, plan, name, i, durable)
+
+    monkeypatch.setattr(SuperstepRunner, "_materialize", failing)
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(4)], "src long, dst long, weight double"
+    )
+    seeds = spark.createDataFrame(
+        [(0, 0, 0.0, -1, float("-inf"))],
+        "qid long, node long, dist double, prev long, prev_dist double",
+    )
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for kernel in (
+        lambda: bounded_sssp(spark, edges, seeds, cutoffs=100.0),
+        lambda: pagerank(edges.select("src", "dst"), tol=-1.0, num_partitions=parts + 1),
+    ):
+        before = spark.conf.getAll
+        aqe_inside.clear()
+        with pytest.raises(RuntimeError, match="injected"):
+            kernel()
+        assert aqe_inside == ["false", "false"]
+        assert spark.conf.getAll == before
+
+
 def test_graph_auto_create_endpoint(spark):
     from networkx_graph_spark.graph import SparkDiGraph
 

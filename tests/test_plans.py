@@ -148,6 +148,50 @@ def test_csr_kernels_one_job_per_superstep(spark, graph1, monkeypatch):
     assert jobs == 1 + supersteps[0], f"expected 1 init + {supersteps[0]} supersteps, got {jobs}"
 
 
+def test_point_query_non_adaptive_supersteps(spark, graph1, monkeypatch):
+    """A point query on an AQE-on session: every SSSP superstep executes a
+    non-adaptive plan (under AQE each shuffle stage would be its own job),
+    the query costs one seed checkpoint, one job per superstep and one
+    chain collect, and the session's AQE is on again afterwards."""
+    from networkx_graph_spark.operators.sssp import shortest_path
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    # pre-warm the graph's lazy one-time builds
+    graph1.edges_w
+    graph1.names_map
+    graph1.lengths_map
+    plans: list[tuple[str, str]] = []
+    supersteps: list[int] = []
+    materialize, run = SuperstepRunner._materialize, SuperstepRunner.run
+
+    def captured(self, plan, name, i, durable):
+        out = materialize(self, plan, name, i, durable)
+        plans.append((name, plan._jdf.queryExecution().executedPlan().getClass().getSimpleName()))
+        return out
+
+    def counted_run(self, *args, **kwargs):
+        result = run(self, *args, **kwargs)
+        supersteps.append(result.iterations)
+        return result
+
+    monkeypatch.setattr(SuperstepRunner, "_materialize", captured)
+    monkeypatch.setattr(SuperstepRunner, "run", counted_run)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    p = shortest_path(graph1, "w1", "w7", 100.0)
+    assert (p.dist, p.nodes) == (30.0, ["w1", "w2", "w5", "w7"])
+    kinds = [kind for name, kind in plans if name == "sssp"]
+    assert kinds and "AdaptiveSparkPlanExec" not in kinds, kinds
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    supersteps.clear()
+    jobs = _count_jobs(spark, lambda: shortest_path(graph1, "w1", "w7", 100.0))
+    assert len(supersteps) == 1, supersteps
+    assert jobs == 1 + supersteps[0] + 1, (
+        f"expected 1 seed + {supersteps[0]} supersteps + 1 chain collect, got {jobs}"
+    )
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
 def test_pagerank_one_job_per_superstep(spark):
     """PageRank at fuse=1: one job per iteration plus fixed setup jobs
     (vertex count, edge persist count, dangling count)."""

@@ -8,7 +8,7 @@ the lexicographic tie-break comparison is FP-order-independent.
 """
 
 import pytest
-from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
 
 NEG_INF = float("-inf")
@@ -141,6 +141,96 @@ def test_zigzag_matches_oracle(spark, graph, direction, cutoff_k):
             for r in zigzag_sssp(g, seeds, cutoff, use_csr=use_csr).collect()
         }
         assert got == want, use_csr
+    g.unpersist()
+
+
+def _pairs_oracle(length, edges, ids, source, target, cutoff):
+    """One ``shortest_paths_pairs`` answer (no offsets, no sinks) as
+    ``(dist, nodes)`` or None: a node-length fixpoint with the kernel's
+    ``(dist, prev_dist, prev)`` tie-break -- relaxing out of ``a`` adds
+    ``length[a]``, the source's successors are seeded at 0 with
+    ``prev_dist = -inf`` -- and the target's chain walked from the prev
+    map. ``ids`` gives the node ids the kernel breaks ties on."""
+    if source == target:
+        return 0.0, [source]
+    best = {b: (0.0, NEG_INF, ids[source], source) for a, b in edges if a == source}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in edges:
+            if a not in best:
+                continue
+            da = best[a][0]
+            nd = da + length[a]
+            if nd > cutoff:
+                continue
+            cand = (nd, da, ids[a], a)
+            if b not in best or cand < best[b]:
+                best[b] = cand
+                changed = True
+    if target not in best:
+        return None
+    # the walk stops at the source, and before a node already on the
+    # chain (zero-length nodes can tie into a predecessor cycle)
+    chain = [target]
+    while chain[-1] != source and best[chain[-1]][3] not in chain:
+        chain.append(best[chain[-1]][3])
+    return best[target][0], chain[::-1]
+
+
+_LOOP = (
+    [("n0", 1.0), ("n1", 0.0), ("n2", 0.5), ("n3", 1.0)],
+    [("n0", "n1"), ("n1", "n2"), ("n2", "n0"), ("n2", "n3")],
+)
+
+_TIE = (
+    [("n0", 1.0), ("n1", 0.0), ("n2", 0.0), ("n3", 0.0)],
+    [("n0", "n3"), ("n1", "n2"), ("n2", "n1"), ("n3", "n2")],
+)
+
+
+# _LOOP: n0 -> n3 runs through the cycle back to its source (n0 gets a
+# state row); n1 -> n3 at cutoff 0 is out of cutoff; n2 -> n1 crosses n0.
+# _TIE: the zero-length n1 and n2 are each other's equal-cost
+# predecessors, and the (dist, prev_dist, prev) rule picks n1 for n2 where
+# the reference keeps its first setter n3 (a known divergence, see
+# ROADMAP). Both walks end at the repeat, so n0 -> n2 answers [n1, n2].
+@example(graph=_LOOP, picks=[(0, 3, 8), (1, 3, 0), (2, 1, 6)], shared=False)
+@example(graph=_LOOP, picks=[(0, 3, 6), (1, 3, 6), (2, 1, 6)], shared=True)
+@example(graph=_TIE, picks=[(0, 2, 8), (3, 1, 8)], shared=True)
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    graph=node_weighted_graphs,
+    picks=st.lists(
+        st.tuples(st.integers(0, 5), st.integers(0, 5), st.integers(0, 16)),
+        min_size=2,
+        max_size=3,
+    ),
+    shared=st.booleans(),
+)
+def test_pairs_match_oracle(spark, graph, picks, shared):
+    """One ``shortest_paths_pairs`` batch against ``_pairs_oracle`` on
+    node-weighted graphs whose lengths include 0: targets tie at exactly
+    their distance and zero-length interiors occur. ``shared`` gives every
+    pair the first pair's cutoff (the kernel's scalar cutoff); otherwise
+    cutoffs mix (the per-qid cutoff table)."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.sssp import shortest_paths_pairs
+
+    nodes, edges = graph
+    assume(edges)
+    g = SparkDiGraph.from_lists(spark, nodes, edges)
+    length = dict(nodes)
+    ids = {n: g.node_id(n) for n, _ in nodes}
+    pairs = [
+        (nodes[s % len(nodes)][0], nodes[t % len(nodes)][0], (picks[0][2] if shared else k) * 0.5)
+        for s, t, k in picks
+    ]
+    got = shortest_paths_pairs(g, pairs)
+    for qid, (source, target, cutoff) in enumerate(pairs):
+        want = _pairs_oracle(length, edges, ids, source, target, cutoff)
+        p = got[qid]
+        assert (None if p is None else (p.dist, p.nodes)) == want, pairs[qid]
     g.unpersist()
 
 
