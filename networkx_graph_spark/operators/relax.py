@@ -9,8 +9,9 @@ that carries a lexicographically ordered ``label``:
 
 A superstep's candidates collapse to one minimum per key
 (``min(struct(label))``, map-side partial) and meet the old state in a
-single full-outer join: a row takes the candidate and ``_new = true``
-when the candidate is strictly smaller, else keeps its old label with
+single full-outer join, and one projection over the joined rows builds
+the next state: a row takes the candidate and ``_new = true`` when the
+candidate is strictly smaller, else keeps its old label with
 ``_new = false``. ``_new`` marks the next frontier, and ``cnt`` (the
 number of improved rows, the convergence metric) rides the runner's
 checkpoint action. One join computes the same rows as a left join to
@@ -36,23 +37,18 @@ def min_label_merge(
     are immutable and resolve by name, so rebuilding them every superstep
     would only pay py4j/Catalyst construction time again."""
     key = list(key)
+    key_cols = [F.col(c) for c in key]
     cand_agg = F.min(F.struct(*label)).alias("_cand")
-    old_proj = (*key, F.struct(*label).alias("_old"))
-    better = F.col("_cand").isNotNull() & (
-        F.col("_old").isNull() | (F.col("_cand") < F.col("_old"))
-    )
-    pick = F.when(better, F.col("_cand")).otherwise(F.col("_old"))
-    state_proj = (*key, *[F.col(f"_m.{c}").alias(c) for c in label], "_new")
+    cand = F.col("_cand")
+    # a state row's label is never null: null marks a candidate-only key
+    old = F.when(F.col(label[0]).isNotNull(), F.struct(*label))
+    better = cand.isNotNull() & (old.isNull() | (cand < old))
+    pick = F.when(better, cand).otherwise(old)
+    state_proj = (*key_cols, *[pick[c].alias(c) for c in label], better.alias("_new"))
     cnt = F.coalesce(F.sum(F.col("_new").cast("long")), F.lit(0))
 
     def merge(state: DataFrame, msgs: DataFrame) -> tuple[DataFrame, dict]:
-        best = msgs.groupBy(*key).agg(cand_agg)
-        return (
-            state.select(*old_proj)
-            .join(best, key, "full")
-            .withColumn("_m", pick)
-            .withColumn("_new", better)
-            .select(*state_proj)
-        ), {"cnt": cnt}
+        best = msgs.groupBy(*key_cols).agg(cand_agg)
+        return state.join(best, key, "full").select(*state_proj), {"cnt": cnt}
 
     return merge

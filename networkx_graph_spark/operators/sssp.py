@@ -35,9 +35,10 @@ Exact-match semantics replicated:
 Scale notes: state and frontier are hash-partitioned on the join key;
 ``edges_w`` is pre-partitioned by ``src`` (graph build) so the per-superstep
 join reuses its exchange; every superstep ``localCheckpoint``s to truncate
-lineage; queries/sinks/targets are small per-batch dimension tables built
+lineage; queries/sinks/cutoffs are small per-batch dimension tables built
 on the driver as Arrow ``LocalRelation``s (``session.local_df``) and
-broadcast, so no superstep starts a Python worker. The supersteps run
+broadcast, so no superstep starts a Python worker. The p2p targets and
+prune bounds enter a superstep as plan literals: no broadcast job. The supersteps run
 with AQE off (``session.KERNEL_CONF``): a superstep moves a few hundred
 rows, and under AQE each of its shuffle stages runs as its own Spark job.
 Hub vertices need no skew-join split, because the min-merge aggregation
@@ -53,7 +54,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -119,9 +120,9 @@ def bounded_sssp(
     ``collect`` jobs (the same 1-job/superstep pattern as the PageRank and
     CC kernels). ``hits`` lists every target row of the new state (not
     only improved ones), so the previous record alone gives each query's
-    best target distance ``tbest`` (the min over its rows). The pruning
-    table built from it is a ``LocalRelation``, like every driver-built
-    dimension table here: no superstep starts a Python worker.
+    best target distance ``tbest`` (the min over its rows). The targets
+    (collected once) and the prune bound built from ``tbest`` are plan
+    literals, so neither costs a scan or a broadcast job.
 
     Durability (north rule): pass a ``SuperstepRunner`` with a
     ``checkpoint_dir`` (optionally ``bucket_cols=["qid", "node"]`` for
@@ -162,36 +163,34 @@ def _run_sssp(
     key = ["dist", "prev_dist", "prev", *pl]
     cols = ["qid", "node", "dist", "prev", "prev_dist", *pl]
     runner = runner or SuperstepRunner(spark)
-    tmark = None
-    if targets is not None:
-        tmark = F.broadcast(
-            targets.select("qid", "node").withColumn("_is_tgt", F.lit(True))
-        )
-    init = seeds.select(*cols).withColumn("_new", F.lit(True))
+    init = seeds.select(*cols, F.lit(True).alias("_new"))
 
     # Loop-invariant plan fragments, built once (same driver-latency lever
     # as the PageRank kernel: Column expressions are immutable and resolve
     # by name, so rebuilding them per superstep only pays py4j/Catalyst
     # construction time again). Names are unambiguous in every join below
     # (state: qid/node/dist/prev/prev_dist/payload; edges: src/dst/weight).
-    _fsel_cols = ("qid", "node", "dist", *pl)
+    _new, _qid, _dist = F.col("_new"), F.col("qid"), F.col("dist")
     _msg_jcond = F.col("node") == F.col("src")
     _msg_proj = (
-        F.col("qid"),
+        _qid,
         F.col("dst").alias("node"),
-        (F.col("dist") + F.col("weight")).alias("dist"),
+        (_dist + F.col("weight")).alias("dist"),
         F.col("src").alias("prev"),
-        F.col("dist").alias("prev_dist"),
+        _dist.alias("prev_dist"),
         *[F.col(c) for c in pl],
     )
-    if isinstance(cutoffs, (int, float)):
-        _cut_filter = F.col("dist") <= F.lit(float(cutoffs))
-        _cut_bcast = None
-    else:
-        _cut_filter = F.col("dist") <= F.col("cutoff")
-        _cut_bcast = F.broadcast(cutoffs)
+    _cut_bcast = None if isinstance(cutoffs, (int, float)) else F.broadcast(cutoffs)
+    if _cut_bcast is None:  # a shared cutoff is part of the edge join's condition
+        _msg_jcond = _msg_jcond & (_dist + F.col("weight") <= F.lit(float(cutoffs)))
     _merge = min_label_merge(["qid", "node"], key)
-    _hits_metric = F.collect_list(F.when(F.col("_is_tgt"), F.struct("qid", "dist")))
+    _hits_metric = None
+    if targets is not None:
+        # an ``In`` over literal structs is a set lookup after optimization;
+        # collecting the batch query's ``LocalRelation`` runs no job
+        tpairs = [f"({r['qid']}L, {r['node']}L)" for r in targets.collect()]
+        _is_tgt = F.expr(f"(qid, node) IN ({', '.join(tpairs)})") if tpairs else F.lit(False)
+        _hits_metric = F.collect_list(F.when(_is_tgt, F.struct(_qid, _dist)))
 
     def step(state: DataFrame, i: int, prev):
         # the previous record's hits are every target row of ``state``;
@@ -202,25 +201,19 @@ def _run_sssp(
             q, d = h["qid"], h["dist"]
             if q not in tbest or d < tbest[q]:
                 tbest[q] = d
-        frontier = state.filter(F.col("_new")).select(*cols)
+        keep = _new
         if tbest:
             # prune frontier rows strictly above their query's best target
             # distance (reference first-pop semantics, see docstring)
-            tb = local_df(spark, list(tbest.items()), "qid long, _tbest double")
-            frontier = frontier.join(F.broadcast(tb), "qid", "left").filter(
-                F.col("_tbest").isNull() | (F.col("dist") <= F.col("_tbest"))
-            ).drop("_tbest")
-        f = frontier
+            keep = keep & (_dist <= F.coalesce(_by_qid(tbest), F.lit(float("inf"))))
+        f = state.filter(keep)
         if sinks is not None:
             f = f.join(F.broadcast(sinks), ["qid", "node"], "left_anti")
-        msgs = f.select(*_fsel_cols).join(edges_w, _msg_jcond).select(*_msg_proj)
-        if _cut_bcast is None:
-            msgs = msgs.filter(_cut_filter)
-        else:
-            msgs = msgs.join(_cut_bcast, "qid").filter(_cut_filter).drop("cutoff")
+        msgs = f.join(edges_w, _msg_jcond).select(*_msg_proj)
+        if _cut_bcast is not None:
+            msgs = msgs.join(_cut_bcast, "qid").filter(_dist <= F.col("cutoff"))
         new_state, metrics = _merge(state, msgs)
-        if targets is not None:
-            new_state = new_state.join(tmark, ["qid", "node"], "left")
+        if _hits_metric is not None:
             metrics["hits"] = _hits_metric
         return new_state, metrics
 
@@ -229,6 +222,14 @@ def _run_sssp(
             name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
         )
     return replace(result, state=result.state.select(*cols))
+
+
+def _by_qid(values: dict[int, float]) -> Column:
+    """``values[qid]`` (null if absent) from one literal map in SQL text:
+    one py4j call, where ``create_map`` over ``F.lit``s makes three per
+    entry (500 entries: ~0.9 s vs ~1 ms, 4-vCPU host). ``repr`` round-trips doubles."""
+    entries = ", ".join(f"{q}L, {d!r}D" for q, d in values.items())
+    return F.expr(f"map({entries})[qid]")
 
 
 def _chain(prev_of: dict[int, int], end: int, start: int) -> list[int]:
@@ -261,9 +262,7 @@ def walk_chains(
     holds in memory too. The bounds are a literal map in the filter, not
     a joined table, whose broadcast would cost a second job.
     """
-    bound = F.create_map(
-        *[x for q, (_, _, d) in ends.items() for x in (F.lit(q).cast("long"), F.lit(d))]
-    )[F.col("qid")]
+    bound = _by_qid({q: d for q, (_, _, d) in ends.items()})
     prev_of: dict[int, dict[int, int]] = {q: {} for q in ends}
     for q, node, prev in (
         state.filter(F.col("dist") <= bound).select("qid", "node", "prev").collect()

@@ -49,6 +49,7 @@ from typing import Any, Callable, Optional
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -364,6 +365,7 @@ class SuperstepRunner:
         """
         columns = state.columns
         self._check_buckets(columns)
+        project = [F.col(c) for c in columns]
         start, prev, fallback = 0, None, None
         if resume:
             got = self._resume(name)
@@ -387,7 +389,7 @@ class SuperstepRunner:
                 and cadence_step
                 and (i // cadence) % self.checkpoint_every == 0
             )
-            new_state = self._materialize(plan.select(*columns), name, i, durable)
+            new_state = self._materialize(plan.select(*project), name, i, durable)
             vals = _jsonable(obs.get)
             for k, m in metrics.items():
                 if k not in observed:

@@ -44,13 +44,15 @@ def test_kernel_join_uses_partial_aggregation(spark):
     assert "partial_count" in plan
 
 
-def _count_jobs(spark, fn):
+def _count_jobs(spark, fn, broadcasts=False):
     """Run fn() under a dedicated job group and count the blocking driver
     ACTIONS it scheduled. Two classes of job id are excluded, because they
     are children of a single action, not extra barriers: (a) AQE
     shuffle-stage materializations (AQE is disabled for the measurement),
     (b) broadcast-exchange jobs (submitted from the broadcast thread pool;
-    their callsite is the CompletableFuture lambda)."""
+    their callsite is the CompletableFuture lambda). ``broadcasts=True``
+    counts the broadcast-exchange jobs too: each one is a Spark job the
+    driver waits for before its action's stage can start."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     before = set(tracker.getJobIdsForGroup("jobcount"))
@@ -73,7 +75,7 @@ def _count_jobs(spark, fn):
         if j.jobId() not in new_ids:
             continue
         desc = j.description().get() if j.description().isDefined() else j.name()
-        if "CompletableFuture" not in desc:
+        if broadcasts or "CompletableFuture" not in desc:
             actions += 1
     return actions
 
@@ -190,6 +192,56 @@ def test_point_query_non_adaptive_supersteps(spark, graph1, monkeypatch):
         f"expected 1 seed + {supersteps[0]} supersteps + 1 chain collect, got {jobs}"
     )
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_pairs_supersteps_scan_no_driver_tables(spark, graph1, monkeypatch):
+    """A two-pair batch carries its target pairs and its prune bound into
+    the supersteps as plan literals: no superstep's executed plan scans a
+    driver-built table, and with broadcast jobs counted the batch costs one
+    seed broadcast, one init checkpoint, one checkpoint and one edge
+    broadcast per superstep, and one chain collect."""
+    from networkx_graph_spark.operators.sssp import shortest_paths_pairs
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    # pre-warm the graph's lazy one-time builds
+    graph1.edges_w
+    graph1.names_map
+    graph1.lengths_map
+    plans: list[tuple[str, str]] = []
+    supersteps: list[int] = []
+    materialize, run = SuperstepRunner._materialize, SuperstepRunner.run
+
+    def captured(self, plan, name, i, durable):
+        out = materialize(self, plan, name, i, durable)
+        plans.append((name, plan._jdf.queryExecution().executedPlan().toString()))
+        return out
+
+    def counted_run(self, *args, **kwargs):
+        result = run(self, *args, **kwargs)
+        supersteps.append(result.iterations)
+        return result
+
+    monkeypatch.setattr(SuperstepRunner, "_materialize", captured)
+    monkeypatch.setattr(SuperstepRunner, "run", counted_run)
+    pairs = [("w1", "w7", 100.0), ("w3", "w6", 100.0)]
+    got = shortest_paths_pairs(graph1, pairs)
+    assert [(p.dist, p.nodes) for p in got.values()] == [
+        (30.0, ["w1", "w2", "w5", "w7"]),
+        (20.0, ["w3", "w4", "w6"]),
+    ]
+    sssp_plans = [plan for name, plan in plans if name == "sssp"]
+    assert len(sssp_plans) > 1
+    for plan in sssp_plans:
+        assert "LocalTableScan" not in plan, plan
+
+    supersteps.clear()
+    jobs = _count_jobs(spark, lambda: shortest_paths_pairs(graph1, pairs), broadcasts=True)
+    assert len(supersteps) == 1, supersteps
+    budget = 1 + 1 + 2 * supersteps[0] + 1
+    assert jobs <= budget, (
+        f"expected <= 1 seed broadcast + 1 init + 2 x {supersteps[0]} supersteps"
+        f" + 1 chain collect = {budget} jobs, got {jobs}"
+    )
 
 
 def test_pagerank_one_job_per_superstep(spark):

@@ -61,6 +61,7 @@ def test_sssp_matches_oracle(spark, edges, cutoff_k, hypothesis_bucket):
 
     from networkx_graph_spark.operators.sssp import bounded_sssp
     from networkx_graph_spark.operators.sssp_csr import bounded_sssp_csr
+    from networkx_graph_spark.session import kernel_conf
 
     assume(edges)  # self-loop stripping can empty the list
     cutoff = cutoff_k * 0.5
@@ -72,14 +73,18 @@ def test_sssp_matches_oracle(spark, edges, cutoff_k, hypothesis_bucket):
     )
     want = _sssp_oracle(edges, source, cutoff)
     # the plain kernel, then the block-centric one at one block and at
-    # three range blocks of width 2
-    for state in (
-        bounded_sssp(spark, edf, seeds, cutoffs=cutoff),
-        bounded_sssp_csr(spark, edf, seeds, cutoff, num_blocks=1, block_width=1),
-        bounded_sssp_csr(spark, edf, seeds, cutoff, num_blocks=3, block_width=2),
-    ):
-        got = {r["node"]: (r["dist"], r["prev_dist"], r["prev"]) for r in state.collect()}
-        assert got == want
+    # three range blocks of width 2, each at two shuffle-partition counts
+    for parts in ("1", "3"):
+        with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            for state in (
+                bounded_sssp(spark, edf, seeds, cutoffs=cutoff),
+                bounded_sssp_csr(spark, edf, seeds, cutoff, num_blocks=1, block_width=1),
+                bounded_sssp_csr(spark, edf, seeds, cutoff, num_blocks=3, block_width=2),
+            ):
+                got = {
+                    r["node"]: (r["dist"], r["prev_dist"], r["prev"]) for r in state.collect()
+                }
+                assert got == want, parts
 
 
 def _zigzag_oracle(state_edges, seeds, cutoff):
@@ -213,25 +218,29 @@ def test_pairs_match_oracle(spark, graph, picks, shared):
     node-weighted graphs whose lengths include 0: targets tie at exactly
     their distance and zero-length interiors occur. ``shared`` gives every
     pair the first pair's cutoff (the kernel's scalar cutoff); otherwise
-    cutoffs mix (the per-qid cutoff table)."""
+    cutoffs mix (the per-qid cutoff table). Graph build and batch run at
+    two shuffle-partition counts."""
     from networkx_graph_spark.graph import SparkDiGraph
     from networkx_graph_spark.operators.sssp import shortest_paths_pairs
+    from networkx_graph_spark.session import kernel_conf
 
     nodes, edges = graph
     assume(edges)
-    g = SparkDiGraph.from_lists(spark, nodes, edges)
     length = dict(nodes)
-    ids = {n: g.node_id(n) for n, _ in nodes}
     pairs = [
         (nodes[s % len(nodes)][0], nodes[t % len(nodes)][0], (picks[0][2] if shared else k) * 0.5)
         for s, t, k in picks
     ]
-    got = shortest_paths_pairs(g, pairs)
-    for qid, (source, target, cutoff) in enumerate(pairs):
-        want = _pairs_oracle(length, edges, ids, source, target, cutoff)
-        p = got[qid]
-        assert (None if p is None else (p.dist, p.nodes)) == want, pairs[qid]
-    g.unpersist()
+    for parts in ("1", "3"):
+        with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            g = SparkDiGraph.from_lists(spark, nodes, edges)
+            ids = {n: g.node_id(n) for n, _ in nodes}
+            got = shortest_paths_pairs(g, pairs)
+            for qid, (source, target, cutoff) in enumerate(pairs):
+                want = _pairs_oracle(length, edges, ids, source, target, cutoff)
+                p = got[qid]
+                assert (None if p is None else (p.dist, p.nodes)) == want, (parts, pairs[qid])
+            g.unpersist()
 
 
 def _cc_oracle(edges):
