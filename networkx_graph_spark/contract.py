@@ -84,29 +84,9 @@ FROM nodes LEFT JOIN od ON od.id = nodes.id LEFT JOIN idg ON idg.id = nodes.id
 
 def q_cc_hashmin_k(spark, sf_dir):
     """CC_ROUNDS rounds of hash-min label propagation (fixed, deterministic)."""
-    e = tri_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-    state = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
-        .localCheckpoint(eager=True)  # break shared lineage with sym
-    )
-    for _ in range(CC_ROUNDS):
-        nbr = (
-            state.join(sym, state["id"] == sym["src"])
-            .select(sym["dst"].alias("id"), state["component"].alias("c"))
-            .groupBy("id")
-            .agg(F.min("c").alias("m"))
-        )
-        state = (
-            state.join(nbr, "id", "left")
-            .select("id", F.least("component", F.coalesce("m", "component")).alias("component"))
-            .localCheckpoint(eager=True)
-        )
-    return state
+    from .kernels.components import connected_components
+
+    return connected_components(tri_edges(spark, sf_dir), max_iter=CC_ROUNDS).state
 
 
 def _sql_cc_hashmin() -> str:

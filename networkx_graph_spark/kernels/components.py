@@ -1,19 +1,24 @@
-"""Connected components: hash-min propagation and large-star/small-star.
+"""Connected components: hash-min, block-centric and large-star/small-star.
 
 Canonical kernel (north rule, BASELINE.json:14). Component label = the
-minimum vertex id in the (weakly) connected component — identical for both
-algorithms, so they cross-check each other.
+minimum vertex id in the (weakly) connected component — identical for all
+three algorithms, so they cross-check each other.
 
-- ``hash-min``: classic label propagation — each round every vertex takes
-  the min label among itself and its (undirected) neighbors. O(diameter)
-  rounds; each round one join + one map-side-partial min aggregation.
+- ``hash-min``: the frontier min-label merge (operators/relax.py) with
+  the component as the label — each superstep the vertices whose label
+  fell send it to their (undirected) neighbours, and every vertex keeps
+  the min of its label and what it received. O(diameter) rounds.
+- ``blocked``: ``run_block_centric`` (operators/sssp_csr.py) with the
+  component as its label — intra-block chains collapse into one
+  superstep, so rounds ≈ block-boundary crossings.
 - ``two-phase``: alternating large-star/small-star rewrites (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14) —
   O(log n) rounds on high-diameter graphs; the edge set itself is the
   state and converges to stars rooted at component minima.
 
-Scale: both are pure join+groupBy supersteps over (id-keyed) state, AQE
-skew handling on; state checkpoints per superstep via SuperstepRunner.
+Scale: hash-min and two-phase are pure join+groupBy supersteps over
+(id-keyed) state, AQE skew handling on; state checkpoints per superstep
+via SuperstepRunner.
 """
 
 from __future__ import annotations
@@ -23,7 +28,18 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.relax import min_label_merge
+from ..operators.sssp_csr import run_block_centric
 from ..plans.supersteps import SuperstepRunner, SuperstepResult
+
+
+def _vertices(edges: DataFrame) -> DataFrame:
+    """Every endpoint of ``edges`` once, as ``id``."""
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -82,110 +98,71 @@ def connected_components(
         if runner is not None or resume:
             raise ValueError(
                 "algorithm='blocked' does not support runner/resume — its "
-                "supersteps run inside bounded_sssp_csr on a non-durable "
-                "runner; use hashmin/twophase for resumable runs"
+                "supersteps run on run_block_centric's non-durable runner; "
+                "use hashmin/twophase for resumable runs"
             )
-        return _cc_blocked(edges, max_iter, num_partitions)
+        return _cc_blocked(edges, max_iter, num_partitions, name)
     raise ValueError(f"unknown algorithm: {algorithm}")
 
 
-def _cc_blocked(edges, max_iter, num_partitions):
-    """Block-centric CC through the CSR kernel (operators/sssp_csr.py).
-
-    Hash-min label propagation IS a shortest-path relaxation: seed every
-    vertex with ``dist = float(id)``, give every (symmetric) edge weight
-    0, and the converged min-"dist" at each vertex is the minimum id
-    reachable — its component. The CSR kernel's block-local fixpoint then
-    collapses arbitrarily long intra-block chains (range blocks of 1024
-    ids) into one superstep, so global rounds ≈ block-boundary crossings
-    instead of graph diameter (the high-diameter lever; twophase remains
-    the O(log n) default). Float labels are exact: ids are integers < 2^53.
-    """
-    from ..operators.sssp_csr import NEG_INF, _run_sssp_csr
-
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = _sym(edges)
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+def _cc_blocked(edges, max_iter, num_partitions, name):
+    """Block-centric CC: ``run_block_centric`` with the component as the
+    label. Every vertex starts at its own id, every (symmetric) edge has
+    weight 0 and passes the label on unchanged, so the fixpoint label is
+    the minimum id reachable. The block-local fixpoint collapses
+    arbitrarily long intra-block chains (range blocks of 1024 ids) into
+    one superstep, so global rounds ≈ block-boundary crossings instead of
+    graph diameter (the high-diameter lever; twophase remains the
+    O(log n) default)."""
+    init = _vertices(edges).select(
+        F.col("id").alias("node"), F.col("id").alias("component")
     )
-    seeds = verts.select(
-        F.lit(0).cast("long").alias("qid"),
-        F.col("id").alias("node"),
-        F.col("id").cast("double").alias("dist"),
-        F.col("id").alias("prev"),
-        F.lit(NEG_INF).alias("prev_dist"),
-    )
-    ew = sym.select("src", "dst", F.lit(0.0).alias("weight"))
-    result = _run_sssp_csr(
-        spark, ew, seeds, float("inf"), num_partitions, 1024, max_iter
+    ew = _sym(edges).select("src", "dst", F.lit(0.0).alias("weight"))
+    result = run_block_centric(
+        edges.sparkSession, name, ew, init, ["node"], ["component"],
+        "node long, component long", lambda lu, u, c, w: lu, float("inf"),
+        num_partitions, 1024, max_iter,
     )
     if not result.converged:
         raise RuntimeError(
             f"blocked CC did not reach the fixpoint in max_iter={max_iter} "
             "supersteps — components would be wrong; raise max_iter"
         )
-    out = result.state.select(
-        F.col("node").alias("id"), F.col("dist").cast("long").alias("component")
-    )
-    return SuperstepResult(state=out, iterations=result.iterations, converged=True, metrics=[])
+    result.state = result.state.select(F.col("node").alias("id"), "component")
+    return result
 
 
 def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
+    """Hash-min as the frontier min-label merge: a vertex whose label fell
+    last superstep sends it to its neighbours (Pregel's vote-to-halt).
+    Labels only fall, so a vertex that kept its label has nothing new to
+    send and every superstep's labels equal one full synchronous round's.
+    The merge's full-outer join keeps a vertex with no neighbour at its
+    own id."""
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     runner = runner or SuperstepRunner(spark)
     sym = _sym_clustered(edges, num_partitions).persist()
     sym.count()
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    isolated = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(vertices, "id", "left_anti")
-    )
-    init = vertices.select("id", F.col("id").alias("component")).repartition(
-        num_partitions, "id"
+    merge = min_label_merge(["id"], ["component"])
+    init = _vertices(edges).select(
+        "id", F.col("id").alias("component"), F.lit(True).alias("_new")
     )
 
     def step(state: DataFrame, i: int, prev):
-        ss = sym.select(F.col("src").alias("_ssrc"), F.col("dst").alias("_sdst"))
-        nbr_min = (
-            state.join(ss, state["id"] == F.col("_ssrc"))
-            .select(F.col("_sdst").alias("id"), state["component"].alias("c"))
-            .groupBy("id")
-            .agg(F.min("c").alias("nbr_min"))
+        msgs = (
+            state.filter(F.col("_new"))
+            .join(sym, F.col("id") == F.col("src"))
+            .select(F.col("dst").alias("id"), "component")
         )
-        new_state = (
-            state.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("prev_component"),
-            )
-            .repartition(num_partitions, "id")
-        )
-        return new_state, {
-            "changed": F.coalesce(
-                F.sum((F.col("component") != F.col("prev_component")).cast("long")),
-                F.lit(0),
-            )
-        }
+        return merge(state, msgs)
 
     result = runner.run(
-        name, init, step, max_iter=max_iter, converged_key="changed", tol=0, resume=resume
+        name, init, step, max_iter=max_iter, converged_key="cnt", resume=resume
     )
     sym.unpersist()
-    # self-components for isolated vertices (self-loop-only or none)
-    result.state = result.state.select("id", "component").unionByName(
-        isolated.select("id", F.col("id").alias("component"))
-    )
+    result.state = result.state.select("id", "component")
     return result
 
 
@@ -222,11 +199,7 @@ def _cc_twophase(
     # used exactly once, in the final label join AFTER convergence — keep it
     # lazy (the former eager persist+count paid a full edge pass before the
     # first superstep for a table read once at the end)
-    all_vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    all_vertices = _vertices(edges)
     # one canonical record per undirected pair, built directly with
     # least/greatest (the former _sym().filter(src<dst) shape doubled the
     # rows before deduping); the dedup runs partition-local on top of the

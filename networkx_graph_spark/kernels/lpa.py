@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.supersteps import SuperstepRunner, SuperstepResult
-from .components import _sym_clustered
+from .components import _sym_clustered, _vertices
 
 
 def label_propagation(
@@ -40,12 +40,7 @@ def label_propagation(
     runner = runner or SuperstepRunner(spark)
     sym = _sym_clustered(edges, num_partitions).persist()
     sym.count()
-    all_vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    all_vertices = _vertices(edges).persist()
     all_vertices.count()
     init = all_vertices.select("id", F.col("id").alias("label")).repartition(
         num_partitions, "id"

@@ -1,11 +1,13 @@
 """The min-label merge shared by every label-correcting kernel.
 
-``bounded_sssp``, ``zigzag_sssp`` and both CSR kernels (operators/
-sssp_csr.py) relax candidate labels into a state keyed by ``key`` columns
-that carries a lexicographically ordered ``label``:
+``bounded_sssp``, ``zigzag_sssp``, hash-min CC (kernels/components.py)
+and the block-centric kernels (operators/sssp_csr.py) relax candidate
+labels into a state keyed by ``key`` columns that carries a
+lexicographically ordered ``label``:
 
 - SSSP: key ``(qid, node)``, label ``(dist, prev_dist, prev, *payload)``;
-- zigzag: key ``(node,)``, label ``(dist, g, prev)``.
+- zigzag: key ``(node,)``, label ``(dist, g, prev)``;
+- CC: key ``(id,)`` (``(node,)`` when blocked), label ``(component,)``.
 
 A superstep's candidates collapse to one minimum per key
 (``min(struct(label))``, map-side partial) and meet the old state in a

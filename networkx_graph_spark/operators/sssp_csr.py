@@ -18,12 +18,14 @@ rounds toward the number of block-boundary crossings on the shortest
 path.
 
 One superstep loop (``run_block_centric``) and one cogrouped-map factory
-serve both block-centric kernels, ``bounded_sssp_csr`` here and
-``zigzag_sssp(use_csr=True)`` (operators/zigzag.py). They are keyed like
-the state (``(qid, node)`` for SSSP, ``(node,)`` for zigzag) and take the
-candidate-label rule: relaxing ``u`` with label ``lu`` over an edge of
-weight ``w`` gives ``(c, lu.dist, u)`` for SSSP and ``(c, 0 if flip and
-w > 0 else lu.g + 1, u)`` for zigzag, where ``c = lu.dist + w``.
+serve every block-centric kernel: ``bounded_sssp_csr`` here,
+``zigzag_sssp(use_csr=True)`` (operators/zigzag.py) and blocked CC
+(kernels/components.py). They are keyed like the state (``(qid, node)``
+for SSSP, ``(node,)`` for zigzag and CC) and take the candidate-label
+rule: relaxing ``u`` with label ``lu`` over an edge of weight ``w`` gives
+``(c, lu.dist, u)`` for SSSP, ``(c, 0 if flip and w > 0 else lu.g + 1,
+u)`` for zigzag and ``lu`` itself (weight 0) for CC, where
+``c = lu.dist + w``.
 
 Semantics: the local loop applies lexicographic-min updates of the SAME
 tie-break label as the plain kernels, and the global merge is unchanged —
@@ -44,8 +46,6 @@ from pyspark.sql import functions as F
 
 from ..plans.supersteps import SuperstepResult, SuperstepRunner
 from .relax import min_label_merge
-
-NEG_INF = float("-inf")
 
 
 def _local_relax_factory(key, label, rule, extra, num_blocks, cutoff, block_width):
@@ -167,14 +167,6 @@ def bounded_sssp_csr(
     graphs whose id assignment preserves locality (crawl-order url ids,
     dictionary-encoded host-sorted ids): intra-block chains collapse into
     one superstep."""
-    return _run_sssp_csr(
-        spark, edges_w, seeds, cutoff, num_blocks, block_width, max_iter
-    ).state
-
-
-def _run_sssp_csr(spark, edges_w, seeds, cutoff, num_blocks, block_width, max_iter):
-    """``bounded_sssp_csr`` returning the runner's result, so a caller can
-    tell a ``max_iter`` exhaustion from the fixpoint."""
     return run_block_centric(
         spark, "sssp_csr", edges_w,
         seeds.select("qid", "node", "dist", "prev", "prev_dist"),
@@ -182,4 +174,4 @@ def _run_sssp_csr(spark, edges_w, seeds, cutoff, num_blocks, block_width, max_it
         "qid long, node long, dist double, prev_dist double, prev long",
         lambda lu, u, c, w: (c, lu[0], u),
         cutoff, num_blocks, block_width, max_iter,
-    )
+    ).state

@@ -621,6 +621,10 @@ def test_cc_hashmin_checkpoint_resume(spark, tmp_path):
         name="cc",
     )
     a = {r["id"]: r["component"] for r in full.state.collect()}
+    # one superstep per hop of the chain plus the confirming one; each
+    # counts the vertices whose label fell (10 on the chain + 501 first)
+    assert full.iterations == 11
+    assert [m["cnt"] for m in full.metrics] == [11, 9, 8, 7, 6, 5, 4, 3, 2, 1, 0]
     _crash_after(d, "cc", 3)
     resumed = connected_components(
         e, algorithm="hashmin", runner=SuperstepRunner(spark, checkpoint_dir=d),

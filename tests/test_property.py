@@ -260,19 +260,22 @@ def _cc_oracle(edges):
     return {x: find(x) for x in parent}
 
 
-@pytest.mark.parametrize("algorithm", ["hashmin", "twophase"])
+@pytest.mark.parametrize("algorithm", ["hashmin", "twophase", "blocked"])
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=edge_lists)
 def test_cc_matches_union_find(spark, algorithm, edges):
     from networkx_graph_spark.kernels.components import connected_components
+    from networkx_graph_spark.session import kernel_conf
 
     assume(edges)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(e, algorithm=algorithm).state.collect()
-    }
     want = _cc_oracle(edges)
-    # vertices with only self-loops were stripped by the edge list map;
-    # both sides cover exactly the endpoint set
-    assert got == want
+    for parts in ("1", "3"):
+        with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            got = {
+                r["id"]: r["component"]
+                for r in connected_components(e, algorithm=algorithm).state.collect()
+            }
+        # vertices with only self-loops were stripped by the edge list map;
+        # both sides cover exactly the endpoint set
+        assert got == want, parts
