@@ -25,6 +25,12 @@ replicated exactly:
   backward ``c = clip(0, hi_last, len)`` costs ``len - c`` (:1557-1581).
 - forward paths read ``[source..u]``; backward paths read ``[u..source]``
   (already forward order) with start/end offsets swapped (:1617-1629).
+- ``all_paths_to_bindings`` enumerates with the all-paths loop
+  (``paths._enumerate_paths``): the binding nodes are its ``targets``, so
+  a path stops at the first binding node past the source and is kept
+  with its length before that node; the seed length is the source's
+  offset cost (clipped offset, :1816). Each hit then pays its binding
+  offset cost and is dropped when the total exceeds the cutoff.
 """
 
 from __future__ import annotations
@@ -34,11 +40,11 @@ from typing import Optional, Sequence
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
-from ..plans.supersteps import SuperstepRunner
+from ..plans.supersteps import _free_checkpoint
 from ..rounding import clip
 from ..session import local_df
-from .paths import all_paths_from, all_paths_to
-from .sssp import NEG_INF, PathResult, bounded_sssp, walk_chains
+from .paths import _enumerate_paths, all_paths_from, all_paths_to
+from .sssp import PathResult, bounded_sssp, source_seeds, walk_chains
 
 Binding = tuple[float, float, object]
 
@@ -63,7 +69,6 @@ def encode_bindings(
 
 
 def _same_node(
-    source: int,
     offset: float,
     blist: list[Binding],
     reverse: bool,
@@ -124,7 +129,7 @@ def _shortest_many(
             continue
         blist = b.get(sid)
         if offset is not None and blist:
-            matched, p = _same_node(sid, offset, blist, reverse, cutoff, nm[sid])
+            matched, p = _same_node(offset, blist, reverse, cutoff, nm[sid])
             if matched:
                 out[qid] = (
                     p.round(graph.scale).with_graph(graph) if p is not None else None
@@ -142,17 +147,7 @@ def _shortest_many(
     spark = graph.spark
     edges_w = graph.edges_w_rev if reverse else graph.edges_w
     src_df = local_df(spark, pend, "qid long, sid long, ioff double")
-    # distributed seeding: successors of every source in one broadcast
-    # join (no per-query driver collect)
-    seeds = F.broadcast(src_df).join(
-        edges_w, F.col("sid") == edges_w["src"]
-    ).select(
-        "qid",
-        edges_w["dst"].alias("node"),
-        F.col("ioff").alias("dist"),
-        F.col("sid").alias("prev"),
-        F.lit(NEG_INF).alias("prev_dist"),
-    )
+    seeds = source_seeds(edges_w, src_df)
     binding_nodes = {n for n, lst in b.items() if lst}
     barrier = sink_ids | binding_nodes
     sinks_df = None
@@ -168,14 +163,11 @@ def _shortest_many(
             .select("qid", "node")
         )
     state = bounded_sssp(spark, edges_w, seeds, float(cutoff), sinks_df)
-    state = state.persist()
 
     # Distributed first-pop: ``argmin (dist, node)`` over reached binding
     # nodes per query == Dijkstra's first pop
     # (/root/reference/src/main.cpp:1552-1582). Only ONE small row per
     # query reaches the driver — the converged state is never collected.
-    nm = graph.names_map
-    lm = graph.lengths_map
     bn_df = local_df(spark, [(x,) for x in binding_nodes], "node long")
     winners = {
         r["qid"]: (r["m"]["dist"], r["m"]["node"])
@@ -215,7 +207,7 @@ def _shortest_many(
                 p = PathResult(total, nodes, c, offset)
             p.binding = (nm[u], t)
             out[qid] = p.round(graph.scale).with_graph(graph)
-    state.unpersist()
+    _free_checkpoint(state)
     return out
 
 
@@ -290,13 +282,14 @@ def _enumerate_to_bindings(
     sink_ids: set[int],
     reverse: bool,
 ) -> list[PathResult]:
-    """__all_path_to_bindings__ (/root/reference/src/main.cpp:1760-1908)."""
+    """__all_path_to_bindings__ (/root/reference/src/main.cpp:1760-1908):
+    the same-node fast path, then ``paths._enumerate_paths`` with the
+    binding nodes as its targets, seeded at the source's offset cost."""
     nm = graph.names_map
     lm = graph.lengths_map
-    name = nm[sid]
     blist = b.get(sid)
     if offset is not None and blist:
-        matched, p = _same_node(sid, offset, blist, reverse, cutoff, name)
+        matched, p = _same_node(offset, blist, reverse, cutoff, nm[sid])
         if matched:
             return [p.round(graph.scale).with_graph(graph)] if p is not None else []
     if sid in sink_ids:
@@ -308,79 +301,12 @@ def _enumerate_to_bindings(
         init_offset = clipped if reverse else lm[sid] - clipped
         if init_offset > cutoff:
             return []
-    spark = graph.spark
-    edges_w = graph.edges_w_rev if reverse else graph.edges_w
-    if edges_w.filter(F.col("src") == sid).isEmpty():
-        return []
-    binding_nodes = {n for n, lst in b.items() if lst and n != sid}
-    # flagged single state (the repo-wide 1-action/round pattern): hit
-    # rows accumulate with _hit=true, live frontier rows carry _hit=false;
-    # the live count rides the round's checkpoint action as an
-    # Observation metric — no isEmpty / per-round hit collect jobs
-    seed = local_df(
-        spark,
-        [([sid], float(init_offset), False)],
-        "nodes array<bigint>, length double, _hit boolean",
+    found = _enumerate_paths(
+        graph, sid, cutoff, reverse, sink_ids,
+        targets={n for n, lst in b.items() if lst}, seed_length=init_offset,
     )
-    lengths = graph.vertices.select(
-        F.col("id").alias("tail"), F.col("length").alias("tail_len")
-    )
-
-    def step(state, i: int, prev):
-        cur = (
-            state.filter(~F.col("_hit"))
-            .filter(F.col("length") <= cutoff)
-            .withColumn("tail", F.element_at("nodes", -1))
-            .join(lengths, "tail")
-        )
-        # binding hit (tail != source — root rows have size 1 & tail==sid)
-        hit_cond = F.col("tail").isin(list(binding_nodes)) if binding_nodes else F.lit(False)
-        hit_cond = hit_cond & (F.col("tail") != sid)
-        # hits record their length BEFORE the tail-length add (:1849)
-        hits = cur.filter(hit_cond).select("nodes", "length", F.lit(True).alias("_hit"))
-        rows = cur.filter(~hit_cond)
-        if sink_ids:
-            rows = rows.filter(~F.col("tail").isin(list(sink_ids)))
-        multi = F.size("nodes") > 1
-        rows = rows.withColumn(
-            "length",
-            F.when(multi, F.col("length") + F.col("tail_len")).otherwise(F.col("length")),
-        )
-        cand = rows.join(
-            edges_w.select(F.col("src").alias("tail"), "dst"), "tail", "left"
-        )
-        per = cand.groupBy("nodes", "length").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.when(~F.array_contains("nodes", F.col("dst")), F.col("dst"))
-                )
-            ).alias("cands")
-        )
-        expanded = (
-            per.filter(F.size("cands") > 0)
-            .select(F.explode("cands").alias("nxt"), "nodes", "length")
-            .select(
-                F.concat("nodes", F.array("nxt")).alias("nodes"),
-                "length",
-                F.lit(False).alias("_hit"),
-            )
-        )
-        new_state = state.filter(F.col("_hit")).unionByName(hits).unionByName(expanded)
-        return new_state, {
-            "n_live": F.coalesce(F.sum((~F.col("_hit")).cast("long")), F.lit(0))
-        }
-
-    # the seed round's plan is the runner's init: its checkpoint is the
-    # round's one job (the seed itself is driver data, nothing to truncate)
-    state = SuperstepRunner(spark).run(
-        "bindings", step(seed, 0, None)[0], step, max_iter=10_000, converged_key="n_live"
-    ).state
-    found = [
-        (list(r["nodes"]), r["length"])
-        for r in state.filter(F.col("_hit")).select("nodes", "length").collect()
-    ]
     out = []
-    for nodes, length in found:
+    for nodes, length, _ in found:
         tail = nodes[-1]
         tl = lm[tail]
         if not reverse:

@@ -3,44 +3,50 @@
 Reference kernels: ``__all_paths`` single-origin
 (/root/reference/src/main.cpp:1633-1706) and source→target
 (:1708-1758); wrappers ``all_paths_from`` (:695-717), ``all_paths_to``
-(:719-759, reverse + mirror offsets), ``all_paths`` (:761-832).
+(:719-759, reverse + mirror offsets), ``all_paths`` (:761-832). The
+binding enumerator ``__all_path_to_bindings__`` (:1760-1908) expands
+paths the same way, so ``bindings.all_paths_to_bindings`` runs on this
+module's loop too.
 
-Spark shape: the frontier is a DataFrame of partial paths
-``(nodes ARRAY<BIGINT>, length DOUBLE)``; each round joins the path tails
-against ``edges_w``, applies the reference's terminal rules exactly
-(cutoff truncation / sink / dead-end / cycle-block / target-hit) and fans
-out. ``array_contains`` gives the simple-path cycle check. Rounds are
-bounded by the cutoff (every expansion adds one interior node of length
-≥ the minimum node length). Enumeration is exponential by nature —
-cutoff pruning plus per-round localCheckpoints keep it bounded; this is a
+Spark shape: one loop, ``_enumerate_paths``, behind all four surfaces.
+The state is a DataFrame of partial paths ``(nodes ARRAY<BIGINT>,
+length DOUBLE)``; each superstep joins the path tails against
+``edges_w``, applies the terminal rules below and fans out.
+``array_contains`` gives the simple-path cycle check. Rounds are bounded
+by the cutoff (every expansion adds one interior node of length ≥ the
+minimum node length). Enumeration is exponential by nature — cutoff
+pruning plus per-round localCheckpoints keep it bounded; this is a
 bounded-neighborhood operator, not a whole-graph sweep.
 
-Terminal-rule semantics (single-origin, /root/reference/src/main.cpp:1656-1690):
+Terminal rules. Entering a row with >1 nodes absorbs the tail's length:
+``new_length = length + len(tail)``. The ``targets`` argument picks the
+rule set:
 
-- entering a row with >1 nodes: ``new_length = length + len(tail)``; if it
-  exceeds the cutoff the path is emitted truncated
-  ``(dist=cutoff, end_offset=cutoff-length)``; else length absorbs tail;
-- a tail that is a sink or has no successors emits
-  ``(dist=length, end_offset=len(tail))``;
-- a tail whose successors are all already on the path (cycle-blocked)
-  emits the same way;
-- otherwise fan out to every unvisited successor.
+- ``targets=None`` (single-origin, :1656-1690): if ``new_length`` exceeds
+  the cutoff the path is emitted truncated
+  ``(dist=cutoff, end_offset=cutoff-length)``; a tail that is a sink, has
+  no successors, or whose successors are all already on the path
+  (cycle-blocked) emits ``(dist=length, end_offset=len(tail))``;
+  otherwise the path fans out to every unvisited successor.
+- ``targets`` a node set (``{target}`` for ``all_paths``, :1718-1739; the
+  binding nodes for ``all_paths_to_bindings``, :1849): a non-root
+  tail in ``targets`` emits the path at its length *before* the absorb
+  and stops there; over-cutoff, sink and dead-end rows emit nothing.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import SparkDiGraph
-from ..plans.supersteps import SuperstepRunner
+from ..plans.supersteps import SuperstepRunner, _free_checkpoint
 from ..rounding import clip
 from ..session import local_df
 from .sssp import PathResult
 
-_DONE_SCHEMA = "nodes array<bigint>, dist double, end_offset double"
+_STATE = "nodes array<bigint>, length double, end_offset double, _active boolean"
 
 
 def _enumerate_paths(
@@ -49,140 +55,112 @@ def _enumerate_paths(
     cutoff: float,
     reverse: bool = False,
     sink_ids: Optional[set[int]] = None,
-    target_id: Optional[int] = None,
-    max_iter: int = 10_000,
-) -> DataFrame:
-    """Run the expansion loop; returns done paths
-    (nodes, dist, end_offset) — end_offset is NULL for target-mode."""
-    spark = graph.spark
-    edges_w = graph.edges_w_rev if reverse else graph.edges_w
-    sink_ids = sink_ids or set()
-    target_mode = target_id is not None
+    targets: Optional[set[int]] = None,
+    seed_length: float = 0.0,
+) -> list[tuple[list[int], float, Optional[float]]]:
+    """Run the expansion loop from ``[source_id]`` at ``seed_length``;
+    returns the emitted paths as ``(node ids, dist, end_offset)``
+    (end_offset is None under ``targets``). The converged state is freed
+    before returning."""
     if cutoff < 0:
         # root entry guard `length > cutoff` (/root/reference/src/main.cpp:1715)
-        return local_df(spark, [], _DONE_SCHEMA)
-
-    # single flagged state (one Spark job per round — the active-row count
-    # rides the runner's checkpoint as an Observation metric): active rows
-    # carry (nodes, length); finished rows carry (nodes, dist, end_offset)
-    def _as_state(active_df, done_df):
-        a = active_df.select(
-            "nodes", "length",
-            F.lit(None).cast("double").alias("dist"),
-            F.lit(None).cast("double").alias("end_offset"),
-            F.lit(True).alias("_active"),
-        )
-        d = done_df.select(
-            "nodes", F.lit(None).cast("double").alias("length"),
-            "dist", "end_offset", F.lit(False).alias("_active"),
-        )
-        return a.unionByName(d)
-
-    init = _as_state(
-        local_df(spark, [([source_id], 0.0)], "nodes array<bigint>, length double"),
-        local_df(spark, [], _DONE_SCHEMA),
-    )
+        return []
+    spark = graph.spark
+    edges_w = graph.edges_w_rev if reverse else graph.edges_w
+    succ = edges_w.select(F.col("src").alias("tail"), "dst")
     lengths = graph.vertices.select(
         F.col("id").alias("tail"), F.col("length").alias("tail_len")
     )
+    # one flagged state (one Spark job per round — the active-row count
+    # rides the runner's checkpoint as an Observation metric): active rows
+    # carry (nodes, length); emitted rows carry (nodes, dist, end_offset)
+    # with dist in ``length``
+    active, length = F.col("_active"), F.col("length")
+    multi = F.size("nodes") > 1
+    over = multi & (length + F.col("tail_len") > cutoff)
+    hit = (multi & F.col("tail").isin(list(targets))) if targets else F.lit(False)
+    is_sink = F.col("tail").isin(list(sink_ids)) if sink_ids else F.lit(False)
 
-    def step(state: DataFrame, i: int, prev):
-        active = state.filter(F.col("_active")).select("nodes", "length")
-        done = state.filter(~F.col("_active")).select("nodes", "dist", "end_offset")
-        rows = active.withColumn("tail", F.element_at("nodes", -1)).join(
+    no_offset = F.lit(None).cast("double")
+
+    def emit(df, dist, end_offset):
+        return df.select(
+            "nodes", dist.alias("length"), end_offset.alias("end_offset"),
+            F.lit(False).alias("_active"),
+        )
+
+    def step(state, i: int, prev):
+        rows = state.filter(active).withColumn("tail", F.element_at("nodes", -1)).join(
             lengths, "tail"
         )
-        multi = F.size("nodes") > 1
-        if target_mode:
-            # target-hit emits with pre-entry length, BEFORE the length
-            # absorb (/root/reference/src/main.cpp:1718-1723)
-            hit = rows.filter(multi & (F.col("tail") == target_id)).select(
-                "nodes", F.col("length").alias("dist"),
-                F.lit(None).cast("double").alias("end_offset"),
-            )
-            done = done.unionByName(hit)
-            rows = rows.filter(~(multi & (F.col("tail") == target_id)))
-            # over-cutoff entries are dropped silently (:1724-1727)
-            rows = rows.filter(
-                ~multi | (F.col("length") + F.col("tail_len") <= cutoff)
-            )
+        if targets is None:
+            out = emit(rows.filter(over), F.lit(float(cutoff)), F.lit(float(cutoff)) - length)
         else:
-            trunc = rows.filter(
-                multi & (F.col("length") + F.col("tail_len") > cutoff)
-            ).select(
-                "nodes",
-                F.lit(float(cutoff)).alias("dist"),
-                (F.lit(float(cutoff)) - F.col("length")).alias("end_offset"),
-            )
-            done = done.unionByName(trunc)
-            rows = rows.filter(
-                ~multi | (F.col("length") + F.col("tail_len") <= cutoff)
-            )
-        rows = rows.withColumn(
-            "length", F.when(multi, F.col("length") + F.col("tail_len")).otherwise(F.col("length"))
+            # a hit keeps its length from BEFORE the absorb
+            out = emit(rows.filter(hit), length, no_offset)
+            rows = rows.filter(~hit)
+        rows = rows.filter(~over).withColumn(
+            "length", F.when(multi, length + F.col("tail_len")).otherwise(length)
         )
-        if target_mode:
-            # a size-1 row whose tail == target never expands (:1730-1732)
-            rows = rows.filter(F.col("tail") != target_id)
-        # sink barrier: sinks never expand
-        is_sink = F.col("tail").isin(list(sink_ids)) if sink_ids else F.lit(False)
-        cand = rows.join(
-            edges_w.select(F.col("src").alias("tail"), "dst"), "tail", "left"
-        )
-        per = cand.groupBy("nodes", "length", "tail", "tail_len").agg(
-            F.count("dst").alias("n_succ"),
+        per = rows.join(succ, "tail", "left").groupBy("nodes", "length", "tail", "tail_len").agg(
             F.array_sort(
-                F.collect_list(
-                    F.when(~F.array_contains("nodes", F.col("dst")), F.col("dst"))
+                F.collect_list(F.when(~F.array_contains("nodes", F.col("dst")), F.col("dst")))
+            ).alias("cands")
+        )
+        # sinks never expand; no unvisited successor is a dead end
+        ends = is_sink | (F.size("cands") == 0)
+        if targets is None:
+            out = out.unionByName(emit(per.filter(ends), length, F.col("tail_len")))
+        grown = per.filter(~ends).select(F.explode("cands").alias("nxt"), "nodes", "length")
+        new_state = (
+            state.filter(~active)
+            .unionByName(out)
+            .unionByName(
+                grown.select(
+                    F.concat("nodes", F.array("nxt")).alias("nodes"), "length",
+                    no_offset.alias("end_offset"), F.lit(True).alias("_active"),
                 )
-            ).alias("cands"),
-        )
-        terminal_cond = is_sink | (F.col("n_succ") == 0) | (F.size("cands") == 0)
-        if target_mode:
-            # non-target dead ends emit nothing (:1733-1739)
-            new_done = None
-        else:
-            new_done = per.filter(terminal_cond).select(
-                "nodes",
-                F.col("length").alias("dist"),
-                F.col("tail_len").alias("end_offset"),
-            )
-        if new_done is not None:
-            done = done.unionByName(new_done)
-        new_active = (
-            per.filter(~terminal_cond)
-            .select(F.explode("cands").alias("nxt"), "nodes", "length")
-            .select(
-                F.concat("nodes", F.array("nxt")).alias("nodes"), "length"
             )
         )
-        return _as_state(new_active, done), {
-            "n": F.coalesce(F.sum(F.col("_active").cast("long")), F.lit(0))
-        }
+        return new_state, {"n": F.coalesce(F.sum(active.cast("long")), F.lit(0))}
 
+    # the seed round's plan is the runner's init: its checkpoint is the
+    # round's one job (the seed itself is driver data, nothing to truncate)
+    seed = local_df(spark, [([source_id], float(seed_length), None, True)], _STATE)
     state = SuperstepRunner(spark).run(
-        "all_paths", init, step, max_iter=max_iter, converged_key="n"
+        "all_paths", step(seed, 0, None)[0], step, max_iter=10_000, converged_key="n"
     ).state
-    return state.filter(~F.col("_active")).select("nodes", "dist", "end_offset")
+    done = [
+        (list(r["nodes"]), r["length"], r["end_offset"])
+        for r in state.filter(~active).select("nodes", "length", "end_offset").collect()
+    ]
+    _free_checkpoint(state)
+    return done
 
 
 def _to_results(
     graph: SparkDiGraph,
-    done: DataFrame,
+    rows: list[tuple[list[int], float, Optional[float]]],
     delta: float,
     start_offset: Optional[float],
+    end_offset: Optional[float] = None,
+    mirror: bool = False,
 ) -> list[PathResult]:
+    """Enumerated rows as PathResults sorted by (dist, nodes): ``delta``
+    is added to each dist, a given ``end_offset`` replaces each row's own,
+    and ``mirror`` maps reverse-space paths back before rounding."""
     nm = graph.names_map
     out = []
-    for r in done.collect():
-        out.append(
-            PathResult(
-                r["dist"] + delta,
-                [nm[i] for i in r["nodes"]],
-                start_offset,
-                r["end_offset"],
-            ).round(graph.scale).with_graph(graph)
+    for nodes, dist, eo in rows:
+        p = PathResult(
+            dist + delta,
+            [nm[i] for i in nodes],
+            start_offset,
+            eo if end_offset is None else end_offset,
         )
+        if mirror:
+            p = _mirror(graph, p)
+        out.append(p.round(graph.scale).with_graph(graph))
     out.sort(key=lambda p: (p.dist, p.nodes))
     return out
 
@@ -216,8 +194,8 @@ def all_paths_from(
             ]
         cutoff -= delta
     sink_ids = {graph.node_id(s) for s in (sinks or [])} - {None}
-    done = _enumerate_paths(graph, sid, cutoff, sink_ids=sink_ids)
-    return _to_results(graph, done, delta, start_offset)
+    rows = _enumerate_paths(graph, sid, cutoff, sink_ids=sink_ids)
+    return _to_results(graph, rows, delta, start_offset)
 
 
 def all_paths_to(
@@ -249,30 +227,8 @@ def all_paths_to(
             return [_mirror(graph, p).with_graph(graph)]
         cutoff -= delta
     sink_ids = {graph.node_id(s) for s in (sinks or [])} - {None}
-    done = _enumerate_paths(graph, tid, cutoff, reverse=True, sink_ids=sink_ids)
-    out = [
-        _mirror(graph, p).with_graph(graph)
-        for p in _to_results_raw(graph, done, delta, rev_offset)
-    ]
-    for p in out:
-        p.round(graph.scale)
-    out.sort(key=lambda p: (p.dist, p.nodes))
-    return out
-
-
-def _to_results_raw(graph, done, delta, start_offset) -> list[PathResult]:
-    nm = graph.names_map
-    out = []
-    for r in done.collect():
-        out.append(
-            PathResult(
-                r["dist"] + delta,
-                [nm[i] for i in r["nodes"]],
-                start_offset,
-                r["end_offset"],
-            )
-        )
-    return out
+    rows = _enumerate_paths(graph, tid, cutoff, reverse=True, sink_ids=sink_ids)
+    return _to_results(graph, rows, delta, rev_offset, mirror=True)
 
 
 def _mirror(graph: SparkDiGraph, p: PathResult) -> PathResult:
@@ -326,21 +282,6 @@ def all_paths(
         delta += lm[sid] - source_offset
     if target_offset is not None:
         delta += target_offset
-    inner_cutoff = cutoff - delta
     sink_ids = {graph.node_id(s) for s in (sinks or [])} - {None}
-    done = _enumerate_paths(
-        graph, sid, inner_cutoff, sink_ids=sink_ids, target_id=tid
-    )
-    nm = graph.names_map
-    out = []
-    for r in done.collect():
-        out.append(
-            PathResult(
-                r["dist"] + delta,
-                [nm[i] for i in r["nodes"]],
-                source_offset,
-                target_offset,
-            ).round(graph.scale).with_graph(graph)
-        )
-    out.sort(key=lambda p: (p.dist, p.nodes))
-    return out
+    rows = _enumerate_paths(graph, sid, cutoff - delta, sink_ids=sink_ids, targets={tid})
+    return _to_results(graph, rows, delta, source_offset, target_offset)

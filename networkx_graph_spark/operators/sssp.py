@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..graph import SparkDiGraph
-from ..plans.supersteps import SuperstepResult, SuperstepRunner
+from ..plans.supersteps import SuperstepResult, SuperstepRunner, _free_checkpoint
 from ..rounding import clip, round_half_up
 from ..session import KERNEL_CONF, kernel_conf, local_df
 from .relax import min_label_merge
@@ -222,6 +222,27 @@ def _run_sssp(
             name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
         )
     return replace(result, state=result.state.select(*cols))
+
+
+def source_seeds(edges_w: DataFrame, sources: DataFrame) -> DataFrame:
+    """Seed rows of ``bounded_sssp``: every successor of each query's
+    source at the query's initial offset, cutoff-exempt
+    (/root/reference/src/main.cpp:1118-1126, :1186-1190).
+
+    sources : (qid, sid, ioff) — a small driver table, broadcast into the
+        edge join, so even a hub source's fan-out never reaches the driver.
+    """
+    return (
+        F.broadcast(sources)
+        .join(edges_w, F.col("sid") == edges_w["src"])
+        .select(
+            "qid",
+            edges_w["dst"].alias("node"),
+            F.col("ioff").alias("dist"),
+            F.col("sid").alias("prev"),
+            F.lit(NEG_INF).alias("prev_dist"),
+        )
+    )
 
 
 def _by_qid(values: dict[int, float]) -> Column:
@@ -395,12 +416,17 @@ class ShortestPathGen:
     source: Optional[tuple[str, Optional[float]]] = None  # (node, raw offset)
     target: Optional[tuple[str, Optional[float]]] = None
     start_id: Optional[int] = None
-    _rows: Optional[list] = field(default=None, repr=False)
+    _dist_of: Optional[dict[int, float]] = field(default=None, repr=False)
+    _prev_of: Optional[dict[int, int]] = field(default=None, repr=False)
 
-    def _collect(self):
-        if self._rows is None:
-            self._rows = [] if self.state is None else self.state.collect()
-        return self._rows
+    def _collect(self) -> tuple[dict[int, float], dict[int, int]]:
+        """(dist, prev) maps by node of the converged state, collected and
+        built once."""
+        if self._prev_of is None:
+            rows = [] if self.state is None else self.state.collect()
+            self._dist_of = {r["node"]: r["dist"] for r in rows}
+            self._prev_of = {r["node"]: r["prev"] for r in rows}
+        return self._dist_of, self._prev_of
 
     def dists_df(self) -> DataFrame:
         """(node BIGINT, dist DOUBLE) excluding the start (the reference
@@ -416,15 +442,11 @@ class ShortestPathGen:
 
     def dists(self) -> dict[str, float]:
         nm = self.graph.names_map
-        return {
-            nm[r["node"]]: r["dist"]
-            for r in self._collect()
-            if r["node"] != self.start_id
-        }
+        return {nm[n]: d for n, d in self._collect()[0].items() if n != self.start_id}
 
     def prevs(self) -> dict[str, str]:
         nm = self.graph.names_map
-        return {nm[r["node"]]: nm[r["prev"]] for r in self._collect()}
+        return {nm[n]: nm[p] for n, p in self._collect()[1].items()}
 
     def destinations(self) -> list[tuple[float, str]]:
         """Sorted (dist, node) — tuple sort, so ties break on the node
@@ -471,8 +493,7 @@ class ShortestPathGen:
     def _decorate(self, end_id: int, chain_ids: list[int]) -> PathResult:
         """Shared path decoration (/root/reference/src/main.cpp:2989-3012)."""
         lm, nm = self.graph.lengths_map, self.graph.names_map
-        rows = {r["node"]: r for r in self._collect()}
-        dist = rows[end_id]["dist"]
+        dist = self._collect()[0][end_id]
         length = lm[end_id]
         p_dist = min(self.cutoff, dist + length)
         if self.source is not None:
@@ -492,10 +513,9 @@ class ShortestPathGen:
         (/root/reference/src/main.cpp:2930-3018). Sorted by dist
         descending; ties canonicalized by node list (the reference's tie
         order is unordered_set iteration order — unspecified)."""
-        rows = self._collect()
-        if not rows:
+        prev_of = self._collect()[1]
+        if not prev_of:
             return self._single_node_path()
-        prev_of = {r["node"]: r["prev"] for r in rows}
         non_leaves = set(prev_of.values())
         ends = [n for n in prev_of if n not in non_leaves]
         out = [self._decorate(end, _chain(prev_of, end, self.start_id)) for end in ends]
@@ -505,8 +525,7 @@ class ShortestPathGen:
     def path(self, node: str) -> Optional[PathResult]:
         """Single backtrace (/root/reference/src/main.cpp:3022-3060)."""
         nid = self.graph.node_id(node)
-        rows = self._collect()
-        prev_of = {r["node"]: r["prev"] for r in rows}
+        prev_of = self._collect()[1]
         if nid is None or nid not in prev_of:
             return None
         return self._decorate(nid, _chain(prev_of, nid, self.start_id))
@@ -550,23 +569,11 @@ def shortest_paths(
     if sid in sink_ids:
         return gen  # start is a sink: no seeds (/root/reference/src/main.cpp:1120)
     spark = graph.spark
-    # distributed seeding (same join shape as the batched kernels): the
-    # source's successors never touch the driver — a 10M-fanout hub source
-    # costs one broadcast join, not an out-degree-sized collect. A source
-    # with no successors (/root/reference/src/main.cpp:1114-1117) simply
+    # a source with no successors (/root/reference/src/main.cpp:1114-1117)
     # yields an empty seed set, which the kernel converges on immediately
-    # and every accessor reads as the same empty result.
-    src_df = local_df(spark, [(0, sid, float(init_offset))], "qid long, sid long, ioff double")
-    seeds = (
-        F.broadcast(src_df)
-        .join(edges_w, F.col("sid") == edges_w["src"])
-        .select(
-            "qid",
-            edges_w["dst"].alias("node"),
-            F.col("ioff").alias("dist"),
-            F.col("sid").alias("prev"),
-            F.lit(NEG_INF).alias("prev_dist"),
-        )
+    # and every accessor reads as the same empty result
+    seeds = source_seeds(
+        edges_w, local_df(spark, [(0, sid, float(init_offset))], "qid long, sid long, ioff double")
     )
     sinks_df = (
         local_df(spark, [(0, s) for s in sink_ids], "qid long, node long") if sink_ids else None
@@ -674,17 +681,7 @@ def shortest_paths_pairs(
         return results
     spark = graph.spark
     qdf = local_df(spark, live, "qid long, sid long, tid long, cutoff double, delta double")
-    # seeds: successors of each query's source (cutoff-exempt, dist 0)
-    seeds = (
-        qdf.join(graph.edges_w, qdf["sid"] == graph.edges_w["src"])
-        .select(
-            "qid",
-            graph.edges_w["dst"].alias("node"),
-            F.lit(0.0).alias("dist"),
-            qdf["sid"].alias("prev"),
-            F.lit(NEG_INF).alias("prev_dist"),
-        )
-    )
+    seeds = source_seeds(graph.edges_w, qdf.select("qid", "sid", F.lit(0.0).alias("ioff")))
     inner = {c for _, _, _, c, _ in live}
     cutoffs = inner.pop() if len(inner) == 1 else qdf.select("qid", "cutoff")
     sinks_df = None
@@ -702,11 +699,12 @@ def shortest_paths_pairs(
     )
     # the last superstep's hits are the converged state's target rows
     hit_rows = {h["qid"]: h["dist"] for h in result.metrics[-1]["hits"]}
-    if not hit_rows:
-        return results
-    chains = walk_chains(
-        result.state, {q: (s, t, hit_rows[q]) for q, s, t, _, _ in live if q in hit_rows}
-    )
+    chains = {}
+    if hit_rows:
+        chains = walk_chains(
+            result.state, {q: (s, t, hit_rows[q]) for q, s, t, _, _ in live if q in hit_rows}
+        )
+    _free_checkpoint(result.state)
     delta_of = {q: d for q, _, _, _, d in live}
     for qid, chain in chains.items():
         so, to = meta[qid]

@@ -2,6 +2,7 @@
 parquet scans (PLANS.md); scans that read every column for a 2-column
 projection are wrong at 100 TB."""
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -284,28 +285,98 @@ def test_runner_table_namespace_and_cadence_guard(spark, tmp_path):
         )
 
 
-def test_bindings_enumeration_one_job_per_round(spark, graph1):
-    """all_paths_to_bindings' enumeration loop runs ONE driver action per
-    round (flagged state + Observation live-count) plus fixed setup: no
-    isEmpty or per-round hit-collect jobs."""
+def _bindings_fwd(g):
     from networkx_graph_spark.operators.bindings import (
         all_paths_to_bindings,
         encode_bindings,
     )
 
+    return all_paths_to_bindings(
+        g, "w1", 50.0, encode_bindings(g, {"w7": [(3, 4, "obj")]}), direction=1
+    )
+
+
+def _paths_from(g):
+    from networkx_graph_spark.operators.paths import all_paths_from
+
+    return all_paths_from(g, "w1", 60.0)
+
+
+def _paths_to(g):
+    from networkx_graph_spark.operators.paths import all_paths_to
+
+    return all_paths_to(g, "w7", 30.0)
+
+
+def _paths_p2p(g):
+    from networkx_graph_spark.operators.paths import all_paths
+
+    return all_paths(g, "w1", "w7", 80.0)
+
+
+@pytest.mark.parametrize(
+    "fixture, query, budget",
+    [
+        ("graph1", _bindings_fwd, 6),
+        ("graph1", _paths_from, 6),
+        ("graph1", _paths_to, 5),
+        ("graph2", _paths_p2p, 5),
+    ],
+    ids=["bindings_fwd", "all_paths_from", "all_paths_to", "all_paths"],
+)
+def test_bindings_enumeration_one_job_per_round(request, spark, fixture, query, budget):
+    """Path enumeration runs ONE driver action per round (flagged state +
+    Observation live-count): the seed round's checkpoint, one per later
+    round, one final collect, and no isEmpty or per-round collect jobs.
+    Each budget is the measured count on local[4] with warm graphs."""
+    g = request.getfixturevalue(fixture)
     # pre-warm the graph's lazy one-time builds so the gate measures the
     # enumeration loop itself
-    graph1.edges_w
-    graph1.names_map
-    graph1.lengths_map
-    b = encode_bindings(graph1, {"w7": [(3, 4, "obj")]})
-    jobs = _count_jobs(
-        spark,
-        lambda: all_paths_to_bindings(graph1, "w1", 50.0, b, direction=1),
+    g.edges_w
+    g.edges_w_rev
+    g.names_map
+    g.lengths_map
+    jobs = _count_jobs(spark, lambda: query(g))
+    assert jobs <= budget, f"expected <={budget} driver actions, got {jobs}"
+
+
+def _shortest_path(g):
+    from networkx_graph_spark.operators.sssp import shortest_path
+
+    return shortest_path(g, "w1", "w7", 100.0)
+
+
+def _shortest_to_bindings(g):
+    from networkx_graph_spark.operators.bindings import (
+        encode_bindings,
+        shortest_path_to_bindings,
     )
-    # forward only: 1 no-successor probe + 5 rounds (deepest chain
-    # w1>w3>w4>w6>w7 + terminal round) + 1 final hit collect
-    assert jobs <= 7, f"expected <=7 driver actions, got {jobs}"
+
+    return shortest_path_to_bindings(g, "w1", 50.0, encode_bindings(g, {"w7": [(3, 4, "obj")]}))
+
+
+@pytest.mark.parametrize(
+    "query",
+    [_shortest_path, _shortest_to_bindings, _paths_from, _bindings_fwd],
+    ids=["shortest_path", "shortest_path_to_bindings", "all_paths_from", "all_paths_to_bindings"],
+)
+def test_one_shot_queries_free_their_state(spark, query):
+    """A query that decodes its answer on the driver releases its
+    converged state's checkpoint blocks before it returns: no RDD the
+    call creates is still cached afterwards. (Counting all cached RDDs
+    would not do: a dropped checkpoint is also released whenever a JVM
+    garbage collection lets Spark's cleaner reach it.)"""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from tests.conftest import GRAPH1_EDGES, GRAPH1_NODES
+
+    sc = spark.sparkContext
+    g = SparkDiGraph.from_lists(spark, GRAPH1_NODES, GRAPH1_EDGES)
+    first = query(g)  # also builds the graph's cached tables
+    mark = sc.emptyRDD().id()
+    assert query(g) == first
+    left = [r.id() for r in sc._jsc.sc().getRDDStorageInfo() if r.id() > mark]
+    assert left == []
+    g.unpersist()
 
 
 def test_cosine_topk_two_stage_plan(spark):
@@ -384,7 +455,8 @@ def test_runner_contract_countdown(spark):
 
 def test_supersteps_only_in_the_runner():
     """Operators and kernels hand their loops to SuperstepRunner: neither
-    an Observation nor a localCheckpoint is built outside plans/. The
+    an Observation nor a localCheckpoint is built outside plans/, and no
+    loop probes emptiness with a job of its own (``isEmpty``). The
     triangle counter's one-off localCheckpoint is not a loop."""
     import pathlib
     import re
@@ -395,7 +467,7 @@ def test_supersteps_only_in_the_runner():
     for sub in ("operators", "kernels"):
         for path in sorted((pkg / sub).glob("*.py")):
             rel = f"{sub}/{path.name}"
-            for token in re.findall(r"\b(?:Observation|localCheckpoint)\(", path.read_text()):
+            for token in re.findall(r"\b(?:Observation|localCheckpoint|isEmpty)\(", path.read_text()):
                 found.add((rel, token))
     assert found - allowed == set(), sorted(found - allowed)
 

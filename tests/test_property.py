@@ -279,3 +279,192 @@ def test_cc_matches_union_find(spark, algorithm, edges):
         # vertices with only self-loops were stripped by the edge list map;
         # both sides cover exactly the endpoint set
         assert got == want, parts
+
+
+def _succ(edges, reverse):
+    out = {}
+    for a, b in edges:
+        if reverse:
+            a, b = b, a
+        out.setdefault(a, []).append(b)
+    return out
+
+
+def _clip(v, hi):
+    return min(max(v, 0.0), hi)
+
+
+def _paths_from_oracle(length, edges, source, cutoff, offset, sinks):
+    """``all_paths_from`` by recursive DFS of the single-origin rules in
+    the paths.py docstring: entering a non-root tail absorbs its length or
+    emits the path truncated at the cutoff; a sink, successor-less or
+    cycle-blocked tail emits the path ending at its full length."""
+    succ, out = _succ(edges, False), []
+    so, delta = None, 0.0
+    if offset is not None:
+        so = _clip(offset, length[source])
+        delta = length[source] - so
+        if cutoff <= delta:
+            return [(cutoff, [source], so, so + cutoff, None)]
+        cutoff -= delta
+
+    def dfs(path, dist):
+        tail = path[-1]
+        if len(path) > 1:
+            if dist + length[tail] > cutoff:
+                out.append((cutoff + delta, path, so, cutoff - dist, None))
+                return
+            dist += length[tail]
+        nxt = [v for v in succ.get(tail, []) if v not in path]
+        if tail in sinks or not nxt:
+            out.append((dist + delta, path, so, length[tail], None))
+            return
+        for v in nxt:
+            dfs(path + [v], dist)
+
+    dfs([source], 0.0)
+    return sorted(out, key=lambda p: (p[0], p[1]))
+
+
+def _paths_to_target_oracle(length, edges, source, target, cutoff, so, to, sinks):
+    """``all_paths`` by DFS of the target rule: a non-root tail equal to
+    the target emits at the length before it; over-cutoff, sink and
+    dead-end rows emit nothing."""
+    succ, out = _succ(edges, False), []
+    if so is not None:
+        so = _clip(so, length[source])
+    if to is not None:
+        to = _clip(to, length[target])
+    if source == target:
+        if so is None or to is None or not 0 < to - so <= cutoff:
+            return []
+        return [(to - so, [source], so, to, None)]
+    delta = (0.0 if so is None else length[source] - so) + (0.0 if to is None else to)
+    inner = cutoff - delta
+
+    def dfs(path, dist):
+        tail = path[-1]
+        if len(path) > 1:
+            if tail == target:
+                out.append((dist + delta, path, so, to, None))
+                return
+            if dist + length[tail] > inner:
+                return
+            dist += length[tail]
+        if tail in sinks:
+            return
+        for v in succ.get(tail, []):
+            if v not in path:
+                dfs(path + [v], dist)
+
+    if inner >= 0:
+        dfs([source], 0.0)
+    return sorted(out, key=lambda p: (p[0], p[1]))
+
+
+def _bindings_oracle(length, edges, source, cutoff, bindings, offset, sinks, reverse):
+    """One direction of ``all_paths_to_bindings`` (no endings) by DFS of
+    the bindings.py rules: the same-node fast path, then paths that stop
+    at the first binding node past the source, kept when the binding's
+    offset cost fits the cutoff."""
+    blist = bindings.get(source)
+    if offset is not None and blist:
+        for t in (reversed(blist) if reverse else blist):
+            if (t[1] <= offset) if reverse else (t[0] >= offset):
+                dist = offset - t[1] if reverse else t[0] - offset
+                so, eo = (t[1], offset) if reverse else (offset, t[0])
+                return [(dist, [source], so, eo, (source, t))] if dist <= cutoff else []
+    if source in sinks:
+        return []
+    clipped, init = offset, 0.0
+    if offset is not None:
+        clipped = _clip(offset, length[source])
+        init = clipped if reverse else length[source] - clipped
+    succ, out = _succ(edges, reverse), []
+
+    def dfs(path, dist):
+        tail = path[-1]
+        if dist > cutoff:
+            return
+        if len(path) > 1 and bindings.get(tail):
+            tl = length[tail]
+            t = bindings[tail][-1] if reverse else bindings[tail][0]
+            c = _clip(t[1] if reverse else t[0], tl)
+            total = dist + (tl - c if reverse else c)
+            if total <= cutoff:
+                if reverse:
+                    out.append((total, path[::-1], c, clipped, (tail, t)))
+                else:
+                    out.append((total, path, clipped, c, (tail, t)))
+            return
+        if tail in sinks:
+            return
+        if len(path) > 1:
+            dist += length[tail]
+        for v in succ.get(tail, []):
+            if v not in path:
+                dfs(path + [v], dist)
+
+    dfs([source], init)
+    return sorted(out, key=lambda p: (p[0], p[1]))
+
+
+_halves = st.integers(0, 8).map(lambda k: k * 0.5)
+
+
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    graph=node_weighted_graphs,
+    ends=st.tuples(st.integers(0, 5), st.integers(0, 5)),
+    cutoff_k=st.integers(0, 16),
+    offsets=st.tuples(st.none() | _halves, st.none() | _halves),
+    sink_picks=st.lists(st.integers(0, 5), max_size=2),
+    binding_picks=st.lists(
+        st.tuples(st.integers(0, 5), _halves, _halves), min_size=1, max_size=4
+    ),
+)
+def test_all_paths_match_oracle(
+    spark, graph, ends, cutoff_k, offsets, sink_picks, binding_picks
+):
+    """``all_paths_from``, ``all_paths`` and both directions of
+    ``all_paths_to_bindings`` against the DFS oracles above, comparing
+    every path's (dist, nodes, start offset, end offset, binding) and the
+    result order, at two shuffle-partition counts."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.bindings import all_paths_to_bindings, encode_bindings
+    from networkx_graph_spark.operators.paths import all_paths, all_paths_from
+    from networkx_graph_spark.session import kernel_conf
+
+    nodes, edges = graph
+    assume(edges)
+    length = dict(nodes)
+    names = [n for n, _ in nodes]
+    source, target = names[ends[0] % len(names)], names[ends[1] % len(names)]
+    cutoff = cutoff_k * 0.5
+    so, to = offsets
+    sinks = sorted({names[i % len(names)] for i in sink_picks})
+    raw: dict[str, list] = {}
+    for j, (i, lo, hi) in enumerate(binding_picks):
+        raw.setdefault(names[i % len(names)], []).append((lo, lo + hi, f"b{j}"))
+    bindings = {n: sorted(lst, key=lambda t: (t[0], t[1])) for n, lst in raw.items()}
+
+    def rows(paths):
+        return [(p.dist, p.nodes, p.start_offset, p.end_offset, p.binding) for p in paths]
+
+    want_from = _paths_from_oracle(length, edges, source, cutoff, so, sinks)
+    want_p2p = _paths_to_target_oracle(length, edges, source, target, cutoff, so, to, sinks)
+    want_b = [
+        _bindings_oracle(length, edges, source, cutoff, bindings, so, sinks, rev)
+        for rev in (True, False)
+    ]
+    for parts in ("1", "3"):
+        with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            g = SparkDiGraph.from_lists(spark, nodes, edges)
+            got_from = all_paths_from(g, source, cutoff, offset=so, sinks=sinks)
+            assert rows(got_from) == want_from, parts
+            got_p2p = all_paths(g, source, target, cutoff, so, to, sinks=sinks)
+            assert rows(got_p2p) == want_p2p, parts
+            b = encode_bindings(g, raw)
+            got_b = all_paths_to_bindings(g, source, cutoff, b, offset=so, sinks=sinks)
+            assert [rows(d) for d in got_b] == want_b, parts
+            g.unpersist()
