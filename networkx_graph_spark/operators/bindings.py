@@ -16,11 +16,15 @@ replicated exactly:
   match exceeds the cutoff, :1518-1520).
 - graph search: Dijkstra that stops at the first *popped* binding node
   (:1552-1582). Because Dijkstra pops in (dist, node) order and binding
-  nodes never relax out, this equals: run the bounded SSSP kernel with
-  binding nodes added to the sink barrier set, then pick
-  ``argmin (dist, node)`` over reached binding nodes — and only then apply
-  the total-cost check ``dist + binding_offset_cost <= cutoff`` (if the
-  first binding node fails it, the answer is None, not the next node).
+  nodes never relax out, this equals a p2p batch of the bounded SSSP
+  kernel: each query's targets are the binding nodes other than its
+  source, the sinks and binding nodes are the barrier, and the first pop
+  is ``argmin (dist, node)`` over the last record's target hits within
+  the cutoff. Only then the total-cost check
+  ``dist + binding_offset_cost <= cutoff`` applies (if the first binding
+  node fails it, the answer is None, not the next node). The kernel's
+  prune at the best target distance keeps rows at exactly that distance
+  expanding, so the argmin and the winner's chain are unchanged by it.
 - binding offset cost: forward ``c = clip(0, lo_first, len)`` costs ``c``;
   backward ``c = clip(0, hi_last, len)`` costs ``len - c`` (:1557-1581).
 - forward paths read ``[source..u]``; backward paths read ``[u..source]``
@@ -37,14 +41,12 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import functions as F
-
 from ..graph import SparkDiGraph
 from ..plans.supersteps import _free_checkpoint
 from ..rounding import clip
 from ..session import local_df
 from .paths import _enumerate_paths, all_paths_from, all_paths_to
-from .sssp import PathResult, bounded_sssp, source_seeds, walk_chains
+from .sssp import PathResult, _run_sssp, source_seeds, walk_chains
 
 Binding = tuple[float, float, object]
 
@@ -114,11 +116,12 @@ def _shortest_many(
     sink_ids: set[int],
     reverse: bool,
 ) -> list[Optional[PathResult]]:
-    """qid-batched binding search: ALL queries advance through ONE
-    multi-source run of the bounded-SSSP kernel (binding nodes as per-qid
-    barriers), then per-query argmin + chain walk driver-side. One Spark
-    fixpoint for |Q| queries instead of |Q| sequential kernels — the same
-    batching shape as ``shortest_paths_pairs``."""
+    """qid-batched binding search: ALL queries advance through ONE p2p
+    batch of the bounded-SSSP kernel, the same shape as
+    ``shortest_paths_pairs``. Each query's targets are the binding nodes
+    other than its source; sinks and binding nodes are the shared barrier.
+    The last record's target hits give each query's first pop, and the
+    winners' chains are walked on the driver."""
     nm = graph.names_map
     lm = graph.lengths_map
     out: list[Optional[PathResult]] = [None] * len(queries)
@@ -146,40 +149,24 @@ def _shortest_many(
         return out
     spark = graph.spark
     edges_w = graph.edges_w_rev if reverse else graph.edges_w
-    src_df = local_df(spark, pend, "qid long, sid long, ioff double")
-    seeds = source_seeds(edges_w, src_df)
+    seeds = source_seeds(edges_w, local_df(spark, pend, "qid long, sid long, ioff double"))
     binding_nodes = {n for n, lst in b.items() if lst}
-    barrier = sink_ids | binding_nodes
-    sinks_df = None
-    if barrier:
-        bar_df = local_df(spark, [(x,) for x in barrier], "node long")
-        # per-qid barrier: every sink/binding node EXCEPT the query's own
-        # source (a binding source never barriers its own walk,
-        # /root/reference/src/main.cpp:1540-1545)
-        sinks_df = (
-            src_df.select("qid", "sid")
-            .crossJoin(bar_df)
-            .filter(F.col("node") != F.col("sid"))
-            .select("qid", "node")
-        )
-    state = bounded_sssp(spark, edges_w, seeds, float(cutoff), sinks_df)
-
-    # Distributed first-pop: ``argmin (dist, node)`` over reached binding
-    # nodes per query == Dijkstra's first pop
-    # (/root/reference/src/main.cpp:1552-1582). Only ONE small row per
-    # query reaches the driver — the converged state is never collected.
-    bn_df = local_df(spark, [(x,) for x in binding_nodes], "node long")
-    winners = {
-        r["qid"]: (r["m"]["dist"], r["m"]["node"])
-        for r in (
-            state.join(F.broadcast(bn_df), "node")
-            .join(F.broadcast(src_df.select("qid", "sid")), "qid")
-            .filter((F.col("node") != F.col("sid")) & (F.col("dist") <= F.lit(float(cutoff))))
-            .groupBy("qid")
-            .agg(F.min(F.struct("dist", "node")).alias("m"))
-            .collect()
-        )
-    }
+    # The source's own binding is no target, and the barrier need not
+    # exempt it (/root/reference/src/main.cpp:1540-1545): a re-reach of
+    # the source has dist >= its seeds' offset, so what it would send
+    # never beats a seed label.
+    result = _run_sssp(
+        spark, edges_w, seeds, float(cutoff), sink_ids | binding_nodes,
+        targets=[(q, n) for q, sid, _ in pend for n in binding_nodes if n != sid],
+    )
+    # Dijkstra's first pop (/root/reference/src/main.cpp:1552-1582) is
+    # ``argmin (dist, node)`` over the reached binding nodes within the
+    # cutoff (seeds are cutoff-exempt)
+    winners: dict[int, tuple[float, int]] = {}
+    for h in result.metrics[-1]["hits"]:
+        m = (h["dist"], h["node"])
+        if m[0] <= cutoff and (h["qid"] not in winners or m < winners[h["qid"]]):
+            winners[h["qid"]] = m
     # total-cost check with NO fallthrough to the next candidate
     # (:1582 break); survivors' chains are walked on the driver from the
     # state's rows up to the winner's distance
@@ -195,7 +182,7 @@ def _shortest_many(
         ends[qid] = (sid, u, dist_u)
         meta[qid] = (u, total, t, c)
     if ends:
-        chains = walk_chains(state, ends)
+        chains = walk_chains(result.state, ends)
         for qid, (u, total, t, c) in meta.items():
             chain = chains[qid]  # [u .. sid]
             offset = queries[qid][1]
@@ -207,7 +194,7 @@ def _shortest_many(
                 p = PathResult(total, nodes, c, offset)
             p.binding = (nm[u], t)
             out[qid] = p.round(graph.scale).with_graph(graph)
-    _free_checkpoint(state)
+    _free_checkpoint(result.state)
     return out
 
 

@@ -44,7 +44,7 @@ from ..graph import SparkDiGraph
 from ..plans.supersteps import SuperstepRunner, _free_checkpoint
 from ..rounding import clip
 from ..session import local_df
-from .sssp import PathResult
+from .sssp import PathResult, _literal_in
 
 _STATE = "nodes array<bigint>, length double, end_offset double, _active boolean"
 
@@ -78,8 +78,8 @@ def _enumerate_paths(
     active, length = F.col("_active"), F.col("length")
     multi = F.size("nodes") > 1
     over = multi & (length + F.col("tail_len") > cutoff)
-    hit = (multi & F.col("tail").isin(list(targets))) if targets else F.lit(False)
-    is_sink = F.col("tail").isin(list(sink_ids)) if sink_ids else F.lit(False)
+    hit = (multi & _literal_in("tail", targets)) if targets else F.lit(False)
+    is_sink = _literal_in("tail", sink_ids or ())
 
     no_offset = F.lit(None).cast("double")
 

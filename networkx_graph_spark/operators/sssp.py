@@ -35,10 +35,12 @@ Exact-match semantics replicated:
 Scale notes: state and frontier are hash-partitioned on the join key;
 ``edges_w`` is pre-partitioned by ``src`` (graph build) so the per-superstep
 join reuses its exchange; every superstep ``localCheckpoint``s to truncate
-lineage; queries/sinks/cutoffs are small per-batch dimension tables built
-on the driver as Arrow ``LocalRelation``s (``session.local_df``) and
-broadcast, so no superstep starts a Python worker. The p2p targets and
-prune bounds enter a superstep as plan literals: no broadcast job. The supersteps run
+lineage. A query batch is driver data: its sources are one Arrow
+``LocalRelation`` (``session.local_df``), broadcast once into the seed
+join (``source_seeds``), and its cutoffs, sinks, p2p targets and prune
+bounds enter each superstep as plan literals in SQL text (``_by_qid``,
+``_literal_in``), so a superstep neither scans nor broadcasts a
+driver-built table and starts no Python worker. The supersteps run
 with AQE off (``session.KERNEL_CONF``): a superstep moves a few hundred
 rows, and under AQE each of its shuffle stages runs as its own Spark job.
 Hub vertices need no skew-join split, because the min-merge aggregation
@@ -52,7 +54,7 @@ lines 3022-3060).
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
-from typing import Optional, Sequence
+from typing import Iterable, Mapping, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,11 +83,11 @@ def bounded_sssp(
     spark: SparkSession,
     edges_w: DataFrame,
     seeds: DataFrame,
-    cutoffs: DataFrame,
-    sinks: Optional[DataFrame] = None,
+    cutoffs: Union[float, Mapping[int, float]],
+    sinks: Optional[Iterable[int]] = None,
     max_iter: int = 10_000,
     payload_cols: Sequence[str] = (),
-    targets: Optional[DataFrame] = None,
+    targets: Optional[Iterable[tuple[int, int]]] = None,
     runner=None,
     name: str = "sssp",
     resume: bool = False,
@@ -96,11 +98,12 @@ def bounded_sssp(
     ----------
     edges_w : (src, dst, weight) — weight = length of the node relaxed out of
     seeds   : (qid, node, dist, prev, prev_dist [, payload...]) — cutoff-exempt
-    cutoffs : (qid, cutoff) — admission bound per query (broadcast)
-    sinks   : (qid, node) or None — arrive-only barrier nodes (broadcast)
+    cutoffs : admission bound, one float for every query or ``{qid: cutoff}``
+        (a mapping with one distinct value is that float)
+    sinks   : node ids or None — arrive-only barrier nodes of every query
     payload_cols : extra seed columns carried along winning paths (e.g. the
         UBODT ``first_hop``); they ride behind the tie-break key.
-    targets : (qid, node) or None — p2p early termination
+    targets : ``(qid, node)`` pairs or None — p2p early termination
         (/root/reference/src/main.cpp:1198-1200 stops when the target pops).
         Once a query's target holds dist ``t``, frontier rows of that query
         with ``dist > t`` are pruned: weights are non-negative, so they can
@@ -108,7 +111,9 @@ def bounded_sssp(
         and never a better label on the winning chain (whose prefixes all
         sit strictly below ``t``). Rows at exactly ``t`` keep expanding so
         the lexicographic (dist, prev_dist, prev) tie-break is unaffected.
-        Only the target's chain is guaranteed final — p2p callers only.
+        A query may have several targets; ``t`` is the least of them.
+        Only the chains of targets at ``t`` are guaranteed final — p2p
+        callers only.
 
     Returns the converged state (qid, node, dist, prev, prev_dist [, payload]).
 
@@ -119,10 +124,10 @@ def bounded_sssp(
     action — no separate ``isEmpty``/frontier checkpoint/target
     ``collect`` jobs (the same 1-job/superstep pattern as the PageRank and
     CC kernels). ``hits`` lists every target row of the new state (not
-    only improved ones), so the previous record alone gives each query's
-    best target distance ``tbest`` (the min over its rows). The targets
-    (collected once) and the prune bound built from ``tbest`` are plan
-    literals, so neither costs a scan or a broadcast job.
+    only improved ones) as ``(qid, node, dist)``, so the previous record
+    alone gives each query's best target distance ``tbest`` (the min over
+    its rows). The cutoffs, sinks, targets and the prune bound built from
+    ``tbest`` are plan literals, so none costs a scan or a broadcast job.
 
     Durability (north rule): pass a ``SuperstepRunner`` with a
     ``checkpoint_dir`` (optionally ``bucket_cols=["qid", "node"]`` for
@@ -141,11 +146,11 @@ def _run_sssp(
     spark: SparkSession,
     edges_w: DataFrame,
     seeds: DataFrame,
-    cutoffs: DataFrame,
-    sinks: Optional[DataFrame] = None,
+    cutoffs: Union[float, Mapping[int, float]],
+    sinks: Optional[Iterable[int]] = None,
     max_iter: int = 10_000,
     payload_cols: Sequence[str] = (),
-    targets: Optional[DataFrame] = None,
+    targets: Optional[Iterable[tuple[int, int]]] = None,
     runner=None,
     name: str = "sssp",
     resume: bool = False,
@@ -156,8 +161,7 @@ def _run_sssp(
     pl = list(payload_cols)
     # payload names must be disjoint from the edge columns (the hoisted
     # name-resolved message projection below) and from the state columns
-    _reserved = {"src", "dst", "weight", "cutoff", "qid", "node", "dist", "prev",
-                 "prev_dist", "_new"}
+    _reserved = {"src", "dst", "weight", "qid", "node", "dist", "prev", "prev_dist", "_new"}
     if _reserved & set(pl):
         raise ValueError(f"payload_cols may not use reserved names {sorted(_reserved)}")
     key = ["dist", "prev_dist", "prev", *pl]
@@ -171,7 +175,11 @@ def _run_sssp(
     # construction time again). Names are unambiguous in every join below
     # (state: qid/node/dist/prev/prev_dist/payload; edges: src/dst/weight).
     _new, _qid, _dist = F.col("_new"), F.col("qid"), F.col("dist")
-    _msg_jcond = F.col("node") == F.col("src")
+    if isinstance(cutoffs, Mapping) and len(set(cutoffs.values())) == 1:
+        cutoffs = next(iter(cutoffs.values()))
+    bound = _by_qid(cutoffs) if isinstance(cutoffs, Mapping) else F.lit(float(cutoffs))
+    # the cutoff is part of the edge join's condition
+    _msg_jcond = (F.col("node") == F.col("src")) & (_dist + F.col("weight") <= bound)
     _msg_proj = (
         _qid,
         F.col("dst").alias("node"),
@@ -180,17 +188,15 @@ def _run_sssp(
         _dist.alias("prev_dist"),
         *[F.col(c) for c in pl],
     )
-    _cut_bcast = None if isinstance(cutoffs, (int, float)) else F.broadcast(cutoffs)
-    if _cut_bcast is None:  # a shared cutoff is part of the edge join's condition
-        _msg_jcond = _msg_jcond & (_dist + F.col("weight") <= F.lit(float(cutoffs)))
+    _front = _new
+    sinks = list(sinks or ())
+    if sinks:  # sinks are reached but never relax out
+        _front = _new & ~_literal_in("node", sinks)
     _merge = min_label_merge(["qid", "node"], key)
     _hits_metric = None
     if targets is not None:
-        # an ``In`` over literal structs is a set lookup after optimization;
-        # collecting the batch query's ``LocalRelation`` runs no job
-        tpairs = [f"({r['qid']}L, {r['node']}L)" for r in targets.collect()]
-        _is_tgt = F.expr(f"(qid, node) IN ({', '.join(tpairs)})") if tpairs else F.lit(False)
-        _hits_metric = F.collect_list(F.when(_is_tgt, F.struct(_qid, _dist)))
+        _is_tgt = _literal_in("(qid, node)", targets)
+        _hits_metric = F.collect_list(F.when(_is_tgt, F.struct(_qid, F.col("node"), _dist)))
 
     def step(state: DataFrame, i: int, prev):
         # the previous record's hits are every target row of ``state``;
@@ -201,17 +207,12 @@ def _run_sssp(
             q, d = h["qid"], h["dist"]
             if q not in tbest or d < tbest[q]:
                 tbest[q] = d
-        keep = _new
+        keep = _front
         if tbest:
             # prune frontier rows strictly above their query's best target
             # distance (reference first-pop semantics, see docstring)
             keep = keep & (_dist <= F.coalesce(_by_qid(tbest), F.lit(float("inf"))))
-        f = state.filter(keep)
-        if sinks is not None:
-            f = f.join(F.broadcast(sinks), ["qid", "node"], "left_anti")
-        msgs = f.join(edges_w, _msg_jcond).select(*_msg_proj)
-        if _cut_bcast is not None:
-            msgs = msgs.join(_cut_bcast, "qid").filter(_dist <= F.col("cutoff"))
+        msgs = state.filter(keep).join(edges_w, _msg_jcond).select(*_msg_proj)
         new_state, metrics = _merge(state, msgs)
         if _hits_metric is not None:
             metrics["hits"] = _hits_metric
@@ -245,12 +246,25 @@ def source_seeds(edges_w: DataFrame, sources: DataFrame) -> DataFrame:
     )
 
 
-def _by_qid(values: dict[int, float]) -> Column:
+def _by_qid(values: Mapping[int, float]) -> Column:
     """``values[qid]`` (null if absent) from one literal map in SQL text:
     one py4j call, where ``create_map`` over ``F.lit``s makes three per
     entry (500 entries: ~0.9 s vs ~1 ms, 4-vCPU host). ``repr`` round-trips doubles."""
     entries = ", ".join(f"{q}L, {d!r}D" for q, d in values.items())
     return F.expr(f"map({entries})[qid]")
+
+
+def _literal_in(expr: str, values: Iterable) -> Column:
+    """``expr IN (values)`` from one literal set in SQL text, where
+    ``Column.isin`` makes one py4j literal per value. Values are ids, or
+    tuples of ids matched against a parenthesized ``expr``; past ten values
+    the optimizer makes the ``In`` a hash-set lookup. An empty set is
+    false."""
+    lits = [
+        f"({', '.join(f'{x}L' for x in v)})" if isinstance(v, tuple) else f"{v}L"
+        for v in values
+    ]
+    return F.expr(f"{expr} IN ({', '.join(lits)})") if lits else F.lit(False)
 
 
 def _chain(prev_of: dict[int, int], end: int, start: int) -> list[int]:
@@ -575,10 +589,7 @@ def shortest_paths(
     seeds = source_seeds(
         edges_w, local_df(spark, [(0, sid, float(init_offset))], "qid long, sid long, ioff double")
     )
-    sinks_df = (
-        local_df(spark, [(0, s) for s in sink_ids], "qid long, node long") if sink_ids else None
-    )
-    state = bounded_sssp(spark, edges_w, seeds, float(cutoff), sinks_df)
+    state = bounded_sssp(spark, edges_w, seeds, float(cutoff), sink_ids)
     gen.state = state.drop("qid")
     return gen
 
@@ -632,14 +643,15 @@ def shortest_paths_pairs(
     parity): seeds for all queries are built with one edges join, the
     label-correcting kernel relaxes all qids together, and one collect of
     the rows up to each target's distance feeds every path walk
-    (``walk_chains``). When every query shares one cutoff, the kernel
-    gets it as a scalar instead of a per-qid table.
+    (``walk_chains``). The cutoffs, sinks and target pairs reach the
+    kernel as plan literals.
     """
     lm = graph.lengths_map
     nm = graph.names_map
     scale = graph.scale
     results: dict[int, Optional[PathResult]] = {}
-    live: list[tuple[int, int, int, float, float]] = []  # qid, sid, tid, inner_cutoff, delta
+    live: list[tuple[int, int, int]] = []  # qid, sid, tid
+    cutoffs: dict[int, float] = {}  # qid -> cutoff less delta
     meta: dict[int, tuple] = {}
     sink_ids = {graph.node_id(s) for s in (sinks or [])} - {None}
 
@@ -674,42 +686,32 @@ def shortest_paths_pairs(
             delta += lm[sid] - source_offset
         if target_offset is not None:
             delta += target_offset
-        live.append((qid, sid, tid, float(cutoff - delta), delta))
-        meta[qid] = (source_offset, target_offset)
+        live.append((qid, sid, tid))
+        cutoffs[qid] = float(cutoff - delta)
+        meta[qid] = (source_offset, target_offset, delta)
 
     if not live:
         return results
     spark = graph.spark
-    qdf = local_df(spark, live, "qid long, sid long, tid long, cutoff double, delta double")
-    seeds = source_seeds(graph.edges_w, qdf.select("qid", "sid", F.lit(0.0).alias("ioff")))
-    inner = {c for _, _, _, c, _ in live}
-    cutoffs = inner.pop() if len(inner) == 1 else qdf.select("qid", "cutoff")
-    sinks_df = None
-    if sink_ids:
-        sinks_df = local_df(
-            spark, [(q[0], s) for q in live for s in sink_ids], "qid long, node long"
-        )
-    result = _run_sssp(
-        spark,
+    seeds = source_seeds(
         graph.edges_w,
-        seeds,
-        cutoffs,
-        sinks_df,
-        targets=qdf.select("qid", F.col("tid").alias("node")),
+        local_df(spark, [(q, s, 0.0) for q, s, _ in live], "qid long, sid long, ioff double"),
+    )
+    result = _run_sssp(
+        spark, graph.edges_w, seeds, cutoffs, sink_ids, targets=[(q, t) for q, _, t in live]
     )
     # the last superstep's hits are the converged state's target rows
     hit_rows = {h["qid"]: h["dist"] for h in result.metrics[-1]["hits"]}
     chains = {}
     if hit_rows:
         chains = walk_chains(
-            result.state, {q: (s, t, hit_rows[q]) for q, s, t, _, _ in live if q in hit_rows}
+            result.state, {q: (s, t, hit_rows[q]) for q, s, t in live if q in hit_rows}
         )
     _free_checkpoint(result.state)
-    delta_of = {q: d for q, _, _, _, d in live}
     for qid, chain in chains.items():
-        so, to = meta[qid]
+        so, to, delta = meta[qid]
         nodes = [nm[i] for i in reversed(chain)]
         results[qid] = PathResult(
-            hit_rows[qid] + delta_of[qid], nodes, so, to
+            hit_rows[qid] + delta, nodes, so, to
         ).round(scale).with_graph(graph)
     return results

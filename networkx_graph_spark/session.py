@@ -112,6 +112,12 @@ def local_df(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
 # - connected components keep AQE: 16.9 s with it vs 41.2 s without at
 #   bench scale.
 # - zigzag keeps AQE: no workload measures it.
+# - path enumeration (``paths._enumerate_paths``) keeps AQE. With it off a
+#   call runs fewer jobs but takes longer: 10 alternating warm pairs,
+#   local[4], 4 shuffle partitions, AQE on vs off: graph1
+#   ``all_paths_from(w1, 60)`` 39 vs 16 jobs, 2.92 vs 3.27 s median (off
+#   slower in 10/10); a 6x6 grid, 112 paths, 63 vs 25 jobs, 7.41 vs
+#   16.49 s (off slower in 10/10).
 KERNEL_CONF: dict[str, dict[str, str]] = {
     "pagerank": {"spark.sql.adaptive.enabled": "false"},
     "sssp": {"spark.sql.adaptive.enabled": "false"},

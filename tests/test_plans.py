@@ -195,17 +195,74 @@ def test_point_query_non_adaptive_supersteps(spark, graph1, monkeypatch):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_pairs_supersteps_scan_no_driver_tables(spark, graph1, monkeypatch):
-    """A two-pair batch carries its target pairs and its prune bound into
-    the supersteps as plan literals: no superstep's executed plan scans a
-    driver-built table, and with broadcast jobs counted the batch costs one
-    seed broadcast, one init checkpoint, one checkpoint and one edge
-    broadcast per superstep, and one chain collect."""
+_PAIRS = [("w1", "w7", 100.0), ("w3", "w6", 100.0)]
+
+
+def _paths_of(results):
+    return [None if p is None else (p.dist, p.nodes, p.binding) for p in results]
+
+
+def _pairs(g):
     from networkx_graph_spark.operators.sssp import shortest_paths_pairs
+
+    return _paths_of(shortest_paths_pairs(g, _PAIRS).values())
+
+
+def _pairs_mixed_cutoffs(g):
+    from networkx_graph_spark.operators.sssp import shortest_paths_pairs
+
+    return _paths_of(shortest_paths_pairs(g, [_PAIRS[0], ("w3", "w6", 90.0)]).values())
+
+
+def _pairs_sinks(g):
+    from networkx_graph_spark.operators.sssp import shortest_paths_pairs
+
+    return _paths_of(shortest_paths_pairs(g, _PAIRS, sinks=["w2"]).values())
+
+
+def _tree_sinks(g):
+    from networkx_graph_spark.operators.sssp import shortest_paths
+
+    return sorted(shortest_paths(g, "w1", 100.0, sinks=["w2"]).dists().items())
+
+
+def _first_binding(g):
+    from networkx_graph_spark.operators.bindings import (
+        encode_bindings,
+        shortest_path_to_bindings,
+    )
+
+    b = encode_bindings(g, {"w7": [(3, 4, "obj")]})
+    return _paths_of(shortest_path_to_bindings(g, "w3", 50.0, b, direction=1))
+
+
+_W1_W7 = (30.0, ["w1", "w2", "w5", "w7"], None)
+_W3_W6 = (20.0, ["w3", "w4", "w6"], None)
+
+
+@pytest.mark.parametrize(
+    "query, want",
+    [
+        (_pairs, [_W1_W7, _W3_W6]),
+        (_pairs_mixed_cutoffs, [_W1_W7, _W3_W6]),
+        (_pairs_sinks, [(33.0, ["w1", "w3", "w4", "w6", "w7"], None), _W3_W6]),
+        (_tree_sinks, [("w2", 0.0), ("w3", 0.0), ("w4", 10.0), ("w6", 30.0), ("w7", 33.0)]),
+        (_first_binding, [None, (26.0, ["w3", "w4", "w6", "w7"], ("w7", (3.0, 4.0, "obj")))]),
+    ],
+    ids=["pairs", "pairs_mixed_cutoffs", "pairs_sinks", "tree_sinks", "first_binding"],
+)
+def test_pairs_supersteps_scan_no_driver_tables(spark, graph1, monkeypatch, query, want):
+    """A query batch carries its cutoffs, sinks, target pairs and prune
+    bound into the supersteps as plan literals: no SSSP superstep's
+    executed plan scans a driver-built table, and with broadcast jobs
+    counted a call costs one seed broadcast, one init checkpoint, one
+    checkpoint and one edge broadcast per superstep, and one collect
+    (the chain walk, or the tree's distances)."""
     from networkx_graph_spark.plans.supersteps import SuperstepRunner
 
     # pre-warm the graph's lazy one-time builds
     graph1.edges_w
+    graph1.edges_w_rev
     graph1.names_map
     graph1.lengths_map
     plans: list[tuple[str, str]] = []
@@ -224,24 +281,19 @@ def test_pairs_supersteps_scan_no_driver_tables(spark, graph1, monkeypatch):
 
     monkeypatch.setattr(SuperstepRunner, "_materialize", captured)
     monkeypatch.setattr(SuperstepRunner, "run", counted_run)
-    pairs = [("w1", "w7", 100.0), ("w3", "w6", 100.0)]
-    got = shortest_paths_pairs(graph1, pairs)
-    assert [(p.dist, p.nodes) for p in got.values()] == [
-        (30.0, ["w1", "w2", "w5", "w7"]),
-        (20.0, ["w3", "w4", "w6"]),
-    ]
+    assert query(graph1) == want
     sssp_plans = [plan for name, plan in plans if name == "sssp"]
     assert len(sssp_plans) > 1
     for plan in sssp_plans:
         assert "LocalTableScan" not in plan, plan
 
     supersteps.clear()
-    jobs = _count_jobs(spark, lambda: shortest_paths_pairs(graph1, pairs), broadcasts=True)
+    jobs = _count_jobs(spark, lambda: query(graph1), broadcasts=True)
     assert len(supersteps) == 1, supersteps
     budget = 1 + 1 + 2 * supersteps[0] + 1
     assert jobs <= budget, (
         f"expected <= 1 seed broadcast + 1 init + 2 x {supersteps[0]} supersteps"
-        f" + 1 chain collect = {budget} jobs, got {jobs}"
+        f" + 1 collect = {budget} jobs, got {jobs}"
     )
 
 
@@ -477,7 +529,11 @@ def test_no_parallelized_tables_on_the_query_path():
     tables with ``session.local_df`` (a LocalRelation), never with
     ``createDataFrame`` over a Python list, whose every scan starts Python
     workers. Graph constructors and the contract's oracle tables are
-    one-time inputs, not query-path tables."""
+    one-time inputs, not query-path tables. In the operators the one
+    broadcast driver table is the SSSP seed sources
+    (``sssp.source_seeds``); every other query input is a plan literal,
+    and nothing is cross-joined."""
+    import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "networkx_graph_spark"
@@ -487,3 +543,13 @@ def test_no_parallelized_tables_on_the_query_path():
         str(p.relative_to(pkg)) for p in paths if "createDataFrame(" in p.read_text()
     ]
     assert found == [], found
+
+    texts = {p.name: p.read_text() for p in sorted((pkg / "operators").glob("*.py"))}
+    assert [n for n, text in texts.items() if "crossJoin(" in text] == []
+    counts = {n: text.count("F.broadcast(") for n, text in texts.items()}
+    assert {n: c for n, c in counts.items() if c} == {"sssp.py": 1}, counts
+    seeds = next(
+        fn for fn in ast.parse(texts["sssp.py"]).body
+        if isinstance(fn, ast.FunctionDef) and fn.name == "source_seeds"
+    )
+    assert "F.broadcast(" in ast.get_source_segment(texts["sssp.py"], seeds)

@@ -149,21 +149,24 @@ def test_zigzag_matches_oracle(spark, graph, direction, cutoff_k):
     g.unpersist()
 
 
-def _pairs_oracle(length, edges, ids, source, target, cutoff):
-    """One ``shortest_paths_pairs`` answer (no offsets, no sinks) as
-    ``(dist, nodes)`` or None: a node-length fixpoint with the kernel's
+def _pairs_oracle(length, edges, ids, source, target, cutoff, sinks=()):
+    """One ``shortest_paths_pairs`` answer (no offsets) as ``(dist, nodes)``
+    or None: a node-length fixpoint with the kernel's
     ``(dist, prev_dist, prev)`` tie-break -- relaxing out of ``a`` adds
     ``length[a]``, the source's successors are seeded at 0 with
-    ``prev_dist = -inf`` -- and the target's chain walked from the prev
-    map. ``ids`` gives the node ids the kernel breaks ties on."""
+    ``prev_dist = -inf``, a sink is reached but never relaxes out, and a
+    sink source seeds nothing -- and the target's chain walked from the
+    prev map. ``ids`` gives the node ids the kernel breaks ties on."""
     if source == target:
         return 0.0, [source]
+    if source in sinks:
+        return None
     best = {b: (0.0, NEG_INF, ids[source], source) for a, b in edges if a == source}
     changed = True
     while changed:
         changed = False
         for a, b in edges:
-            if a not in best:
+            if a not in best or a in sinks:
                 continue
             da = best[a][0]
             nd = da + length[a]
@@ -200,9 +203,12 @@ _TIE = (
 # predecessors, and the (dist, prev_dist, prev) rule picks n1 for n2 where
 # the reference keeps its first setter n3 (a known divergence, see
 # ROADMAP). Both walks end at the repeat, so n0 -> n2 answers [n1, n2].
-@example(graph=_LOOP, picks=[(0, 3, 8), (1, 3, 0), (2, 1, 6)], shared=False)
-@example(graph=_LOOP, picks=[(0, 3, 6), (1, 3, 6), (2, 1, 6)], shared=True)
-@example(graph=_TIE, picks=[(0, 2, 8), (3, 1, 8)], shared=True)
+# With sink_picks=[2], n2 is a sink: n1 -> n3 reaches it and stops, and
+# n2 -> n0 has a sink source.
+@example(graph=_LOOP, picks=[(0, 3, 8), (1, 3, 0), (2, 1, 6)], shared=False, sink_picks=[])
+@example(graph=_LOOP, picks=[(0, 3, 6), (1, 3, 6), (2, 1, 6)], shared=True, sink_picks=[])
+@example(graph=_TIE, picks=[(0, 2, 8), (3, 1, 8)], shared=True, sink_picks=[])
+@example(graph=_LOOP, picks=[(1, 3, 8), (2, 0, 8), (0, 2, 4)], shared=False, sink_picks=[2])
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     graph=node_weighted_graphs,
@@ -212,14 +218,15 @@ _TIE = (
         max_size=3,
     ),
     shared=st.booleans(),
+    sink_picks=st.lists(st.integers(0, 5), max_size=2),
 )
-def test_pairs_match_oracle(spark, graph, picks, shared):
+def test_pairs_match_oracle(spark, graph, picks, shared, sink_picks):
     """One ``shortest_paths_pairs`` batch against ``_pairs_oracle`` on
     node-weighted graphs whose lengths include 0: targets tie at exactly
     their distance and zero-length interiors occur. ``shared`` gives every
     pair the first pair's cutoff (the kernel's scalar cutoff); otherwise
-    cutoffs mix (the per-qid cutoff table). Graph build and batch run at
-    two shuffle-partition counts."""
+    cutoffs mix (a per-qid cutoff map). Every pair shares the drawn sinks.
+    Graph build and batch run at two shuffle-partition counts."""
     from networkx_graph_spark.graph import SparkDiGraph
     from networkx_graph_spark.operators.sssp import shortest_paths_pairs
     from networkx_graph_spark.session import kernel_conf
@@ -231,13 +238,14 @@ def test_pairs_match_oracle(spark, graph, picks, shared):
         (nodes[s % len(nodes)][0], nodes[t % len(nodes)][0], (picks[0][2] if shared else k) * 0.5)
         for s, t, k in picks
     ]
+    sinks = sorted({nodes[i % len(nodes)][0] for i in sink_picks})
     for parts in ("1", "3"):
         with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
             g = SparkDiGraph.from_lists(spark, nodes, edges)
             ids = {n: g.node_id(n) for n, _ in nodes}
-            got = shortest_paths_pairs(g, pairs)
+            got = shortest_paths_pairs(g, pairs, sinks=sinks)
             for qid, (source, target, cutoff) in enumerate(pairs):
-                want = _pairs_oracle(length, edges, ids, source, target, cutoff)
+                want = _pairs_oracle(length, edges, ids, source, target, cutoff, sinks)
                 p = got[qid]
                 assert (None if p is None else (p.dist, p.nodes)) == want, (parts, pairs[qid])
             g.unpersist()
@@ -467,4 +475,128 @@ def test_all_paths_match_oracle(
             b = encode_bindings(g, raw)
             got_b = all_paths_to_bindings(g, source, cutoff, b, offset=so, sinks=sinks)
             assert [rows(d) for d in got_b] == want_b, parts
+            g.unpersist()
+
+
+def _first_binding_oracle(length, edges, ids, source, offset, cutoff, bindings, sinks, reverse):
+    """One direction of one ``shortest_path_to_bindings`` answer by the
+    bindings.py rules, as ``(dist, nodes, start offset, end offset,
+    binding)`` or None: the same-node fast path; else a node-length
+    fixpoint from the source's successors at the raw offset cost, with the
+    kernel's ``(dist, prev_dist, prev)`` tie-break, in which sinks and
+    binding nodes other than the source never relax out; then Dijkstra's
+    first pop, ``argmin (dist, node id)`` over the binding nodes past the
+    source within the cutoff, which answers None when its offset cost
+    breaks the cutoff (no fallthrough to the next one)."""
+    blist = bindings.get(source)
+    if offset is not None and blist:
+        for t in (reversed(blist) if reverse else blist):
+            if (t[1] <= offset) if reverse else (t[0] >= offset):
+                dist = offset - t[1] if reverse else t[0] - offset
+                so, eo = (t[1], offset) if reverse else (offset, t[0])
+                return (dist, [source], so, eo, (source, t)) if dist <= cutoff else None
+    if source in sinks:
+        return None
+    init = 0.0
+    if offset is not None:
+        init = offset if reverse else length[source] - offset
+    succ = _succ(edges, reverse)
+    barrier = (set(sinks) | set(bindings)) - {source}
+    best = {b: (init, NEG_INF, ids[source], source) for b in succ.get(source, [])}
+    changed = True
+    while changed:
+        changed = False
+        for a in sorted(best):
+            if a in barrier or best[a][0] + length[a] > cutoff:
+                continue
+            da = best[a][0]
+            cand = (da + length[a], da, ids[a], a)
+            for b in succ.get(a, []):
+                if b not in best or cand < best[b]:
+                    best[b] = cand
+                    changed = True
+    reached = [(best[n][0], ids[n], n) for n in best if n in bindings and n != source]
+    reached = [r for r in reached if r[0] <= cutoff]
+    if not reached:
+        return None
+    dist, _, u = min(reached)
+    t = bindings[u][-1] if reverse else bindings[u][0]
+    c = _clip(t[1] if reverse else t[0], length[u])
+    total = dist + (length[u] - c if reverse else c)
+    if total > cutoff:
+        return None
+    chain = [u]
+    while chain[-1] != source and best[chain[-1]][3] not in chain:
+        chain.append(best[chain[-1]][3])
+    if reverse:
+        return total, chain, c, offset, (u, t)
+    return total, chain[::-1], offset, c, (u, t)
+
+
+# _LOOP with bindings on n0 and n3: the n0 query walks the cycle back to
+# its own binding source (never its answer, never its barrier) and on to
+# n3; for the n1 query n0 is a binding node of another query's source.
+@example(
+    graph=_LOOP, starts=[(0, None), (1, None)], cutoff_k=12, sink_picks=[],
+    binding_picks=[(0, 0.5, 0.5), (3, 0.0, 0.5)],
+)
+@example(
+    graph=_LOOP, starts=[(0, 2.0), (2, 0.5), (1, None)], cutoff_k=8, sink_picks=[3],
+    binding_picks=[(0, 0.5, 0.0), (2, 0.0, 1.0)],
+)
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    graph=node_weighted_graphs,
+    starts=st.lists(st.tuples(st.integers(0, 5), st.none() | _halves), min_size=2, max_size=3),
+    cutoff_k=st.integers(0, 16),
+    sink_picks=st.lists(st.integers(0, 5), max_size=2),
+    binding_picks=st.lists(
+        st.tuples(st.integers(0, 5), _halves, _halves), min_size=1, max_size=4
+    ),
+)
+def test_shortest_to_bindings_match_oracle(
+    spark, graph, starts, cutoff_k, sink_picks, binding_picks
+):
+    """A ``shortest_path_to_bindings_pairs`` batch in both directions
+    against ``_first_binding_oracle``, comparing every answer's (dist,
+    nodes, start offset, end offset, binding), at two shuffle-partition
+    counts. Offsets may exceed a node's length: the graph search seeds at
+    the raw offset."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.bindings import (
+        encode_bindings,
+        shortest_path_to_bindings_pairs,
+    )
+    from networkx_graph_spark.session import kernel_conf
+
+    nodes, edges = graph
+    assume(edges)
+    length = dict(nodes)
+    names = [n for n, _ in nodes]
+    queries = [(names[i % len(names)], off) for i, off in starts]
+    cutoff = cutoff_k * 0.5
+    sinks = sorted({names[i % len(names)] for i in sink_picks})
+    raw: dict[str, list] = {}
+    for j, (i, lo, hi) in enumerate(binding_picks):
+        raw.setdefault(names[i % len(names)], []).append((lo, lo + hi, f"b{j}"))
+    bindings = {n: sorted(lst, key=lambda t: (t[0], t[1])) for n, lst in raw.items()}
+
+    def row(p):
+        return None if p is None else (p.dist, p.nodes, p.start_offset, p.end_offset, p.binding)
+
+    for parts in ("1", "3"):
+        with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            g = SparkDiGraph.from_lists(spark, nodes, edges)
+            ids = {n: g.node_id(n) for n in names}
+            got = shortest_path_to_bindings_pairs(
+                g, queries, cutoff, encode_bindings(g, raw), direction=0, sinks=sinks
+            )
+            for (source, off), (bwd, fwd) in zip(queries, got):
+                want = [
+                    _first_binding_oracle(
+                        length, edges, ids, source, off, cutoff, bindings, sinks, rev
+                    )
+                    for rev in (True, False)
+                ]
+                assert [row(bwd), row(fwd)] == want, (parts, source, off)
             g.unpersist()

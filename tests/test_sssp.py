@@ -300,7 +300,7 @@ def test_p2p_bounded_sssp_resume_parity(spark, tmp_path):
         [(0, 0, 0.0, -1, NEG_INF), (1, 20, 0.0, -1, NEG_INF)],
         "qid long, node long, dist double, prev long, prev_dist double",
     )
-    targets = spark.createDataFrame([(0, 1), (1, 22)], "qid long, node long")
+    targets = [(0, 1), (1, 22)]
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = str(tmp_path / "ckp")
 
