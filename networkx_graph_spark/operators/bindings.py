@@ -17,8 +17,9 @@ replicated exactly:
 - graph search: Dijkstra that stops at the first *popped* binding node
   (:1552-1582). Because Dijkstra pops in (dist, node) order and binding
   nodes never relax out, this equals a p2p batch of the bounded SSSP
-  kernel: each query's targets are the binding nodes other than its
-  source, the sinks and binding nodes are the barrier, and the first pop
+  kernel: each query's targets are the binding-node set less its own
+  source, ``node IN B AND node != src_of[qid]`` (a literal of |B| + |Q|
+  values), the sinks and binding nodes are the barrier, and the first pop
   is ``argmin (dist, node)`` over the last record's target hits within
   the cutoff. Only then the total-cost check
   ``dist + binding_offset_cost <= cutoff`` applies (if the first binding
@@ -31,22 +32,28 @@ replicated exactly:
   (already forward order) with start/end offsets swapped (:1617-1629).
 - ``all_paths_to_bindings`` enumerates with the all-paths loop
   (``paths._enumerate_paths``): the binding nodes are its ``targets``, so
-  a path stops at the first binding node past the source and is kept
-  with its length before that node; the seed length is the source's
-  offset cost (clipped offset, :1816). Each hit then pays its binding
-  offset cost and is dropped when the total exceeds the cutoff.
+  a path stops at the first binding node past the source; the seed
+  length is the source's offset cost (clipped offset, :1816). A hit pays
+  its binding offset cost as its stop cost and is kept, with its length
+  before that node, when the total fits the cutoff.
+- ``with_endings`` (:1910-1993) adds the ``all_paths_from``/``all_paths_to``
+  paths no kept binding path prefixes, with synthetic ``(off, off, None)``
+  bindings at their far end. The same loop emits them (the endings rule
+  in ``paths``); the driver keeps only the root cases.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
+from pyspark.sql import functions as F
+
 from ..graph import SparkDiGraph
 from ..plans.supersteps import _free_checkpoint
 from ..rounding import clip
 from ..session import local_df
-from .paths import _enumerate_paths, all_paths_from, all_paths_to
-from .sssp import PathResult, _run_sssp, source_seeds, walk_chains
+from .paths import _enumerate_paths, _origin, _to_results
+from .sssp import PathResult, _by_qid, _literal_in, _run_sssp, source_seeds, walk_chains
 
 Binding = tuple[float, float, object]
 
@@ -154,10 +161,12 @@ def _shortest_many(
     # The source's own binding is no target, and the barrier need not
     # exempt it (/root/reference/src/main.cpp:1540-1545): a re-reach of
     # the source has dist >= its seeds' offset, so what it would send
-    # never beats a seed label.
+    # never beats a seed label. The target test is one binding-node set
+    # and one source per query, not a (query, node) pair set.
+    src_of = _by_qid({q: sid for q, sid, _ in pend})
     result = _run_sssp(
         spark, edges_w, seeds, float(cutoff), sink_ids | binding_nodes,
-        targets=[(q, n) for q, sid, _ in pend for n in binding_nodes if n != sid],
+        is_target=_literal_in("node", binding_nodes) & (F.col("node") != src_of),
     )
     # Dijkstra's first pop (/root/reference/src/main.cpp:1552-1582) is
     # ``argmin (dist, node)`` over the reached binding nodes within the
@@ -260,64 +269,6 @@ def distance_to_bindings(
     return (bwd.dist if bwd else None, fwd.dist if fwd else None)
 
 
-def _enumerate_to_bindings(
-    graph: SparkDiGraph,
-    sid: int,
-    offset: Optional[float],
-    cutoff: float,
-    b: dict[int, list[Binding]],
-    sink_ids: set[int],
-    reverse: bool,
-) -> list[PathResult]:
-    """__all_path_to_bindings__ (/root/reference/src/main.cpp:1760-1908):
-    the same-node fast path, then ``paths._enumerate_paths`` with the
-    binding nodes as its targets, seeded at the source's offset cost."""
-    nm = graph.names_map
-    lm = graph.lengths_map
-    blist = b.get(sid)
-    if offset is not None and blist:
-        matched, p = _same_node(offset, blist, reverse, cutoff, nm[sid])
-        if matched:
-            return [p.round(graph.scale).with_graph(graph)] if p is not None else []
-    if sid in sink_ids:
-        return []
-    init_offset = 0.0
-    clipped = offset
-    if offset is not None:
-        clipped = clip(0.0, offset, lm[sid])  # clipped HERE (:1816)
-        init_offset = clipped if reverse else lm[sid] - clipped
-        if init_offset > cutoff:
-            return []
-    found = _enumerate_paths(
-        graph, sid, cutoff, reverse, sink_ids,
-        targets={n for n, lst in b.items() if lst}, seed_length=init_offset,
-    )
-    out = []
-    for nodes, length, _ in found:
-        tail = nodes[-1]
-        tl = lm[tail]
-        if not reverse:
-            t = b[tail][0]
-            c = clip(0.0, t[0], tl)
-            if length + c > cutoff:
-                continue
-            p = PathResult(length + c, [nm[i] for i in nodes], clipped, c)
-            p.binding = (nm[tail], t)
-        else:
-            t = b[tail][-1]
-            c = clip(0.0, t[1], tl)
-            if length + (tl - c) > cutoff:
-                continue
-            # reverse: reverse node list + swap offsets (:1898-1902)
-            p = PathResult(
-                length + (tl - c), [nm[i] for i in reversed(nodes)], c, clipped
-            )
-            p.binding = (nm[tail], t)
-        out.append(p.round(graph.scale).with_graph(graph))
-    out.sort(key=lambda p: (p.dist, p.nodes))
-    return out
-
-
 def all_paths_to_bindings(
     graph: SparkDiGraph,
     source: str,
@@ -332,46 +283,58 @@ def all_paths_to_bindings(
     if cutoff < 0:
         return [], []
     sid = graph.node_id(source)
-    if sid is None or sid not in graph.lengths_map:
+    nm = graph.names_map
+    lm = graph.lengths_map
+    if sid is None or sid not in lm:
         return [], []
     sink_ids = {graph.node_id(s) for s in (sinks or [])} - {None}
-    sink_names = [s for s in (sinks or [])]
+    blist = bindings.get(sid)
 
     def one(reverse: bool) -> list[PathResult]:
-        paths = _enumerate_to_bindings(
-            graph, sid, offset, cutoff, bindings, sink_ids, reverse
+        # __all_path_to_bindings__ (:1760-1908), with endings (:1910-1993)
+        # binding nodes' stop costs (:1557-1581); nodes off the graph are never reached
+        targets = {
+            u: _binding_cost(lm, bindings, u, reverse)[0]
+            for u, lst in bindings.items() if lst and u in lm
+        }
+        if offset is not None and blist:
+            matched, p = _same_node(offset, blist, reverse, cutoff, nm[sid])
+            if p is not None:
+                # the single-node binding path prefixes every ending
+                return [p.round(graph.scale).with_graph(graph)]
+            if matched:
+                targets = None
+        if sid in sink_ids:
+            targets = None
+        seed, clipped = 0.0, offset
+        if offset is not None:
+            clipped = clip(0.0, offset, lm[sid])  # clipped HERE (:1816)
+            seed = clipped if reverse else lm[sid] - clipped
+        delta, so, ending_cutoff, endings = (
+            _origin(graph, sid, cutoff, offset, reverse) if with_endings else (0.0, None, None, [])
         )
-        if not with_endings:
-            return paths
-        # append cutoff/dead-end paths not prefixed/suffixed by a binding
-        # path, with synthetic (off, off, None) bindings (:1910-1993)
-        if not reverse:
-            endings = all_paths_from(graph, source, cutoff, offset, sink_names)
-            kept = []
-            for ep in endings:
-                if any(
-                    len(bp.nodes) <= len(ep.nodes)
-                    and ep.nodes[: len(bp.nodes)] == bp.nodes
-                    for bp in paths
-                ):
-                    continue
-                off = ep.end_offset
-                ep.binding = (ep.nodes[-1], (off, off, None))
-                kept.append(ep)
-        else:
-            endings = all_paths_to(graph, source, cutoff, offset, sink_names)
-            kept = []
-            for ep in endings:
-                if any(
-                    len(bp.nodes) <= len(ep.nodes)
-                    and ep.nodes[-len(bp.nodes):] == bp.nodes
-                    for bp in paths
-                ):
-                    continue
-                off = ep.start_offset
-                ep.binding = (ep.nodes[0], (off, off, None))
-                kept.append(ep)
-        return paths + kept
+        rows = _enumerate_paths(graph, sid, reverse, sink_ids, targets, cutoff, seed, ending_cutoff)
+        out = []
+        for nodes, length, eo in rows:
+            if eo is not None:
+                continue
+            tail = nodes[-1]
+            cost, t, c = _binding_cost(lm, bindings, tail, reverse)
+            if not reverse:
+                p = PathResult(length + cost, [nm[i] for i in nodes], clipped, c)
+            else:
+                # reverse: reverse node list + swap offsets (:1898-1902)
+                p = PathResult(length + cost, [nm[i] for i in reversed(nodes)], c, clipped)
+            p.binding = (nm[tail], t)
+            out.append(p.round(graph.scale).with_graph(graph))
+        out.sort(key=lambda p: (p.dist, p.nodes))
+        if ending_cutoff is not None:
+            endings = _to_results(graph, [r for r in rows if r[2] is not None], delta, so, reverse)
+        # endings carry a synthetic (off, off, None) binding at their far end
+        for ep in endings:
+            end, off = (ep.nodes[0], ep.start_offset) if reverse else (ep.nodes[-1], ep.end_offset)
+            ep.binding = (end, (off, off, None))
+        return out + endings
 
     fwd = one(False) if direction >= 0 else []
     bwd = one(True) if direction <= 0 else []

@@ -137,7 +137,8 @@ def bounded_sssp(
     comes from the reloaded record of the checkpointed superstep.
     """
     return _run_sssp(
-        spark, edges_w, seeds, cutoffs, sinks, max_iter, payload_cols, targets,
+        spark, edges_w, seeds, cutoffs, sinks, max_iter, payload_cols,
+        None if targets is None else _literal_in("(qid, node)", targets),
         runner, name, resume,
     ).state
 
@@ -150,14 +151,15 @@ def _run_sssp(
     sinks: Optional[Iterable[int]] = None,
     max_iter: int = 10_000,
     payload_cols: Sequence[str] = (),
-    targets: Optional[Iterable[tuple[int, int]]] = None,
+    is_target: Optional[Column] = None,
     runner=None,
     name: str = "sssp",
     resume: bool = False,
 ) -> SuperstepResult:
     """``bounded_sssp`` returning the runner's result: the converged state
     (projected to the state columns) plus the per-superstep records, whose
-    last ``hits`` are the final target rows."""
+    last ``hits`` are the final target rows. ``is_target`` is the target
+    test as one Column over the state's ``qid`` and ``node``."""
     pl = list(payload_cols)
     # payload names must be disjoint from the edge columns (the hoisted
     # name-resolved message projection below) and from the state columns
@@ -194,9 +196,8 @@ def _run_sssp(
         _front = _new & ~_literal_in("node", sinks)
     _merge = min_label_merge(["qid", "node"], key)
     _hits_metric = None
-    if targets is not None:
-        _is_tgt = _literal_in("(qid, node)", targets)
-        _hits_metric = F.collect_list(F.when(_is_tgt, F.struct(_qid, F.col("node"), _dist)))
+    if is_target is not None:
+        _hits_metric = F.collect_list(F.when(is_target, F.struct(_qid, F.col("node"), _dist)))
 
     def step(state: DataFrame, i: int, prev):
         # the previous record's hits are every target row of ``state``;
@@ -246,12 +247,15 @@ def source_seeds(edges_w: DataFrame, sources: DataFrame) -> DataFrame:
     )
 
 
-def _by_qid(values: Mapping[int, float]) -> Column:
-    """``values[qid]`` (null if absent) from one literal map in SQL text:
+def _by_qid(values: Mapping[int, Union[int, float]], key: str = "qid") -> Column:
+    """``values[key]`` (null if absent) from one literal map in SQL text:
     one py4j call, where ``create_map`` over ``F.lit``s makes three per
-    entry (500 entries: ~0.9 s vs ~1 ms, 4-vCPU host). ``repr`` round-trips doubles."""
-    entries = ", ".join(f"{q}L, {d!r}D" for q, d in values.items())
-    return F.expr(f"map({entries})[qid]")
+    entry (500 entries: ~0.9 s vs ~1 ms, 4-vCPU host). Int values are
+    longs, others doubles; ``repr`` round-trips doubles."""
+    entries = ", ".join(
+        f"{q}L, {v!r}{'L' if isinstance(v, int) else 'D'}" for q, v in values.items()
+    )
+    return F.expr(f"map({entries})[{key}]")
 
 
 def _literal_in(expr: str, values: Iterable) -> Column:
@@ -698,7 +702,8 @@ def shortest_paths_pairs(
         local_df(spark, [(q, s, 0.0) for q, s, _ in live], "qid long, sid long, ioff double"),
     )
     result = _run_sssp(
-        spark, graph.edges_w, seeds, cutoffs, sink_ids, targets=[(q, t) for q, _, t in live]
+        spark, graph.edges_w, seeds, cutoffs, sink_ids,
+        is_target=_literal_in("(qid, node)", [(q, t) for q, _, t in live]),
     )
     # the last superstep's hits are the converged state's target rows
     hit_rows = {h["qid"]: h["dist"] for h in result.metrics[-1]["hits"]}

@@ -297,6 +297,73 @@ def test_pairs_supersteps_scan_no_driver_tables(spark, graph1, monkeypatch, quer
     )
 
 
+def _set_literal_values(expr) -> int:
+    """Values held in the literal sets of a Catalyst expression: ``InSet``
+    and ``In`` lists, map literals and literal ``map(...)`` calls."""
+    kind = expr.getClass().getSimpleName()
+    kids = expr.children()
+    n = 0
+    if kind == "InSet":
+        n = expr.hset().size()
+    elif kind == "In":
+        n = expr.list().size()
+    elif kind == "CreateMap":
+        n = kids.size() // 2
+    elif kind == "Literal" and expr.dataType().typeName() == "map":
+        n = expr.value().numElements()
+    return n + sum(_set_literal_values(kids.apply(i)) for i in range(kids.size()))
+
+
+def test_bindings_target_literal_grows_with_queries_plus_bindings(spark, monkeypatch):
+    """A bindings batch's target test is one binding-node set and one
+    source per query, so the literal in an SSSP superstep's ``hits``
+    metric holds at most |Q| + |B| values, not one per (query, binding
+    node) pair. Sources v10..v19 are binding nodes themselves, whose own
+    binding is no target: each finds the next one."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.bindings import (
+        encode_bindings,
+        shortest_path_to_bindings_pairs,
+    )
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    names = [f"v{i}" for i in range(70)]
+    g = SparkDiGraph.from_lists(
+        spark, [(n, 1.0) for n in names], list(zip(names, names[1:]))
+    )
+    nq, bound_nodes = 20, names[10:60]
+    b = encode_bindings(g, {n: [(0.0, 0.0, n)] for n in bound_nodes})
+    plans = []
+    materialize = SuperstepRunner._materialize
+
+    def captured(self, plan, name, i, durable):
+        if name == "sssp":
+            plans.append(plan._jdf.queryExecution().optimizedPlan())
+        return materialize(self, plan, name, i, durable)
+
+    monkeypatch.setattr(SuperstepRunner, "_materialize", captured)
+    got = shortest_path_to_bindings_pairs(
+        g, [(n, None) for n in names[:nq]], 100.0, b, direction=1
+    )
+    for i, (_, fwd) in enumerate(got):
+        end = max(10, i + 1)
+        assert (fwd.dist, fwd.nodes) == (float(end - i - 1), names[i : end + 1]), i
+    assert plans
+    for plan in plans:
+        hits, stack = [], [plan]
+        while stack:
+            node = stack.pop()
+            if node.getClass().getSimpleName() == "CollectMetrics":
+                ms = node.metrics()
+                hits += [ms.apply(j) for j in range(ms.size()) if ms.apply(j).name() == "hits"]
+            kids = node.children()
+            stack += [kids.apply(j) for j in range(kids.size())]
+        assert len(hits) == 1
+        values = _set_literal_values(hits[0])
+        assert values <= nq + len(bound_nodes), values
+    g.unpersist()
+
+
 def test_pagerank_one_job_per_superstep(spark):
     """PageRank at fuse=1: one job per iteration plus fixed setup jobs
     (vertex count, edge persist count, dangling count)."""
@@ -348,6 +415,18 @@ def _bindings_fwd(g):
     )
 
 
+def _bindings_fwd_endings(g):
+    from networkx_graph_spark.operators.bindings import (
+        all_paths_to_bindings,
+        encode_bindings,
+    )
+
+    return all_paths_to_bindings(
+        g, "w1", 50.0, encode_bindings(g, {"w7": [(3, 4, "obj")]}), direction=1,
+        with_endings=True,
+    )
+
+
 def _paths_from(g):
     from networkx_graph_spark.operators.paths import all_paths_from
 
@@ -370,17 +449,19 @@ def _paths_p2p(g):
     "fixture, query, budget",
     [
         ("graph1", _bindings_fwd, 6),
+        ("graph1", _bindings_fwd_endings, 6),
         ("graph1", _paths_from, 6),
         ("graph1", _paths_to, 5),
         ("graph2", _paths_p2p, 5),
     ],
-    ids=["bindings_fwd", "all_paths_from", "all_paths_to", "all_paths"],
+    ids=["bindings_fwd", "bindings_fwd_endings", "all_paths_from", "all_paths_to", "all_paths"],
 )
 def test_bindings_enumeration_one_job_per_round(request, spark, fixture, query, budget):
     """Path enumeration runs ONE driver action per round (flagged state +
     Observation live-count): the seed round's checkpoint, one per later
     round, one final collect, and no isEmpty or per-round collect jobs.
-    Each budget is the measured count on local[4] with warm graphs."""
+    Each budget is the measured count on local[4] with warm graphs; the
+    endings ride the binding loop, so they add no job."""
     g = request.getfixturevalue(fixture)
     # pre-warm the graph's lazy one-time builds so the gate measures the
     # enumeration loop itself
@@ -409,8 +490,11 @@ def _shortest_to_bindings(g):
 
 @pytest.mark.parametrize(
     "query",
-    [_shortest_path, _shortest_to_bindings, _paths_from, _bindings_fwd],
-    ids=["shortest_path", "shortest_path_to_bindings", "all_paths_from", "all_paths_to_bindings"],
+    [_shortest_path, _shortest_to_bindings, _paths_from, _bindings_fwd, _bindings_fwd_endings],
+    ids=[
+        "shortest_path", "shortest_path_to_bindings", "all_paths_from",
+        "all_paths_to_bindings", "all_paths_to_bindings_endings",
+    ],
 )
 def test_one_shot_queries_free_their_state(spark, query):
     """A query that decodes its answer on the driver releases its

@@ -302,12 +302,13 @@ def _clip(v, hi):
     return min(max(v, 0.0), hi)
 
 
-def _paths_from_oracle(length, edges, source, cutoff, offset, sinks):
+def _paths_from_oracle(length, edges, source, cutoff, offset, sinks, reverse=False):
     """``all_paths_from`` by recursive DFS of the single-origin rules in
     the paths.py docstring: entering a non-root tail absorbs its length or
     emits the path truncated at the cutoff; a sink, successor-less or
-    cycle-blocked tail emits the path ending at its full length."""
-    succ, out = _succ(edges, False), []
+    cycle-blocked tail emits the path ending at its full length.
+    ``reverse`` walks the edges backwards."""
+    succ, out = _succ(edges, reverse), []
     so, delta = None, 0.0
     if offset is not None:
         so = _clip(offset, length[source])
@@ -331,6 +332,26 @@ def _paths_from_oracle(length, edges, source, cutoff, offset, sinks):
             dfs(path + [v], dist)
 
     dfs([source], 0.0)
+    return sorted(out, key=lambda p: (p[0], p[1]))
+
+
+def _paths_to_oracle(length, edges, target, cutoff, offset, sinks):
+    """``all_paths_to``: the single-origin DFS over reversed edges from
+    the mirrored offset, each path mirrored back (node list reversed,
+    offsets mirrored and swapped)."""
+    rev = None if offset is None else length[target] - _clip(offset, length[target])
+    out = [
+        (
+            dist,
+            path[::-1],
+            None if eo is None else length[path[-1]] - eo,
+            None if so is None else length[path[0]] - so,
+            None,
+        )
+        for dist, path, so, eo, _ in _paths_from_oracle(
+            length, edges, target, cutoff, rev, sinks, reverse=True
+        )
+    ]
     return sorted(out, key=lambda p: (p[0], p[1]))
 
 
@@ -417,9 +438,70 @@ def _bindings_oracle(length, edges, source, cutoff, bindings, offset, sinks, rev
     return sorted(out, key=lambda p: (p[0], p[1]))
 
 
+def _endings_oracle(length, edges, source, cutoff, bindings, offset, sinks, reverse):
+    """One direction of ``all_paths_to_bindings(..., with_endings=True)``
+    composed as the reference composes it: the binding paths, then the
+    ``all_paths_from`` (forward) or ``all_paths_to`` (backward) paths that
+    no binding path prefixes (forward) or suffixes (backward), each with
+    a synthetic ``(off, off, None)`` binding at its far end."""
+    paths = _bindings_oracle(length, edges, source, cutoff, bindings, offset, sinks, reverse)
+    if reverse:
+        ends = _paths_to_oracle(length, edges, source, cutoff, offset, sinks)
+    else:
+        ends = _paths_from_oracle(length, edges, source, cutoff, offset, sinks)
+    kept = []
+    for dist, nodes, so, eo, _ in ends:
+        if any(
+            len(p[1]) <= len(nodes)
+            and (nodes[len(nodes) - len(p[1]):] if reverse else nodes[: len(p[1])]) == p[1]
+            for p in paths
+        ):
+            continue
+        end, off = (nodes[0], so) if reverse else (nodes[-1], eo)
+        kept.append((dist, nodes, so, eo, (end, (off, off, None))))
+    return paths + kept
+
+
 _halves = st.integers(0, 8).map(lambda k: k * 0.5)
 
 
+# Non-dyadic lengths and offsets, where the binding rule (lengths from
+# the source's offset cost against the cutoff) and the ending rule
+# (lengths from 0 against the cutoff less the offset delta) round apart.
+# Source n0 of length 1.2 at offset 0.2: forward, cutoff == delta
+# (1.2 - 0.2), so the single-node ending sits beside a zero-cost binding
+# at exactly the cutoff; backward, the binding seed 0.2 is not the
+# ending delta 1.2 - (1.2 - 0.2).
+@example(
+    graph=([("n0", 1.2), ("n1", 0.6), ("n2", 0.3), ("n3", 0.9), ("n4", 0.5)],
+           [("n0", "n1"), ("n2", "n0"), ("n3", "n2"), ("n4", "n0")]),
+    ends=(0, 3), cutoff_k=2, offsets=(0.2, None), sink_picks=[],
+    binding_picks=[(1, 0.0, 0.1), (3, 0.5, 0.0)],
+)
+# Forward from n0 of length 0.8 at offset 0.2, delta = 0.8 - 0.2: via n1
+# the ending is truncated (0.9 > 1.5 - delta) while the binding row goes
+# on to a kept binding at n2 (delta + 0.9 <= 1.5); via n3 the binding at
+# n4 breaks the cutoff (delta + 0.6 + 0.3 > 1.5) while its ending still
+# fits (0.6 + 0.3 <= 1.5 - delta) and goes on to n5.
+@example(
+    graph=([("n0", 0.8), ("n1", 0.9), ("n2", 0.2), ("n3", 0.6), ("n4", 0.3), ("n5", 0.5)],
+           [("n0", "n1"), ("n0", "n3"), ("n1", "n2"), ("n3", "n4"), ("n4", "n5")]),
+    ends=(0, 5), cutoff_k=3, offsets=(0.2, None), sink_picks=[],
+    binding_picks=[(2, 0.0, 0.1), (4, 0.5, 0.0)],
+)
+# a sink source
+@example(
+    graph=([("n0", 0.4), ("n1", 0.3), ("n2", 0.6)], [("n0", "n1"), ("n1", "n2"), ("n2", "n0")]),
+    ends=(0, 2), cutoff_k=2, offsets=(0.1, None), sink_picks=[0],
+    binding_picks=[(1, 0.1, 0.1)],
+)
+# forward same-node match over the cutoff: no fallthrough, every ending
+# is kept
+@example(
+    graph=([("n0", 2.3), ("n1", 0.7), ("n2", 0.4)], [("n0", "n1"), ("n1", "n2"), ("n2", "n0")]),
+    ends=(0, 2), cutoff_k=2, offsets=(0.4, None), sink_picks=[],
+    binding_picks=[(0, 2.0, 0.1), (2, 0.1, 0.2)],
+)
 @settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     graph=node_weighted_graphs,
@@ -435,12 +517,14 @@ def test_all_paths_match_oracle(
     spark, graph, ends, cutoff_k, offsets, sink_picks, binding_picks
 ):
     """``all_paths_from``, ``all_paths`` and both directions of
-    ``all_paths_to_bindings`` against the DFS oracles above, comparing
-    every path's (dist, nodes, start offset, end offset, binding) and the
-    result order, at two shuffle-partition counts."""
+    ``all_paths_to_bindings``, without and with endings, against the DFS
+    oracles above, comparing every path's (dist, nodes, start offset, end
+    offset, binding) and the result order, at two shuffle-partition
+    counts. Both sides are compared at the graph's 3-decimal rounding."""
     from networkx_graph_spark.graph import SparkDiGraph
     from networkx_graph_spark.operators.bindings import all_paths_to_bindings, encode_bindings
     from networkx_graph_spark.operators.paths import all_paths, all_paths_from
+    from networkx_graph_spark.rounding import round_half_up
     from networkx_graph_spark.session import kernel_conf
 
     nodes, edges = graph
@@ -456,13 +540,28 @@ def test_all_paths_match_oracle(
         raw.setdefault(names[i % len(names)], []).append((lo, lo + hi, f"b{j}"))
     bindings = {n: sorted(lst, key=lambda t: (t[0], t[1])) for n, lst in raw.items()}
 
-    def rows(paths):
-        return [(p.dist, p.nodes, p.start_offset, p.end_offset, p.binding) for p in paths]
+    def r(v):
+        return None if v is None else round_half_up(v, 1000.0)
 
-    want_from = _paths_from_oracle(length, edges, source, cutoff, so, sinks)
-    want_p2p = _paths_to_target_oracle(length, edges, source, target, cutoff, so, to, sinks)
+    def rows(paths):
+        out = []
+        for p in paths:
+            if not isinstance(p, tuple):
+                p = (p.dist, p.nodes, p.start_offset, p.end_offset, p.binding)
+            dist, nodes, start, end, b = p
+            if b is not None and b[1][2] is None:  # synthetic ending binding
+                b = (b[0], (r(b[1][0]), r(b[1][1]), None))
+            out.append((r(dist), nodes, r(start), r(end), b))
+        return out
+
+    want_from = rows(_paths_from_oracle(length, edges, source, cutoff, so, sinks))
+    want_p2p = rows(_paths_to_target_oracle(length, edges, source, target, cutoff, so, to, sinks))
     want_b = [
-        _bindings_oracle(length, edges, source, cutoff, bindings, so, sinks, rev)
+        rows(_bindings_oracle(length, edges, source, cutoff, bindings, so, sinks, rev))
+        for rev in (True, False)
+    ]
+    want_e = [
+        rows(_endings_oracle(length, edges, source, cutoff, bindings, so, sinks, rev))
         for rev in (True, False)
     ]
     for parts in ("1", "3"):
@@ -475,6 +574,10 @@ def test_all_paths_match_oracle(
             b = encode_bindings(g, raw)
             got_b = all_paths_to_bindings(g, source, cutoff, b, offset=so, sinks=sinks)
             assert [rows(d) for d in got_b] == want_b, parts
+            got_e = all_paths_to_bindings(
+                g, source, cutoff, b, offset=so, sinks=sinks, with_endings=True
+            )
+            assert [rows(d) for d in got_e] == want_e, parts
             g.unpersist()
 
 
