@@ -31,12 +31,12 @@ from __future__ import annotations
 from functools import cached_property
 from typing import Iterable, Optional, Sequence
 
-from py4j.protocol import Py4JError
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import bucketed as store
+from .bucketed import _fs_read_text, _fs_write_text
 from .indexer import Indexer
 from .rounding import round_half_up, round_scale
 
@@ -53,59 +53,6 @@ EDGES_SCHEMA = T.StructType(
         T.StructField("dst", T.LongType(), False),
     ]
 )
-
-
-def _fs_isdir(spark: SparkSession, path: str) -> bool:
-    """Directory existence that also works for scheme-qualified URIs
-    (hdfs://, s3a://): ``os.path.isdir`` is always False for those, which
-    would silently drop the bucketed fast path on a real cluster store."""
-    import os
-
-    if "://" not in path:
-        return os.path.isdir(path)
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
-def _fs_read_text(spark: SparkSession, path: str) -> str:
-    if "://" not in path:
-        with open(path) as f:
-            return f.read()
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(p)
-    try:
-        # Py4J passes a Python bytearray to byte[] parameters BY VALUE
-        # (JVM-side writes never reach the Python copy), so a
-        # read-into-buffer loop would return NUL bytes — drain the stream
-        # JVM-side and take the returned array instead.
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        return bytes(data).decode("utf-8")
-    finally:
-        stream.close()
-
-
-def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
-    import os
-
-    if "://" not in path:
-        d = os.path.dirname(path)
-        if d:
-            os.makedirs(d, exist_ok=True)
-        with open(path, "w") as f:
-            f.write(text)
-        return
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.create(p, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
 
 
 class SparkDiGraph:
@@ -452,65 +399,47 @@ class SparkDiGraph:
         }
 
     # -------------------------------------------------------- persistence
-    @staticmethod
-    def _table_ns(path: str) -> str:
-        """Catalog namespace for bucketed graph tables — a pure function of
-        the save path, so a same-session (or shared-metastore) load finds
-        its tables and two graphs saved under different paths never
-        collide (same scheme as SuperstepRunner checkpoint tables)."""
-        import hashlib
-        import os
+    _table_ns = staticmethod(store.namespace)
 
-        return hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:8]
+    @classmethod
+    def _bucketed_tables(cls, path: str) -> list[tuple[str, str, str]]:
+        """(subdir, bucket column, catalog table) of a bucketed save:
+        vertices by id, edges by src, and a second edge copy by dst for
+        reverse traversal."""
+        ns = cls._table_ns(path)
+        return [
+            (sub, col, f"graph_{ns}_{sub}")
+            for sub, col in (("vertices", "id"), ("edges", "src"), ("edges_rev", "dst"))
+        ]
 
     def save(self, path: str, bucketed: bool = False) -> None:
         """Persist as a parquet layout: {path}/vertices, {path}/edges,
         {path}/meta.json. Vertices/edges write hash-partitioned on their
         join keys so a re-load starts co-located.
 
-        ``bucketed=True`` additionally registers BUCKETED external tables
-        (vertices by id, edges by src, plus a second edge copy by dst for
-        reverse traversal; ``num_partitions`` buckets). A load that finds
-        those catalog entries gets scans that REPORT their hash
-        partitioning, so the reloaded graph's ``edges_w`` AND
-        ``edges_w_rev`` builds need no exchange at all — the
-        cluster-restart story: with a real metastore (Hive/Iceberg) the
-        graph is traversal-ready in both directions across processes for
-        free; in this sandbox the catalog lives in the session, and a
-        fresh process falls back to the plain files (correct, one
-        exchange per direction)."""
+        ``bucketed=True`` writes them instead as tables of the
+        ``networkx_graph_spark.bucketed`` store (vertices by id, edges by
+        src, plus a second edge copy by dst for reverse traversal;
+        ``num_partitions`` buckets). ``load`` reads them back as scans
+        that REPORT their hash partitioning, so the reloaded graph's
+        ``edges_w`` AND ``edges_w_rev`` builds need no exchange at all, in
+        this session or in a fresh process (which re-registers the
+        catalog tables from the specs recorded with the files)."""
         import json
         import os
 
-        v = self.vertices.repartition(self.num_partitions, "id")
-        e = self.edges.repartition(self.num_partitions, "src")
+        tables = self._bucketed_tables(path)
         if bucketed:
-            ns = self._table_ns(path)
-            er = self.edges.repartition(self.num_partitions, "dst")
-            for df, name, col, sub in (
-                (v, f"graph_{ns}_vertices", "id", "vertices"),
-                (e, f"graph_{ns}_edges", "src", "edges"),
-                (er, f"graph_{ns}_edges_rev", "dst", "edges_rev"),
-            ):
-                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-                (
-                    df.write.mode("overwrite")
-                    .format("parquet")
-                    .option("path", os.path.join(path, sub))
-                    .bucketBy(self.num_partitions, col)
-                    .saveAsTable(name)
-                )
+            for sub, col, table in tables:
+                df = self.vertices if sub == "vertices" else self.edges
+                store.write(df, os.path.join(path, sub), [col], self.num_partitions, table)
         else:
             # a prior bucketed save may have registered catalog tables over
             # these same dirs; drop them so the catalog never disagrees
             # with the (now non-bucketed) files on disk
-            ns = self._table_ns(path)
-            for t in (
-                f"graph_{ns}_vertices",
-                f"graph_{ns}_edges",
-                f"graph_{ns}_edges_rev",
-            ):
-                self.spark.sql(f"DROP TABLE IF EXISTS {t}")
+            store.drop(self.spark, *(t for _, _, t in tables))
+            v = self.vertices.repartition(self.num_partitions, "id")
+            e = self.edges.repartition(self.num_partitions, "src")
             v.write.mode("overwrite").parquet(os.path.join(path, "vertices"))
             e.write.mode("overwrite").parquet(os.path.join(path, "edges"))
         _fs_write_text(
@@ -526,41 +455,31 @@ class SparkDiGraph:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SparkDiGraph":
+        """Load a ``save`` layout. A bucketed save reloads as bucketed
+        scans when every dir still carries its recorded bucket spec;
+        otherwise (a dir rewritten since, an older save) it falls back to
+        the plain parquet files: correct, one exchange per direction."""
         import json
         import os
 
         meta = json.loads(_fs_read_text(spark, os.path.join(path, "meta.json")))
         buckets = meta.get("bucketed")
         if buckets:
-            ns = cls._table_ns(path)
-            tv, te = f"graph_{ns}_vertices", f"graph_{ns}_edges"
-            tr = f"graph_{ns}_edges_rev"
-            # catalog probe is the ONLY guarded step (a fresh process has
-            # no session tables — expected, fall back to plain files);
-            # spark.table() is lazy, so ALSO require the backing dirs to
-            # still exist before committing to the bucketed path —
-            # otherwise a stale catalog entry would pass here and the
-            # caller would fail (or silently read empty) at first action
             try:
-                have = spark.catalog.tableExists(tv) and spark.catalog.tableExists(te)
-                have_rev = have and spark.catalog.tableExists(tr)
-            except (Py4JError, AnalysisException):
-                have = have_rev = False
-            if (
-                have
-                and _fs_isdir(spark, os.path.join(path, "vertices"))
-                and _fs_isdir(spark, os.path.join(path, "edges"))
-            ):
+                v, e, er = [
+                    store.read(spark, os.path.join(path, sub), [col], buckets, table)
+                    for sub, col, table in cls._bucketed_tables(path)
+                ]
+            except store.READ_ERRORS:
+                pass
+            else:
                 g = cls(
-                    spark,
-                    spark.table(tv),
-                    spark.table(te),
+                    spark, v, e,
                     round_n=meta.get("round_n"),
                     num_partitions=buckets,
                     edges_src_partitioned=True,
                 )
-                if have_rev and _fs_isdir(spark, os.path.join(path, "edges_rev")):
-                    g._edges_rev_scan = spark.table(tr)
+                g._edges_rev_scan = er
                 return g
         return cls(
             spark,

@@ -30,7 +30,8 @@ everything else:
    ``checkpoint_dir``, durable steps write ``{dir}/{name}/iter=NNNNN``
    and every superstep appends its record to ``{dir}/{name}/metrics.jsonl``.
    ``resume()`` finds the newest complete checkpoint (``_SUCCESS``
-   marker) and restarts the loop mid-iteration.
+   marker) and restarts the loop mid-iteration. Bucketed checkpoints are
+   written and read through ``networkx_graph_spark.bucketed``.
 4. **Cadence.** ``run(cadence=k)`` tests convergence and writes durable
    checkpoints only every k-th superstep and on the last one (PageRank's
    ``fuse``); every superstep is still materialized and recorded.
@@ -39,7 +40,6 @@ everything else:
 from __future__ import annotations
 
 import decimal
-import hashlib
 import json
 import os
 import time
@@ -47,9 +47,10 @@ from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
 from py4j.protocol import Py4JError
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+
+from .. import bucketed
 
 
 @dataclass
@@ -96,11 +97,11 @@ class SuperstepRunner:
     A plain parquet checkpoint (and ``localCheckpoint``) erases the state's
     hash partitioning, so every subsequent superstep re-exchanges the
     vertex state before its id-keyed join. With bucketing enabled, each
-    checkpoint writes a bucketed external table (Spark bucketing uses the
-    same ``pmod(murmur3)`` placement as shuffle hash partitioning), and the
-    read-back scan reports ``HashPartitioning(bucket_cols, bucket_count)``
-    — the next superstep's join on those columns needs NO exchange on the
-    state side. ``bucket_count`` must equal the kernel's shuffle partition
+    durable checkpoint is a table of the ``bucketed`` store (the one
+    ``SparkDiGraph.save(bucketed=True)`` writes too), and the read-back
+    scan reports ``HashPartitioning(bucket_cols, bucket_count)`` — the
+    next superstep's join on those columns needs NO exchange on the state
+    side. ``bucket_count`` must equal the kernel's shuffle partition
     count for the other join sides to align. This is also the real
     cluster-scale checkpoint/resume story: durable files + catalog table +
     per-partition placement preserved across the restart boundary."""
@@ -109,35 +110,21 @@ class SuperstepRunner:
         self,
         spark: SparkSession,
         checkpoint_dir: Optional[str] = None,
-        checkpoint_every: int = 1,
         bucket_cols: Optional[list[str]] = None,
         bucket_count: Optional[int] = None,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
-        self.checkpoint_every = max(1, checkpoint_every)
         if (bucket_cols is None) != (bucket_count is None):
             raise ValueError("bucket_cols and bucket_count must be set together")
         if bucket_cols is not None and checkpoint_dir is None:
             raise ValueError("bucketed checkpoints need a checkpoint_dir")
-        if bucket_cols is not None and self.checkpoint_every != 1:
-            # Bucketed mode's whole point is that EVERY superstep's state
-            # lands co-partitioned; skipping iterations would route the
-            # off-cadence states through localCheckpoint, erasing the
-            # partitioning the next join depends on. Reject rather than
-            # silently ignore the cadence.
-            raise ValueError("bucketed checkpoints imply checkpoint_every=1")
         self.bucket_cols = list(bucket_cols) if bucket_cols else None
         self.bucket_count = bucket_count
         # Catalog-entry namespace: two runs sharing a kernel name (or the
         # same name under different checkpoint dirs) must not DROP each
-        # other's ckpt_* tables mid-run. The digest is a pure function of
-        # the checkpoint dir, so same-session resume still finds its table.
-        self._ns = (
-            hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
-            if checkpoint_dir is not None
-            else ""
-        )
+        # other's ckpt_* tables mid-run.
+        self._ns = bucketed.namespace(checkpoint_dir) if checkpoint_dir is not None else ""
         # per job name: the iterations whose bucketed catalog entry is live
         self._tables: dict[str, list[int]] = {}
 
@@ -171,75 +158,41 @@ class SuperstepRunner:
 
     def resume(self, name: str) -> Optional[tuple[DataFrame, int]]:
         """(state, next_iteration) from the newest durable checkpoint.
-        In bucketed mode the checkpoint files ARE bucketed (written via
-        ``bucketBy().saveAsTable``), so a fresh process re-registers the
-        external bucketed table over them — the read-back scan reports
-        ``HashPartitioning(bucket_cols, bucket_count)`` and the first
-        post-resume superstep needs no vertex-state exchange, exactly like
-        an uninterrupted run. (Before this, a fresh process fell back to a
-        plain parquet read: correct, but one extra exchange AND an
-        ulp-level float-summation-order divergence at the resume seam —
-        measured max rel diff ~5e-16 at 2M edges.)"""
+        In bucketed mode the checkpoint is read through ``bucketed.read``,
+        which verifies the iteration dir's recorded bucket spec and uses
+        (or, in a fresh process, re-registers) its catalog table, so the
+        scan reports ``HashPartitioning(bucket_cols, bucket_count)`` and
+        the first post-resume superstep needs no vertex-state exchange,
+        exactly like an uninterrupted run. (A plain parquet read is
+        correct, but costs one extra exchange AND an ulp-level
+        float-summation-order divergence at the resume seam — measured
+        max rel diff ~5e-16 at 2M edges.)"""
         got = self._resume(name)
         return None if got is None else got[:2]
 
     def _resume(self, name: str) -> Optional[tuple[DataFrame, int, Optional[str]]]:
         """``resume`` plus the reason a bucketed resume fell back to the
-        plain parquet read (None when it did not)."""
+        plain parquet read (None when it did not). The spec is recorded
+        per iteration dir, so it describes the exact files being read even
+        when runs with different specs share the job dir; a dir without
+        its own matching spec (another spec, a plain rewrite, a crash
+        between write and spec) takes the plain read."""
         i = self.latest_checkpoint(name)
         if i is None:
             return None
+        path = self._iter_dir(name, i)
         fallback = None
         if self.bucket_cols is not None:
             tbl = self._table_name(name, i)
             try:
-                if self.spark.catalog.tableExists(tbl):
-                    return self.spark.table(tbl), i + 1, None
-            except (Py4JError, AnalysisException):
-                pass  # re-register below
-            try:
-                return self._register_bucketed(name, i), i + 1, None
-            except (OSError, ValueError, AnalysisException, Py4JError) as e:
+                state = bucketed.read(
+                    self.spark, path, self.bucket_cols, self.bucket_count, tbl
+                )
+                return state, i + 1, None
+            except bucketed.READ_ERRORS as e:
                 # the plain read is re-exchanged but always correct
                 fallback = f"{type(e).__name__}: {e}"
-        return self.spark.read.parquet(self._iter_dir(name, i)), i + 1, fallback
-
-    def _register_bucketed(self, name: str, i: int) -> DataFrame:
-        """Re-create the external bucketed table definition over the
-        durable checkpoint files of iteration ``i`` (fresh-process resume:
-        the files carry bucket ids in their names; only the catalog entry
-        died with the old session). Declaring a bucket spec over files
-        written under a DIFFERENT spec would silently mis-place rows
-        (Spark trusts the declared placement for exchange elision), so the
-        spec recorded at write time must match exactly — any mismatch or
-        missing marker raises, and resume() falls back to the plain
-        (re-exchanged, always-correct) parquet read."""
-        path = self._iter_dir(name, i)
-        # the spec is recorded PER ITERATION DIR: it must describe the
-        # exact files being registered. A job-dir-global marker goes
-        # stale the moment two runs with different specs share the dir —
-        # a resume matching the newer marker would declare it over an
-        # OLDER iteration's files and Spark's trusted exchange elision
-        # would silently misplace rows. No fallback: an iteration without
-        # its own spec (older writer, crash between write and marker)
-        # raises here and resume() takes the always-correct plain
-        # parquet read.
-        with open(os.path.join(path, "_bucket_spec.json")) as f:
-            spec = json.load(f)
-        if spec != {"cols": self.bucket_cols, "count": self.bucket_count}:
-            raise ValueError(
-                f"checkpoint bucket spec {spec} != runner "
-                f"{{'cols': {self.bucket_cols}, 'count': {self.bucket_count}}}"
-            )
-        ddl = self.spark.read.parquet(path)._jdf.schema().toDDL()
-        tbl = self._table_name(name, i)
-        cols = ", ".join(self.bucket_cols)
-        self.spark.sql(
-            f"CREATE TABLE {tbl} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({cols}) INTO {self.bucket_count} BUCKETS "
-            f"LOCATION '{path}'"
-        )
-        return self.spark.table(tbl)
+        return self.spark.read.parquet(path), i + 1, fallback
 
     def metrics_for(self, name: str, iteration: int) -> Optional[dict]:
         """The recorded metrics line for ``iteration`` (newest wins), or
@@ -272,35 +225,16 @@ class SuperstepRunner:
         return f"ckpt_{self._ns}_{safe}_{i:05d}"
 
     def persist_state(self, state: DataFrame, name: str, i: int) -> DataFrame:
-        """Write ``state`` as a bucketed external table under the iteration
-        dir and return the bucketed scan. The plan is clustered on
-        ``bucket_cols`` first so each task writes exactly one bucket file
-        (the repartition is elided when the plan is already partitioned
-        that way). Keeps the catalog entries of the last two writes of
-        ``name`` (files stay on disk for resume)."""
-        path = self._iter_dir(name, i)
-        os.makedirs(self._job_dir(name), exist_ok=True)
+        """Write ``state`` as iteration ``i``'s bucketed table
+        (``bucketed.write``) and return its scan. Keeps the catalog
+        entries of the last two writes of ``name`` (files stay on disk for
+        resume)."""
         tbl = self._table_name(name, i)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            state.repartition(self.bucket_count, *self.bucket_cols)
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .bucketBy(self.bucket_count, *self.bucket_cols)
-            .saveAsTable(tbl)
-        )
-        # record the bucket spec INSIDE the iteration dir, after the
-        # write, so a fresh-process resume re-registers exactly the spec
-        # these files were written under (a job-dir-global marker goes
-        # stale when runs with different specs share the dir — see
-        # _register_bucketed, which refuses to register without it)
-        with open(os.path.join(path, "_bucket_spec.json"), "w") as f:
-            json.dump({"cols": self.bucket_cols, "count": self.bucket_count}, f)
+        bucketed.write(state, self._iter_dir(name, i), self.bucket_cols, self.bucket_count, tbl)
         live = self._tables.setdefault(name, [])
         live.append(i)
         while len(live) > 2:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self._table_name(name, live.pop(0))}")
+            bucketed.drop(self.spark, self._table_name(name, live.pop(0)))
         return self.spark.table(tbl)
 
     def _check_buckets(self, columns: list[str]) -> None:
@@ -358,10 +292,10 @@ class SuperstepRunner:
         convergence, then frees the previous state.
 
         ``cadence``: convergence is tested, and durable checkpoints are
-        written (every ``checkpoint_every``-th time), only on supersteps
-        ``i`` with ``(i + 1) % cadence == 0`` and on superstep
-        ``max_iter - 1``. ``resume=True`` restarts after the newest
-        durable checkpoint with ``prev`` reloaded from its record.
+        written, only on supersteps ``i`` with ``(i + 1) % cadence == 0``
+        and on superstep ``max_iter - 1``. ``resume=True`` restarts after
+        the newest durable checkpoint with ``prev`` reloaded from its
+        record.
         """
         columns = state.columns
         self._check_buckets(columns)
@@ -384,11 +318,7 @@ class SuperstepRunner:
             obs = Observation()
             plan = plan.observe(obs, *[m.alias(k) for k, m in observed.items()])
             cadence_step = (i + 1) % cadence == 0 or i == max_iter - 1
-            durable = (
-                self.checkpoint_dir is not None
-                and cadence_step
-                and (i // cadence) % self.checkpoint_every == 0
-            )
+            durable = self.checkpoint_dir is not None and cadence_step
             new_state = self._materialize(plan.select(*project), name, i, durable)
             vals = _jsonable(obs.get)
             for k, m in metrics.items():

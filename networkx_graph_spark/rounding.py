@@ -52,6 +52,3 @@ def round_col(col: Column, scale: Optional[float]) -> Column:
         return col
     return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
 
-
-def clip_col(lo: Column, v: Column, hi: Column) -> Column:
-    return F.greatest(lo, F.least(v, hi))

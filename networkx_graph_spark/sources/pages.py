@@ -11,7 +11,9 @@ Pipeline (all Arrow-vectorized — no per-row Python UDFs, BASELINE.json:15):
           --explode + normalize + self-join corpus--> edges(src_url, dst_url)
           --build_ids dictionary--> edges(src BIGINT, dst BIGINT)
 
-The extraction spec is deterministic and self-contained (stdlib only):
+The text extraction spec (``extract_text``; the batch parser shares its
+stages and also collects raw href values) is deterministic and
+self-contained (stdlib only):
 
 1. decode UTF-8 (errors='replace');
 2. drop <script>/<style>/<head> blocks;
@@ -55,8 +57,8 @@ _HREF_RE = re.compile(
 
 def _stripped(html_bytes: bytes) -> str:
     """Decode + script/style removal — the stage shared by text and href
-    extraction (ONE implementation; both public functions and the batch
-    parser build on it)."""
+    extraction (ONE implementation; ``extract_text`` and the batch parser
+    build on it)."""
     return _SCRIPT_RE.sub(" ", html_bytes.decode("utf-8", errors="replace"))
 
 
@@ -86,13 +88,6 @@ def extract_text(html_bytes: Optional[bytes]) -> str:
     return _text_from_stripped(_stripped(html_bytes))
 
 
-def extract_hrefs(html_bytes: Optional[bytes]) -> list[str]:
-    """Raw href attribute values in document order."""
-    if html_bytes is None:
-        return []
-    return _hrefs_from_stripped(_stripped(html_bytes))
-
-
 def normalize_url(base_url: str, href: str) -> Optional[str]:
     """Resolve + canonicalize; None if not http(s)."""
     from urllib.parse import urljoin, urlsplit, urlunsplit
@@ -120,10 +115,10 @@ def normalize_url(base_url: str, href: str) -> Optional[str]:
 
 def _parse_one(blob: Optional[bytes]) -> tuple[str, list[str]]:
     """Text + raw hrefs with ONE decode and ONE script/style strip per
-    page (calling the two public functions separately did both twice —
-    double the regex work on the dominant ingest path). Same staged
-    pipeline as the public functions, so the byte-identical-text gate
-    and the href list are unchanged by construction."""
+    page (separate text and href passes did both twice — double the
+    regex work on the dominant ingest path). Same staged pipeline as
+    ``extract_text``, so the byte-identical-text gate holds by
+    construction."""
     if blob is None:
         return "", []
     s = _stripped(blob)

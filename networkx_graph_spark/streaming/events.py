@@ -1,11 +1,10 @@
 """Structured Streaming operators over the events table.
 
 The reference has no streaming surface (SURVEY.md §2.9); the north rule
-needs batch supersteps, not streams. These operators exist because a
-training-data/link-graph platform ingests continuously: windowed event
-aggregation with watermarked late-data handling, plus an incremental
-edge-ingest pattern (new pages micro-batch -> edges upsert via
-foreachBatch). Batch twins of each query keep them oracle-checkable.
+needs batch supersteps, not streams. These operators cover event
+streams: tumbling-window aggregation with watermarked late-data handling
+and custom stateful sessionization. Each has a batch twin that keeps it
+oracle-checkable.
 """
 
 from __future__ import annotations
@@ -63,28 +62,6 @@ def windowed_event_counts_stream(
     )
 
 
-def incremental_edge_ingest(
-    spark: SparkSession,
-    pages_stream_path: str,
-    schema,
-    edges_out_path: str,
-    query_name: str = "edge_ingest",
-):
-    """Streaming pages -> per-micro-batch link extraction -> append edges
-    parquet (exactly-once per epoch via foreachBatch)."""
-    from ..sources.pages import pages_to_edges
-
-    pages = spark.readStream.schema(schema).format("parquet").load(pages_stream_path)
-
-    def _sink(batch_df: DataFrame, epoch_id: int):
-        edges = pages_to_edges(batch_df, restrict_to_corpus=False)
-        edges.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
-            edges_out_path
-        )
-
-    return pages.writeStream.foreachBatch(_sink).queryName(query_name).start()
-
-
 def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Sessionization via native session windows (merge events per user
     with < gap between them): (user_id, session_start, session_end,
@@ -102,38 +79,6 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             "n_events",
             "total_value",
         )
-    )
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    parquet_path: str,
-    schema,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-    query_name: str = "sessions",
-):
-    """Streaming sessionization: session_window + watermark, append mode."""
-    ev = (
-        spark.readStream.schema(schema).format("parquet").load(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
-    agg = (
-        ev.groupBy(F.session_window("ts", f"{gap_minutes} minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 3).alias("total_value"))
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
     )
 
 

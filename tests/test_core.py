@@ -292,22 +292,21 @@ def test_build_ids_taken_slots(spark):
 
 
 def test_graph_save_load_bucketed(graph1, spark, tmp_path):
-    """save(bucketed=True) + same-session load: the reloaded graph's
-    forward edges_w build is exchange-free (bucketed scans report their
-    hash partitioning), and every query result matches the plain path."""
+    """save(bucketed=True) + load: the reloaded graph's forward edges_w
+    build is exchange-free (bucketed scans report their hash
+    partitioning), and every query result matches the plain path. A load
+    whose catalog has no graph tables (any fresh process) re-registers
+    them from the recorded bucket specs and is exchange-free too."""
     from pyspark.sql import functions as F
 
     from networkx_graph_spark.graph import SparkDiGraph
     from networkx_graph_spark.operators.sssp import shortest_paths
 
-    p = str(tmp_path / "gbkt")
-    graph1.save(p, bucketed=True)
-    g2 = SparkDiGraph.load(spark, p)
-    try:
-        assert g2.edges_src_partitioned
-        assert g2.num_partitions == graph1.num_partitions
+    def assert_bucketed_reload(g):
+        assert g.edges_src_partitioned
+        assert g.num_partitions == graph1.num_partitions
         assert sorted(
-            (r["src"], r["dst"]) for r in g2.edges.collect()
+            (r["src"], r["dst"]) for r in g.edges.collect()
         ) == sorted((r["src"], r["dst"]) for r in graph1.edges.collect())
 
         # the exact join edges_w builds, probed pre-persist with broadcast
@@ -315,8 +314,8 @@ def test_graph_save_load_bucketed(graph1, spark, tmp_path):
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            ew_expr = g2.edges.join(
-                g2.vertices.select(
+            ew_expr = g.edges.join(
+                g.vertices.select(
                     F.col("id").alias("src"), F.col("length").alias("weight")
                 ),
                 "src",
@@ -326,6 +325,17 @@ def test_graph_save_load_bucketed(graph1, spark, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         assert "Bucketed: true" in plan, plan
         assert "Exchange" not in plan, plan
+
+    def drop_tables():
+        ns = SparkDiGraph._table_ns(p)
+        for sub in ("vertices", "edges", "edges_rev"):
+            spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_{sub}")
+
+    p = str(tmp_path / "gbkt")
+    graph1.save(p, bucketed=True)
+    g2 = SparkDiGraph.load(spark, p)
+    try:
+        assert_bucketed_reload(g2)
 
         # reverse direction: the dst-bucketed copy feeds edges_w_rev; the
         # persisted table still carries hashpartitioning on the
@@ -350,17 +360,15 @@ def test_graph_save_load_bucketed(graph1, spark, tmp_path):
         r2 = shortest_paths(g2, "w7", cutoff=200.0, reverse=True).dists()
         assert r1 == r2
         g2.unpersist()
-    finally:
-        ns = SparkDiGraph._table_ns(p)
-        spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_vertices")
-        spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_edges")
-        spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_edges_rev")
 
-    # fresh-catalog fallback: drop the tables, load again -> plain parquet
-    g3 = SparkDiGraph.load(spark, p)
-    assert not g3.edges_src_partitioned
-    assert g3.edges.count() == graph1.edges.count()
-    g3.unpersist()
+        # fresh catalog: drop the tables, load again -> re-registered
+        # bucketed scans, not the plain parquet fallback
+        drop_tables()
+        g3 = SparkDiGraph.load(spark, p)
+        assert_bucketed_reload(g3)
+        g3.unpersist()
+    finally:
+        drop_tables()
 
 
 def test_save_nonbucketed_drops_stale_catalog_tables(graph1, spark, tmp_path):
@@ -384,48 +392,53 @@ def test_save_nonbucketed_drops_stale_catalog_tables(graph1, spark, tmp_path):
 
 
 def test_load_stale_catalog_falls_back_to_files(graph1, spark, tmp_path):
-    """A bucketed save whose data dirs were moved aside leaves a stale
-    catalog entry; load() must NOT commit to the bucketed path (lazy
-    spark.table would fail or read empty at first action) — meta says
-    bucketed, dirs missing -> plain-parquet fallback works off a second
-    intact copy."""
+    """A bucketed save whose data dirs were rewritten as plain parquet
+    leaves stale catalog entries; load() must NOT commit to the bucketed
+    path (the live tables would declare a bucket layout the new files do
+    not have, and fail or mis-place rows at first action) — meta says
+    bucketed, the dirs carry no bucket spec -> plain-parquet fallback."""
     import os
     import shutil
 
     from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.sssp import shortest_path
 
     p = str(tmp_path / "gstale")
     graph1.save(p, bucketed=True)
-    # break the bucketed dirs but keep plain files readable: the bucketed
-    # save wrote vertices/ edges/ edges_rev/ (parquet under the hood) —
-    # simulate "files deleted, catalog stale" by renaming, then writing
+    # rewrite the bucketed dirs as plain parquet: move them aside, write
     # plain copies back
     for sub in ("vertices", "edges"):
         shutil.move(os.path.join(p, sub), os.path.join(p, sub + "_bak"))
     graph1.vertices.write.parquet(os.path.join(p, "vertices"))
     graph1.edges.write.parquet(os.path.join(p, "edges"))
-    # dirs exist again, so emulate the catalog-gone-stale case instead:
-    # drop ONE table; load's probe then rejects the bucketed path
     ns = SparkDiGraph._table_ns(p)
-    spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_edges")
-    g2 = SparkDiGraph.load(spark, p)
-    assert sorted(
-        (r["src"], r["dst"]) for r in g2.edges.collect()
-    ) == sorted((r["src"], r["dst"]) for r in graph1.edges.collect())
+    try:
+        # all three graph_* tables are still live over the rewritten dirs
+        for sub in ("vertices", "edges", "edges_rev"):
+            assert spark.catalog.tableExists(f"graph_{ns}_{sub}")
+        g2 = SparkDiGraph.load(spark, p)
+        assert not g2.edges_src_partitioned
+        assert shortest_path(g2, "w1", "w7", 30.0).nodes == ["w1", "w2", "w5", "w7"]
+        g2.unpersist()
+        # one table gone (the catalog half-stale) -> the same fallback
+        spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_edges")
+        g3 = SparkDiGraph.load(spark, p)
+        assert sorted(
+            (r["src"], r["dst"]) for r in g3.edges.collect()
+        ) == sorted((r["src"], r["dst"]) for r in graph1.edges.collect())
+    finally:
+        for sub in ("vertices", "edges", "edges_rev"):
+            spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_{sub}")
 
 
 def test_graph_save_load_scheme_qualified_uri(spark, tmp_path):
     """save()/load() through a scheme-qualified URI exercise the Hadoop
-    FileSystem branch of the meta/existence helpers (file:// locally;
+    FileSystem branch of the meta and bucket-spec file helpers (file:// locally;
     hdfs://-s3a:// take the identical code path on a cluster). Guards the
     Py4J pass-by-value pitfall: reading into a Python bytearray from a
     JVM InputStream returns NULs, so the helper must drain JVM-side."""
-    from networkx_graph_spark.graph import (
-        SparkDiGraph,
-        _fs_isdir,
-        _fs_read_text,
-        _fs_write_text,
-    )
+    from networkx_graph_spark.bucketed import _fs_read_text, _fs_write_text
+    from networkx_graph_spark.graph import SparkDiGraph
 
     uri = f"file://{tmp_path}/g1"
     g = SparkDiGraph.from_lists(
@@ -440,5 +453,21 @@ def test_graph_save_load_scheme_qualified_uri(spark, tmp_path):
     # helper-level roundtrip through the JVM FileSystem API
     _fs_write_text(spark, f"file://{tmp_path}/probe/x.json", '{"k": "v"}')
     assert _fs_read_text(spark, f"file://{tmp_path}/probe/x.json") == '{"k": "v"}'
-    assert _fs_isdir(spark, f"file://{tmp_path}/probe")
-    assert not _fs_isdir(spark, f"file://{tmp_path}/absent")
+
+    # bucketed round trip: the bucket specs are written and read back
+    # through the same FileSystem branch; with the session's tables
+    # dropped, load re-registers them over the URI location
+    buri = f"file://{tmp_path}/g1b"
+    ns = SparkDiGraph._table_ns(buri)
+    g.save(buri, bucketed=True)
+    try:
+        for sub in ("vertices", "edges", "edges_rev"):
+            spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_{sub}")
+        g3 = SparkDiGraph.load(spark, buri)
+        assert g3.edges_src_partitioned
+        got = {(r["node"], r["length"]) for r in g3.vertices.collect()}
+        assert got == {("a", 2.0), ("b", 1.5)}
+        assert g3.edges.count() == 1
+    finally:
+        for sub in ("vertices", "edges", "edges_rev"):
+            spark.sql(f"DROP TABLE IF EXISTS graph_{ns}_{sub}")

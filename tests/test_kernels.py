@@ -778,7 +778,12 @@ def test_bucketed_resume_rejects_mixed_spec_dir(spark, edges_df, tmp_path):
     """Two runs with different bucket specs sharing a job dir: a resume
     whose latest complete checkpoint was written under the OTHER spec
     must fall back to the plain parquet read (never register a bucketed
-    table over mismatched files), and still produce correct ranks."""
+    table over mismatched files), and still produce correct ranks. So
+    must a same-session resume whose iteration dir was rewritten as plain
+    parquet while its ckpt_* table is still live."""
+    import os
+    import shutil
+
     from networkx_graph_spark.kernels.pagerank import pagerank
     from networkx_graph_spark.plans.supersteps import SuperstepRunner
 
@@ -788,7 +793,7 @@ def test_bucketed_resume_rejects_mixed_spec_dir(spark, edges_df, tmp_path):
                     name="prm", num_partitions=16)
     expect = {r["id"]: r["rank"] for r in full.state.collect()}
     # drop the session catalog entries so resume exercises the
-    # fresh-process path (_register_bucketed / plain-read fallback)
+    # fresh-process path (re-registration / plain-read fallback)
     for i in range(5):
         spark.sql(f"DROP TABLE IF EXISTS {r16._table_name('prm', i)}")
     # a NEW run with bucket_count=4 resumes from the count=16 files:
@@ -812,3 +817,32 @@ def test_bucketed_resume_rejects_mixed_spec_dir(spark, edges_df, tmp_path):
                     name="prm", resume=True, num_partitions=4)
     assert more.metrics[0]["iteration"] == 4
     assert "bucket spec" in more.metrics[0]["resume_fallback"]
+
+    # same session, live table, plain-rewritten dir: iterations 2 and 3
+    # keep their catalog entries after a 4-superstep run; iteration 3's
+    # files are then replaced by a plain parquet copy (no bucket spec)
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    d2 = str(tmp_path / "cks")
+    rs = SuperstepRunner(spark, checkpoint_dir=d2, bucket_cols=["id"], bucket_count=nparts)
+    pagerank(edges_df, tol=-1.0, max_iter=4, runner=rs, name="prs")
+    it3 = os.path.join(d2, "prs", "iter=00003")
+    spark.read.parquet(it3).write.parquet(it3 + "_plain")
+    shutil.rmtree(it3)
+    shutil.move(it3 + "_plain", it3)
+    try:
+        assert spark.catalog.tableExists(rs._table_name("prs", 3))
+        rs2 = SuperstepRunner(spark, checkpoint_dir=d2, bucket_cols=["id"], bucket_count=nparts)
+        res = pagerank(edges_df, tol=-1.0, max_iter=6, runner=rs2, name="prs", resume=True)
+        assert res.metrics[0]["iteration"] == 4
+        assert "resume_fallback" in res.metrics[0]
+        got = {r["id"]: r["rank"] for r in res.state.collect()}
+        want = {
+            r["id"]: r["rank"]
+            for r in pagerank(edges_df, tol=-1.0, max_iter=6).state.collect()
+        }
+        assert set(got) == set(want)
+        assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+    finally:
+        for t in spark.catalog.listTables():
+            if t.name.startswith("ckpt_") and ("_prs_" in t.name or "_prm_" in t.name):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")

@@ -377,13 +377,9 @@ def test_pagerank_one_job_per_superstep(spark):
     assert jobs <= 10, f"expected <=10 jobs, got {jobs}"
 
 
-def test_runner_table_namespace_and_cadence_guard(spark, tmp_path):
+def test_runner_table_namespace(spark, tmp_path):
     """Catalog checkpoint-table names are namespaced by checkpoint_dir so
-    two runs sharing a kernel name cannot DROP each other's entries; and
-    bucketed mode rejects checkpoint_every != 1 instead of silently
-    writing every superstep anyway."""
-    import pytest
-
+    two runs sharing a kernel name cannot DROP each other's entries."""
     from networkx_graph_spark.plans.supersteps import SuperstepRunner
 
     d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
@@ -393,15 +389,6 @@ def test_runner_table_namespace_and_cadence_guard(spark, tmp_path):
     # same dir -> same name (resume must find its own table)
     r1b = SuperstepRunner(spark, checkpoint_dir=d1, bucket_cols=["id"], bucket_count=4)
     assert r1._table_name("sssp", 3) == r1b._table_name("sssp", 3)
-
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        SuperstepRunner(
-            spark,
-            checkpoint_dir=d1,
-            checkpoint_every=2,
-            bucket_cols=["id"],
-            bucket_count=4,
-        )
 
 
 def _bindings_fwd(g):

@@ -44,7 +44,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--pages", help="pages table path (url, warc_ts, html, text, lang)")
     p.add_argument("--output", required=True, help="result parquet path")
     p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--checkpoint-every", type=int, default=1)
     p.add_argument("--bucketed", action="store_true",
                    help="durable co-partitioned checkpoints (bucketed "
                         "tables); for build-graph: save bucketed graph "
@@ -65,13 +64,6 @@ def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
     if bool(args.edges) == bool(args.pages):
         print("exactly one of --edges / --pages is required", file=sys.stderr)
-        return 2
-    if args.bucketed and args.checkpoint_every != 1:
-        print(
-            "--bucketed implies --checkpoint-every 1 (every superstep's "
-            "state must land co-partitioned)",
-            file=sys.stderr,
-        )
         return 2
     if args.kernel == "cc":
         # the library enforces these at call time; fail fast at the CLI
@@ -126,10 +118,7 @@ def main(argv=None) -> int:
     spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
     runner_kw = {}
     if args.checkpoint_dir:
-        runner_kw = dict(
-            checkpoint_dir=args.checkpoint_dir,
-            checkpoint_every=args.checkpoint_every,
-        )
+        runner_kw = dict(checkpoint_dir=args.checkpoint_dir)
         if args.bucketed:
             runner_kw.update(bucket_cols=["id"], bucket_count=nparts)
     runner = SuperstepRunner(spark, **runner_kw) if runner_kw else None
@@ -163,8 +152,8 @@ def main(argv=None) -> int:
         )
     elif args.kernel == "build-graph":
         # pages/edges -> traversal-ready saved graph artifact: with
-        # --bucketed the save registers bucketed tables so later jobs
-        # (same session / shared metastore) reload with zero exchanges
+        # --bucketed the save writes bucketed tables that later jobs
+        # (fresh processes too) reload with zero exchanges
         from networkx_graph_spark.graph import SparkDiGraph
 
         g = SparkDiGraph.from_edge_df(spark, edges)
