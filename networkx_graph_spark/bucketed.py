@@ -44,8 +44,11 @@ def namespace(path: str) -> str:
     """Catalog-name namespace of the tables under ``path``: a pure function
     of the path, so a same-session read finds the table its write
     registered, and tables written under different paths never collide
-    (nor DROP each other's entries)."""
-    return hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:8]
+    (nor DROP each other's entries). A scheme-qualified URI is already
+    absolute and is hashed as given; a local path resolves against the
+    working dir."""
+    key = path if "://" in path else os.path.abspath(path)
+    return hashlib.md5(key.encode()).hexdigest()[:8]
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

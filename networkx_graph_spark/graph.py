@@ -238,6 +238,14 @@ class SparkDiGraph:
         return self._vertex_maps()[1]
 
     @cached_property
+    def min_length(self) -> float:
+        """Least vertex length, read off ``lengths_map`` (no Spark job once
+        the map is built). Positive means every relaxation step adds a
+        positive weight, which lets a point query prune rows at exactly
+        its target's distance (``operators.sssp``)."""
+        return min(self.lengths_map.values(), default=0.0)
+
+    @cached_property
     def edges_w(self) -> DataFrame:
         """Forward traversal edges ``(src, dst, weight=length(src))``,
         hash-partitioned by src (the frontier-join key) and persisted."""

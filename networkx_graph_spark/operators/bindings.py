@@ -23,9 +23,11 @@ replicated exactly:
   is ``argmin (dist, node)`` over the last record's target hits within
   the cutoff. Only then the total-cost check
   ``dist + binding_offset_cost <= cutoff`` applies (if the first binding
-  node fails it, the answer is None, not the next node). The kernel's
-  prune at the best target distance keeps rows at exactly that distance
-  expanding, so the argmin and the winner's chain are unchanged by it.
+  node fails it, the answer is None, not the next node). The kernel
+  prunes rows above the best target distance ``t``, and rows at exactly
+  ``t`` only when every node length is positive (then such a row reaches
+  nothing at or below ``t``), so the argmin and the winner's chain are
+  unchanged by it.
 - binding offset cost: forward ``c = clip(0, lo_first, len)`` costs ``c``;
   backward ``c = clip(0, hi_last, len)`` costs ``len - c`` (:1557-1581).
 - forward paths read ``[source..u]``; backward paths read ``[u..source]``
@@ -167,6 +169,7 @@ def _shortest_many(
     result = _run_sssp(
         spark, edges_w, seeds, float(cutoff), sink_ids | binding_nodes,
         is_target=_literal_in("node", binding_nodes) & (F.col("node") != src_of),
+        strict=graph.min_length > 0,
     )
     # Dijkstra's first pop (/root/reference/src/main.cpp:1552-1582) is
     # ``argmin (dist, node)`` over the reached binding nodes within the

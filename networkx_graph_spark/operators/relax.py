@@ -15,10 +15,12 @@ single full-outer join, and one projection over the joined rows builds
 the next state: a row takes the candidate and ``_new = true`` when the
 candidate is strictly smaller, else keeps its old label with
 ``_new = false``. ``_new`` marks the next frontier, and ``cnt`` (the
-number of improved rows, the convergence metric) rides the runner's
-checkpoint action. One join computes the same rows as a left join to
-find the improvements plus an anti-join and a union to replace them,
-which walk the state three times with two key joins.
+number of improved rows, the convergence metric of a kernel that relaxes
+every improved row; ``operators.sssp`` prunes its frontier and converges
+on its own ``live`` count) rides the runner's checkpoint action. One
+join computes the same rows as a left join to find the improvements plus
+an anti-join and a union to replace them, which walk the state three
+times with two key joins.
 """
 
 from __future__ import annotations

@@ -32,12 +32,24 @@ Exact-match semantics replicated:
   struct ``(dist, prev_dist, prev)``; seeds carry ``prev_dist = -inf`` so
   they win ties like Dijkstra's pre-loop insertion.
 
+Convergence is Pregel's vote to halt: a superstep relaxes only its
+frontier rows (``_new``, not a sink and, for a p2p query, not above the
+query's best target distance), and it observes ``live``, the rows of its
+new state that its own frontier filter keeps. The next superstep's prune
+bound is never looser, so ``live == 0`` proves that the next superstep
+sends nothing, and the loop stops there, where the reference stops on
+the target's pop, instead of one superstep later on a superstep that
+improves nothing. With no targets and no sinks (single-source SSSP, the
+UBODT build) ``live`` is the improved-row count ``cnt``.
+
 Scale notes: state and frontier are hash-partitioned on the join key;
-``edges_w`` is pre-partitioned by ``src`` (graph build) so the per-superstep
-join reuses its exchange; every superstep ``localCheckpoint``s to truncate
-lineage. A query batch is driver data: its sources are one Arrow
-``LocalRelation`` (``session.local_df``), broadcast once into the seed
-join (``source_seeds``), and its cutoffs, sinks, p2p targets and prune
+``edges_w`` is pre-partitioned by ``src`` (graph build) so a sort-merge
+superstep join reuses its exchange, and below
+``spark.sql.autoBroadcastJoinThreshold`` the join broadcasts ``edges_w``
+instead; every superstep ``localCheckpoint``s to truncate lineage. A
+query batch is driver data: its sources are one Arrow ``LocalRelation``
+(``session.local_df``), broadcast once into the seed join
+(``source_seeds``), and its cutoffs, sinks, p2p targets and prune
 bounds enter each superstep as plan literals in SQL text (``_by_qid``,
 ``_literal_in``), so a superstep neither scans nor broadcasts a
 driver-built table and starts no Python worker. The supersteps run
@@ -109,21 +121,36 @@ def bounded_sssp(
         with ``dist > t`` are pruned: weights are non-negative, so they can
         only produce labels ≥ their own dist — never a better target label,
         and never a better label on the winning chain (whose prefixes all
-        sit strictly below ``t``). Rows at exactly ``t`` keep expanding so
-        the lexicographic (dist, prev_dist, prev) tie-break is unaffected.
+        sit strictly below ``t``). Rows at exactly ``t`` follow one of two
+        tie rules:
+
+        - here they keep expanding (``dist <= t``), so a zero weight cannot
+          change the lexicographic (dist, prev_dist, prev) tie-break;
+        - ``shortest_paths_pairs`` and the bindings search prune them too
+          (``dist < t``) on a graph with no zero-length node
+          (``SparkDiGraph.min_length > 0``): such a row sends only labels
+          above ``t``, which change neither a target's label nor a label
+          of the rows up to ``t`` that ``walk_chains`` reads.
+
         A query may have several targets; ``t`` is the least of them.
         Only the chains of targets at ``t`` are guaranteed final — p2p
         callers only.
 
     Returns the converged state (qid, node, dist, prev, prev_dist [, payload]).
 
-    Job budget: exactly ONE Spark job per superstep. The state carries a
-    ``_new`` frontier flag; the improved-row count (emptiness/convergence)
-    and the target hits (p2p early termination) are ``Observation``
-    metrics collected as side effects of the single state checkpoint
-    action — no separate ``isEmpty``/frontier checkpoint/target
-    ``collect`` jobs (the same 1-job/superstep pattern as the PageRank and
-    CC kernels). ``hits`` lists every target row of the new state (not
+    Job budget: one checkpoint action per superstep, plus one broadcast
+    job whenever ``edges_w`` is under ``spark.sql.autoBroadcastJoinThreshold``
+    and the superstep joins it as a ``BroadcastHashJoin``: a point query
+    is 2 init jobs (seed broadcast and checkpoint), 2 per superstep and 1
+    chain collect. With broadcast joins off, perfbench's road_paths ran 6
+    jobs per query instead of 9 (3 supersteps) in the same wall time, so
+    the plan keeps them. The state carries a ``_new`` frontier flag; the improved-row
+    count ``cnt``, the live-row count ``live`` (the convergence key, see
+    the module docstring) and the target hits (p2p early termination) are
+    ``Observation`` metrics collected as side effects of the single state
+    checkpoint action — no separate ``isEmpty``/frontier
+    checkpoint/target ``collect`` jobs (the same pattern as the PageRank
+    and CC kernels). ``hits`` lists every target row of the new state (not
     only improved ones) as ``(qid, node, dist)``, so the previous record
     alone gives each query's best target distance ``tbest`` (the min over
     its rows). The cutoffs, sinks, targets and the prune bound built from
@@ -155,11 +182,15 @@ def _run_sssp(
     runner=None,
     name: str = "sssp",
     resume: bool = False,
+    strict: bool = False,
 ) -> SuperstepResult:
     """``bounded_sssp`` returning the runner's result: the converged state
     (projected to the state columns) plus the per-superstep records, whose
     last ``hits`` are the final target rows. ``is_target`` is the target
-    test as one Column over the state's ``qid`` and ``node``."""
+    test as one Column over the state's ``qid`` and ``node``. ``strict``
+    prunes frontier rows at exactly the best target distance too, which
+    is exact only when every edge weight is positive (see
+    ``bounded_sssp``'s ``targets``)."""
     pl = list(payload_cols)
     # payload names must be disjoint from the edge columns (the hoisted
     # name-resolved message projection below) and from the state columns
@@ -210,18 +241,23 @@ def _run_sssp(
                 tbest[q] = d
         keep = _front
         if tbest:
-            # prune frontier rows strictly above their query's best target
-            # distance (reference first-pop semantics, see docstring)
-            keep = keep & (_dist <= F.coalesce(_by_qid(tbest), F.lit(float("inf"))))
+            # prune frontier rows above their query's best target distance
+            # (reference first-pop semantics, see docstring)
+            t = F.coalesce(_by_qid(tbest), F.lit(float("inf")))
+            keep = keep & ((_dist < t) if strict else (_dist <= t))
         msgs = state.filter(keep).join(edges_w, _msg_jcond).select(*_msg_proj)
         new_state, metrics = _merge(state, msgs)
+        # the new state's rows that this superstep's frontier filter keeps:
+        # the next bound is never looser, so none left means the next
+        # superstep sends nothing (vote to halt)
+        metrics["live"] = F.coalesce(F.sum(keep.cast("long")), F.lit(0))
         if _hits_metric is not None:
             metrics["hits"] = _hits_metric
         return new_state, metrics
 
     with kernel_conf(spark, KERNEL_CONF["sssp"]):
         result = runner.run(
-            name, init, step, max_iter=max_iter, converged_key="cnt", tol=0, resume=resume
+            name, init, step, max_iter=max_iter, converged_key="live", tol=0, resume=resume
         )
     return replace(result, state=result.state.select(*cols))
 
@@ -704,6 +740,7 @@ def shortest_paths_pairs(
     result = _run_sssp(
         spark, graph.edges_w, seeds, cutoffs, sink_ids,
         is_target=_literal_in("(qid, node)", [(q, t) for q, _, t in live]),
+        strict=graph.min_length > 0,
     )
     # the last superstep's hits are the converged state's target rows
     hit_rows = {h["qid"]: h["dist"] for h in result.metrics[-1]["hits"]}

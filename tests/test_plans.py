@@ -195,6 +195,74 @@ def test_point_query_non_adaptive_supersteps(spark, graph1, monkeypatch):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_point_query_converges_on_dead_frontier(spark, graph1, monkeypatch):
+    """A point query stops on the superstep after which no row may relax
+    (``live == 0``), not one no-op superstep later. On graph1, whose
+    lengths are all positive, rows at exactly the target distance are
+    pruned too, so w1->w4 and w3->w6 take 2 supersteps (one superstep
+    more before either rule). The zero-length ``_TIE`` graph keeps the
+    ``<=`` prune and its 4 supersteps, and a kernel run with no targets
+    or sinks has ``live == cnt`` on every record."""
+    from networkx_graph_spark.graph import SparkDiGraph
+    from networkx_graph_spark.operators.sssp import (
+        bounded_sssp,
+        shortest_path,
+        shortest_paths_pairs,
+    )
+    from networkx_graph_spark.plans.supersteps import SuperstepRunner
+
+    results = []
+    run = SuperstepRunner.run
+
+    def recorded_run(self, *args, **kwargs):
+        result = run(self, *args, **kwargs)
+        results.append(result)
+        return result
+
+    monkeypatch.setattr(SuperstepRunner, "run", recorded_run)
+    assert graph1.min_length > 0
+    for source, target, want in [
+        ("w1", "w4", (10.0, ["w1", "w3", "w4"])),
+        ("w3", "w6", (20.0, ["w3", "w4", "w6"])),
+    ]:
+        results.clear()
+        p = shortest_path(graph1, source, target, 100.0)
+        assert (p.dist, p.nodes) == want
+        (r,) = results
+        assert r.converged and r.iterations == 2, (source, target, r.metrics)
+        assert r.metrics[-1]["live"] == 0
+        assert all(m["live"] > 0 for m in r.metrics[:-1]), r.metrics
+
+    tie = SparkDiGraph.from_lists(
+        spark,
+        [("n0", 1.0), ("n1", 0.0), ("n2", 0.0), ("n3", 0.0)],
+        [("n0", "n3"), ("n1", "n2"), ("n2", "n1"), ("n3", "n2")],
+    )
+    assert tie.min_length == 0
+    results.clear()
+    got = shortest_paths_pairs(tie, [("n0", "n2", 4.0), ("n3", "n1", 4.0)])
+    assert [(p.dist, p.nodes) for p in got.values()] == [
+        (0.0, ["n1", "n2"]),
+        (0.0, ["n3", "n2", "n1"]),
+    ]
+    (r,) = results
+    assert r.iterations == 4, r.metrics
+    tie.unpersist()
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(6)], "src long, dst long, weight double"
+    )
+    seeds = spark.createDataFrame(
+        [(0, 0, 0.0, -1, float("-inf"))],
+        "qid long, node long, dist double, prev long, prev_dist double",
+    )
+    results.clear()
+    bounded_sssp(spark, edges, seeds, cutoffs=100.0)
+    (r,) = results
+    assert r.iterations == 7, r.metrics
+    assert [m["live"] for m in r.metrics] == [m["cnt"] for m in r.metrics]
+
+
 _PAIRS = [("w1", "w7", 100.0), ("w3", "w6", 100.0)]
 
 
@@ -389,6 +457,24 @@ def test_runner_table_namespace(spark, tmp_path):
     # same dir -> same name (resume must find its own table)
     r1b = SuperstepRunner(spark, checkpoint_dir=d1, bucket_cols=["id"], bucket_count=4)
     assert r1._table_name("sssp", 3) == r1b._table_name("sssp", 3)
+
+
+def test_namespace_of_uri_ignores_working_dir(tmp_path, monkeypatch):
+    """A scheme-qualified URI names the same tables from any working dir;
+    a relative local path still resolves against the working dir."""
+    from networkx_graph_spark.bucketed import namespace
+
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    uri = f"file://{tmp_path}/g"
+    seen = {}
+    for wd in ("a", "b"):
+        monkeypatch.chdir(tmp_path / wd)
+        seen[wd] = (namespace(uri), namespace("g"), namespace(str(tmp_path / wd / "g")))
+    assert seen["a"][0] == seen["b"][0]
+    assert seen["a"][1] != seen["b"][1]
+    for wd in ("a", "b"):
+        assert seen[wd][1] == seen[wd][2]
 
 
 def _bindings_fwd(g):

@@ -325,6 +325,8 @@ def test_p2p_bounded_sssp_resume_parity(spark, tmp_path):
     assert reached == {(0, 0), (0, 1), (0, 2), (0, 10), (1, 20), (1, 21), (1, 22), (1, 23)}
     assert {(0, 3), (0, 11), (1, 24)} <= unpruned - reached
 
+    # the run went past superstep 1, so the resume re-runs a superstep
+    assert "iter=00002" in os.listdir(os.path.join(d, "p2p"))
     for entry in os.listdir(os.path.join(d, "p2p")):
         if entry.startswith("iter=") and int(entry.split("=")[1]) > 1:
             shutil.rmtree(os.path.join(d, "p2p", entry))
