@@ -801,10 +801,19 @@ FROM events GROUP BY 1, 2
 
 
 def q_sessions(spark, sf_dir):
-    from .streaming.events import sessionize_batch
-
-    ev = _read(spark, sf_dir, "events")
-    return sessionize_batch(ev, gap_minutes=30)
+    # native session windows: a user's events merge while each is less
+    # than 30 minutes after the last
+    ev = _read(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
+    return (
+        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 3).alias("total_value"))
+        .select(
+            "user_id",
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+            "n_events",
+            "total_value",
+        )
+    )
 
 
 SQL_SESSIONS = """

@@ -14,8 +14,6 @@ All queries ignore ``sf_dir`` (fixture-scale by construction).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: F401  (parity with contract.py)
-
 from .graph import SparkDiGraph
 
 REF_UBODT_BIN_SQL = """

@@ -19,9 +19,6 @@ All signatures are pure functions of (seed, content) — partition-invariant.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,12 +38,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         .filter(F.col(id_col) != F.col("keep_id"))
         .select(F.col(id_col), "keep_id")
     )
-
-
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one doc per normalized-text group (the min id)."""
-    dupes = exact_duplicates(docs, id_col, text_col).select(id_col)
-    return docs.join(dupes, id_col, "left_anti")
 
 
 # ------------------------------------------------------------- shingles

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video travel as ``binary`` columns with a typed metadata
-struct; decode/feature-extract/resize/frame-sample run as Arrow-batched
+struct; decode and feature extraction run as Arrow-batched
 ``mapInPandas`` operators. The decode step itself is STUBBED in this
 container (no image/audio libs): ``decode_image``/``decode_audio`` raise
 ``NotImplementedError`` unless ``fake=True``, in which case a
@@ -17,7 +17,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -103,17 +102,4 @@ def extract_features(
 
     return media.mapInPandas(
         _feat, schema="media_id long, kind string, features array<double>"
-    )
-
-
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """video -> (media_id, frame_idx): frame-sampling plan derived from
-    typed metadata (pure column expressions — the decode of each sampled
-    frame would plug into extract_features)."""
-    vids = media.filter(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
     )

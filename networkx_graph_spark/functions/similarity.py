@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window

@@ -22,8 +22,7 @@ plain weighted-edge relaxation.
 
 Scale notes: ``edges_w`` is hash-partitioned by ``src`` (the superstep join
 key) so every frontier-join reuses one partitioning; vertices join for the
-weight column happens once at build. Degree stats are computed here and
-drive hub-salting decisions in the kernels.
+weight column happens once at build.
 """
 
 from __future__ import annotations
@@ -333,18 +332,6 @@ class SparkDiGraph:
         return {n: got.get(n) for n in names}
 
     # -------------------------------------------------------- neighborhoods
-    def successors_df(self, ids: Optional[Sequence[int]] = None) -> DataFrame:
-        e = self.edges
-        if ids is not None:
-            e = e.filter(F.col("src").isin(list(ids)))
-        return e.select("src", "dst")
-
-    def predecessors_df(self, ids: Optional[Sequence[int]] = None) -> DataFrame:
-        e = self.edges
-        if ids is not None:
-            e = e.filter(F.col("dst").isin(list(ids)))
-        return e.select("src", "dst")
-
     def successors(self, name: str) -> list[str]:
         """str -> [str], reference parity (/root/reference/src/main.cpp:432-435)."""
         i = self.node_id(name)
@@ -511,16 +498,3 @@ class SparkDiGraph:
         for r in self.sibs_under_prev.collect():
             out.setdefault(nm[r["a"]], set()).add(nm[r["b"]])
         return out
-
-    # ------------------------------------------------------------ stats
-    @cached_property
-    def out_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").alias("out_degree")
-        )
-
-    @cached_property
-    def in_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("dst").alias("id")).agg(
-            F.count("*").alias("in_degree")
-        )

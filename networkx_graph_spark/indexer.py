@@ -23,8 +23,7 @@ Two implementations:
   the call order, which only exists driver-side anyway).
 - :func:`build_ids` — distributed bulk assignment for web-scale node sets
   (urls never parse as ints, so everything lands in the dense cursor range;
-  the rule is made deterministic by ordering on a caller-supplied column,
-  default the node string itself).
+  the rule is made deterministic by ordering on the node string).
 """
 
 from __future__ import annotations
@@ -113,19 +112,14 @@ class Indexer:
 _TAKEN_CAP = 10_000
 
 
-def build_ids(
-    nodes: DataFrame,
-    node_col: str = "node",
-    order_col: str | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def build_ids(nodes: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Distributed bulk id assignment: ``(node STRING) -> (node, id BIGINT)``.
 
     Same visible rule as the reference cursor/parse behavior, made
     deterministic for bulk (unordered) input: direct parses win their int;
-    among strings parsing to the same int the first in ``order_col`` order
-    wins; everything else gets dense ids ``1_000_000 + rank`` in
-    ``(order_col, node_col)`` order.
+    among strings parsing to the same int the least string wins;
+    everything else gets dense ids ``1_000_000 + rank`` in node-string
+    order.
 
     Scale shape (no global window — the web-scale case is 10^12 URLs, none
     of which parse): the direct-parse winner window partitions BY THE
@@ -135,7 +129,7 @@ def build_ids(
     counts collected once (one row per partition) and turned into
     broadcast offsets. The full node set never passes through one task,
     and ids are partition-count-invariant because they equal the global
-    (order, node) sort rank.
+    node sort rank.
 
     Direct-parsed ints ≥ 1e6 occupy cursor slots; dense ids skip them via
     the closed form ``shift(rank) = #{i : taken_sorted[i] - i <= rank}``
@@ -144,39 +138,32 @@ def build_ids(
     scale — capped at ``_TAKEN_CAP`` with a hard error, never silent.
     """
     spark = nodes.sparkSession
-    if order_col is None:
-        order_col = node_col
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if order_col == node_col:
-        n = nodes.select(node_col).distinct()
-    else:
-        n = nodes.groupBy(node_col).agg(F.min(order_col).alias(order_col))
+    n = nodes.select("node").distinct()
     body = F.when(
-        F.col(node_col).startswith("w"), F.expr(f"substring({node_col}, 2)")
-    ).otherwise(F.col(node_col))
+        F.col("node").startswith("w"), F.expr("substring(node, 2)")
+    ).otherwise(F.col("node"))
     parsed = F.regexp_extract(F.ltrim(body), r"^([+-]?[0-9]+)", 1)
     n = n.withColumn("_parsed", F.when(parsed != "", parsed.cast("long")))
     # winner-per-int window: partitions are the (tiny) groups of strings
     # that parse to the SAME int — NULL (unparsed) rows skip the window
     parsed_rows = n.filter(F.col("_parsed").isNotNull())
-    wp = Window.partitionBy("_parsed").orderBy(order_col, node_col)
+    wp = Window.partitionBy("_parsed").orderBy("node")
     parsed_rows = parsed_rows.withColumn("_rn", F.row_number().over(wp))
     direct = parsed_rows.filter(F.col("_rn") == 1).select(
-        node_col, F.col("_parsed").alias("id")
+        "node", F.col("_parsed").alias("id")
     )
-    sort_cols = [node_col] if order_col == node_col else [order_col, node_col]
-    keep = [node_col] if order_col == node_col else [node_col, order_col]
     fallback = (
         n.filter(F.col("_parsed").isNull())
-        .select(*keep)
-        .unionByName(parsed_rows.filter(F.col("_rn") > 1).select(*keep))
+        .select("node")
+        .unionByName(parsed_rows.filter(F.col("_rn") > 1).select("node"))
     )
     # ---- two-phase parallel dense rank over the sort key ----
     # localCheckpoint pins the range partitioning so the counts job and the
     # rank job see identical _pid assignments (single evaluation)
     fb = (
-        fallback.repartitionByRange(num_partitions, *sort_cols)
+        fallback.repartitionByRange(num_partitions, "node")
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
@@ -188,11 +175,11 @@ def build_ids(
     off_df = local_df(
         spark, [(p, o) for p, o in offsets.items()] or [(0, 0)], "_pid int, _off long"
     )
-    wl = Window.partitionBy("_pid").orderBy(*sort_cols)
+    wl = Window.partitionBy("_pid").orderBy("node")
     ranked = (
         fb.withColumn("_lrn", F.row_number().over(wl))
         .join(F.broadcast(off_df), "_pid")
-        .select(node_col, (F.col("_off") + F.col("_lrn") - 1).alias("_rank"))
+        .select("node", (F.col("_off") + F.col("_lrn") - 1).alias("_rank"))
     )
     # ---- cursor slots already taken by direct parses ----
     taken = sorted(
@@ -211,7 +198,7 @@ def build_ids(
     if taken:
         u = [t - i for i, t in enumerate(taken)]  # nondecreasing thresholds
         shift = F.size(F.filter(F.lit(u), lambda x: x <= base))
-        out_fb = ranked.select(node_col, (base + shift).alias("id"))
+        out_fb = ranked.select("node", (base + shift).alias("id"))
     else:
-        out_fb = ranked.select(node_col, base.alias("id"))
+        out_fb = ranked.select("node", base.alias("id"))
     return direct.unionByName(out_fb)

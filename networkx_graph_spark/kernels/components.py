@@ -42,23 +42,19 @@ def _vertices(edges: DataFrame) -> DataFrame:
     )
 
 
-def _sym(edges: DataFrame) -> DataFrame:
-    """Undirected view: both directions, self-loops dropped."""
-    return (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+def _partitions(spark) -> int:
+    """The session's shuffle partition count, which every CC and LPA
+    superstep plans with."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _sym_clustered(edges: DataFrame, num_partitions: int) -> DataFrame:
-    """``_sym`` + src-clustering in ONE exchange: the dedup runs
-    partition-local on top of the src-hash repartition the superstep join
-    needs anyway (HashPartitioning(src) satisfies
-    ClusteredDistribution([src, dst])) — the former
-    ``_sym().repartition()`` shape paid a (src, dst)-hash exchange AND a
-    src-hash exchange."""
+    """Undirected view (both directions, self-loops dropped, deduped) and
+    src-clustering in ONE exchange: the dedup runs partition-local on top
+    of the src-hash repartition the superstep join needs anyway
+    (HashPartitioning(src) satisfies ClusteredDistribution([src, dst])) —
+    a distinct-then-repartition shape pays a (src, dst)-hash exchange AND
+    a src-hash exchange."""
     return (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -79,21 +75,19 @@ def connected_components(
     runner: Optional[SuperstepRunner] = None,
     name: str = "components",
     resume: bool = False,
-    num_partitions: Optional[int] = None,
     exact_convergence: bool = False,
 ) -> SuperstepResult:
     """edges (src, dst) -> state (id, component), component = min id reachable.
+    Every superstep plans with the session's shuffle partition count.
 
     ``exact_convergence`` (twophase only): use the exact anti-join edge-set
     comparison instead of the default (count, sum(xxhash64)) signature —
     see ``_cc_twophase`` for the trade-off.
     """
     if algorithm == "hashmin":
-        return _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions)
+        return _cc_hashmin(edges, max_iter, runner, name, resume)
     if algorithm == "twophase":
-        return _cc_twophase(
-            edges, max_iter, runner, name, resume, num_partitions, exact_convergence
-        )
+        return _cc_twophase(edges, max_iter, runner, name, resume, exact_convergence)
     if algorithm == "blocked":
         if runner is not None or resume:
             raise ValueError(
@@ -101,11 +95,11 @@ def connected_components(
                 "supersteps run on run_block_centric's non-durable runner; "
                 "use hashmin/twophase for resumable runs"
             )
-        return _cc_blocked(edges, max_iter, num_partitions, name)
+        return _cc_blocked(edges, max_iter, name)
     raise ValueError(f"unknown algorithm: {algorithm}")
 
 
-def _cc_blocked(edges, max_iter, num_partitions, name):
+def _cc_blocked(edges, max_iter, name):
     """Block-centric CC: ``run_block_centric`` with the component as the
     label. Every vertex starts at its own id, every (symmetric) edge has
     weight 0 and passes the label on unchanged, so the fixpoint label is
@@ -117,9 +111,13 @@ def _cc_blocked(edges, max_iter, num_partitions, name):
     init = _vertices(edges).select(
         F.col("id").alias("node"), F.col("id").alias("component")
     )
-    ew = _sym(edges).select("src", "dst", F.lit(0.0).alias("weight"))
+    spark = edges.sparkSession
+    num_partitions = _partitions(spark)
+    ew = _sym_clustered(edges, num_partitions).select(
+        "src", "dst", F.lit(0.0).alias("weight")
+    )
     result = run_block_centric(
-        edges.sparkSession, name, ew, init, ["node"], ["component"],
+        spark, name, ew, init, ["node"], ["component"],
         "node long, component long", lambda lu, u, c, w: lu, float("inf"),
         num_partitions, 1024, max_iter,
     )
@@ -132,7 +130,7 @@ def _cc_blocked(edges, max_iter, num_partitions, name):
     return result
 
 
-def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
+def _cc_hashmin(edges, max_iter, runner, name, resume):
     """Hash-min as the frontier min-label merge: a vertex whose label fell
     last superstep sends it to its neighbours (Pregel's vote-to-halt).
     Labels only fall, so a vertex that kept its label has nothing new to
@@ -140,10 +138,8 @@ def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
     The merge's full-outer join keeps a vertex with no neighbour at its
     own id."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     runner = runner or SuperstepRunner(spark)
-    sym = _sym_clustered(edges, num_partitions).persist()
+    sym = _sym_clustered(edges, _partitions(spark)).persist()
     sym.count()
     merge = min_label_merge(["id"], ["component"])
     init = _vertices(edges).select(
@@ -166,9 +162,7 @@ def _cc_hashmin(edges, max_iter, runner, name, resume, num_partitions):
     return result
 
 
-def _cc_twophase(
-    edges, max_iter, runner, name, resume, num_partitions, exact_convergence=False
-):
+def _cc_twophase(edges, max_iter, runner, name, resume, exact_convergence=False):
     """Alternating large-star / small-star (Kiveris et al. SoCC'14).
 
     State = the edge set as parent links (u, v); converges when one
@@ -186,8 +180,7 @@ def _cc_twophase(
     (two extra count jobs per superstep) for correctness-gated runs.
     """
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = _partitions(spark)
     runner = runner or SuperstepRunner(spark)
     if runner.bucket_cols is not None:
         raise ValueError(

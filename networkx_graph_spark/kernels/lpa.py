@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.supersteps import SuperstepRunner, SuperstepResult
-from .components import _sym_clustered, _vertices
+from .components import _partitions, _sym_clustered, _vertices
 
 
 def label_propagation(
@@ -31,12 +31,11 @@ def label_propagation(
     runner: Optional[SuperstepRunner] = None,
     name: str = "lpa",
     resume: bool = False,
-    num_partitions: Optional[int] = None,
 ) -> SuperstepResult:
-    """edges (src, dst) -> state (id, label)."""
+    """edges (src, dst) -> state (id, label). Every superstep plans with
+    the session's shuffle partition count."""
     spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = _partitions(spark)
     runner = runner or SuperstepRunner(spark)
     sym = _sym_clustered(edges, num_partitions).persist()
     sym.count()

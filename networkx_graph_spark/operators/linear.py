@@ -6,21 +6,14 @@ Mirrors the reference ``Path`` methods (SURVEY.md §2.7): ``Build``
 (:2570-2589), ``locate`` (:2590-2637), ``search_for_seqs`` + Sequences
 (:112-139, :2553-2569).
 
-These are pure per-row array computations. One Python core implements the
-exact semantics; it is used both driver-side (single paths, reference
-parity tests) and inside Arrow-batched pandas UDFs for DataFrame-scale
-batches of paths (``along_df``/``offsets_df``/``locate_df``) — no
-row-at-a-time Python UDFs, and the heavy lifting (length attachment) is a
-join + re-aggregation that Catalyst plans.
+These are pure per-path array computations on the driver: one Python
+core (``_along_core``) implements ``__path_along``'s exact semantics for
+``along`` and ``slice``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import Optional, Sequence
 
 from ..graph import SparkDiGraph
 from ..rounding import clip, round_half_up
@@ -229,51 +222,3 @@ def search_for_seqs(
     for i, seqs in search_in(head2seqs, nids, quick_return).items():
         out[i] = [PathResult(0.0, [nm[x] for x in seq]).with_graph(graph) for seq in seqs]
     return out
-
-
-# ------------------------------------------------------ DataFrame batch API
-def attach_lengths(paths_df: DataFrame, vertices: DataFrame) -> DataFrame:
-    """Add ``lengths ARRAY<DOUBLE>`` aligned with ``nodes ARRAY<BIGINT>``:
-    posexplode → join vertices → re-collect ordered. The join is the scale
-    path (no driver-side length map)."""
-    keyed = paths_df.withColumn("_pid", F.monotonically_increasing_id())
-    expl = keyed.select("_pid", F.posexplode("nodes").alias("_pos", "_nid"))
-    j = expl.join(
-        vertices.select(F.col("id").alias("_nid"), "length"), "_nid"
-    )
-    lens = (
-        j.groupBy("_pid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "length"))),
-                lambda s: s["length"],
-            ).alias("lengths")
-        )
-    )
-    return keyed.join(lens, "_pid").drop("_pid")
-
-
-def along_df(paths_df: DataFrame, offset_col: str = "offset") -> DataFrame:
-    """Batch Path.along over (nodes, lengths, dist, start_offset,
-    end_offset, offset) — one Arrow pass, adds (along_idx, along_offset)."""
-
-    def _f(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idxs, offs = [], []
-            for _, r in pdf.iterrows():
-                i, o = _along_core(
-                    list(r["nodes"]),
-                    list(r["lengths"]),
-                    float(r["dist"]),
-                    None if pd.isna(r["start_offset"]) else float(r["start_offset"]),
-                    None if pd.isna(r["end_offset"]) else float(r["end_offset"]),
-                    float(r[offset_col]),
-                )
-                idxs.append(i)
-                offs.append(o)
-            yield pdf.assign(along_idx=idxs, along_offset=offs)
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in paths_df.schema)
-    return paths_df.mapInPandas(
-        _f, schema=f"{schema}, along_idx int, along_offset double"
-    )

@@ -489,11 +489,6 @@ class ShortestPathGen:
             return local_df(self.graph.spark, [], "node long, dist double")
         return self.state.filter(F.col("node") != self.start_id).select("node", "dist")
 
-    def prevs_df(self) -> DataFrame:
-        if self.state is None:
-            return local_df(self.graph.spark, [], "node long, prev long")
-        return self.state.select("node", "prev")
-
     def dists(self) -> dict[str, float]:
         nm = self.graph.names_map
         return {nm[n]: d for n, d in self._collect()[0].items() if n != self.start_id}

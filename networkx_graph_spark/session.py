@@ -99,7 +99,13 @@ def local_df(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
 #   superstep re-exchanges and re-sorts the vertex state twice). 16M edges,
 #   5 iterations, warm: 23.7 s with AQE off vs 27.5 s with it on. There is
 #   no skew for AQE to split: in-degree hubs collapse in the map-side
-#   partial sum, and out-degree hubs are far below a partition.
+#   partial sum, and out-degree hubs are far below a partition. Under an
+#   adversarial src hub AQE off still wins: 4.0M distinct edges
+#   (``powerlaw_edges(1M, 3.6M)`` plus 400k out-edges of vertex 0, which
+#   then owns 10.4% of them), tol=0, 5 iterations, local[4] on a 4-vCPU
+#   host, 4 shuffle partitions, 3 alternating warm pairs: 16.7 s median
+#   (16.0-17.2) off vs 19.4 s (18.0-21.7) on. A src hub costs time in the
+#   state⋈edges join, which a salted dst aggregation cannot split.
 # - sssp (every ``bounded_sssp`` caller: pairs, single source, bindings,
 #   UBODT): AQE off. A point query's supersteps move a few hundred rows,
 #   so its time is in Spark jobs, and under AQE every shuffle stage of a

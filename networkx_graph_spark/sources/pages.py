@@ -151,43 +151,37 @@ def parse_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-def pages_to_edges(
-    pages: DataFrame, restrict_to_corpus: bool = True
-) -> DataFrame:
-    """pages -> distinct (src_url, dst_url); optionally only edges whose
-    target is itself a page in the corpus (semi-join against the url set —
-    at scale both sides are huge, so this is a plain shuffled semi-join on
-    the url key; no broadcast)."""
+def pages_to_edges(pages: DataFrame) -> DataFrame:
+    """pages -> distinct (src_url, dst_url), only edges whose target is
+    itself a page in the corpus (semi-join against the url set — at scale
+    both sides are huge, so this is a plain shuffled semi-join on the url
+    key; no broadcast)."""
     parsed = parse_pages(pages)
     edges = (
         parsed.select(F.col("url").alias("src_url"), F.explode("links").alias("dst_url"))
         .filter(F.col("src_url") != F.col("dst_url"))
         .distinct()
     )
-    if restrict_to_corpus:
-        urls = pages.select(F.col("url").alias("dst_url")).distinct()
-        edges = edges.join(urls, "dst_url", "left_semi")
-    return edges.select("src_url", "dst_url")
+    urls = pages.select(F.col("url").alias("dst_url")).distinct()
+    return edges.join(urls, "dst_url", "left_semi").select("src_url", "dst_url")
 
 
-def encode_edges(
-    edges_urls: DataFrame, ids: Optional[DataFrame] = None
-) -> tuple[DataFrame, DataFrame]:
+def encode_edges(edges_urls: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(src_url, dst_url) -> ((src, dst) BIGINT edges, ids dictionary).
 
     Dictionary encoding (the Indexer contract, SURVEY.md §1.7): joins on
     dense longs instead of long url strings — Catalyst/Tungsten joins and
-    parquet dictionary pages both benefit.
+    parquet dictionary pages both benefit. The dictionary is built over
+    the edges' own endpoints.
     """
     from ..indexer import build_ids
 
-    if ids is None:
-        nodes = (
-            edges_urls.select(F.col("src_url").alias("node"))
-            .unionByName(edges_urls.select(F.col("dst_url").alias("node")))
-            .distinct()
-        )
-        ids = build_ids(nodes)
+    nodes = (
+        edges_urls.select(F.col("src_url").alias("node"))
+        .unionByName(edges_urls.select(F.col("dst_url").alias("node")))
+        .distinct()
+    )
+    ids = build_ids(nodes)
     out = (
         edges_urls.join(ids.withColumnRenamed("node", "src_url"), "src_url")
         .withColumnRenamed("id", "src")

@@ -1,8 +1,6 @@
 """Partition-invariance / determinism gates (north rule: identical
 results at different parallelism; SURVEY.md §5e)."""
 
-from pyspark.sql import functions as F
-
 from networkx_graph_spark.sources.datagen import powerlaw_edges, uniform_edges
 
 
@@ -52,26 +50,3 @@ def test_sssp_partition_invariant(spark):
     d2, p2 = run(16)
     assert d1 == d2
     assert p1 == p2
-
-
-def test_salted_sum_equals_plain(spark):
-    from pyspark.sql import functions as F
-
-    from networkx_graph_spark.plans.skew import hot_keys, salted_sum
-    from networkx_graph_spark.sources.datagen import powerlaw_edges
-
-    edges = powerlaw_edges(spark, 2_000, 50_000, seed=13)
-    msgs = edges.select("src", "dst", (F.col("src") % 7 / 10.0 + 0.1).alias("c"))
-    hot = hot_keys(msgs, "dst", threshold=100)
-    assert hot.count() > 0  # the power-law generator makes real hubs
-    plain = {
-        r["dst"]: r["c"]
-        for r in msgs.groupBy("dst").agg(F.sum("c").alias("c")).collect()
-    }
-    salted = {
-        r["dst"]: r["c"]
-        for r in salted_sum(msgs, "dst", "c", hot, salt_source=F.col("src")).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert abs(plain[k] - salted[k]) < 1e-9, k

@@ -106,18 +106,21 @@ def test_components_disconnected(spark):
 
 
 def _lpa_oracle(edges, max_iter=20):
-    from collections import Counter, defaultdict
+    from collections import Counter
 
-    nbrs = defaultdict(set)
+    nbrs = {x: set() for e in edges for x in e}  # self-loop endpoints too
     for u, v in edges:
-        nbrs[u].add(v)
-        nbrs[v].add(u)
+        if u != v:
+            nbrs[u].add(v)
+            nbrs[v].add(u)
     labels = {v: v for v in nbrs}
     for _ in range(max_iter):
         new = {}
         for v in nbrs:
+            # most frequent neighbour label, ties to the smallest; a vertex
+            # with no neighbour keeps its label
             counts = Counter(labels[u] for u in nbrs[v])
-            best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
+            best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]), default=(labels[v],))
             new[v] = best[0]
         if new == labels:
             break
@@ -130,6 +133,37 @@ def test_lpa_vs_oracle(spark, edges_df):
     got = {r["id"]: r["label"] for r in res.state.collect()}
     want = _lpa_oracle(_random_edges(), max_iter=res.iterations)
     assert got == want
+
+
+def test_cc_lpa_follow_session_partitions(spark):
+    """CC and LPA plan with the session's shuffle partition count; their
+    answers must not depend on it. One graph holds a hub with 20 leaves, a
+    15-node chain, a triangle, an isolated pair, a duplicate edge and a
+    self-loop on an otherwise isolated vertex."""
+    from networkx_graph_spark.session import kernel_conf
+
+    edges = (
+        [(0, i) for i in range(1, 21)] + [(1, 0)]
+        + [(i, i + 1) for i in range(100, 114)]
+        + [(200, 201), (201, 202), (202, 200)]
+        + [(300, 301), (300, 301)]
+        + [(400, 400)]
+    )
+    e = spark.createDataFrame(edges, "src long, dst long")
+    want_cc = _cc_oracle(edges)
+    for parts in ("1", "3"):
+        with kernel_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            for algo in ("hashmin", "twophase", "blocked"):
+                got = {
+                    r["id"]: r["component"]
+                    for r in connected_components(e, algorithm=algo).state.collect()
+                }
+                assert got == want_cc, (algo, parts)
+            got = {
+                r["id"]: r["label"]
+                for r in label_propagation(e, max_iter=3).state.collect()
+            }
+            assert got == _lpa_oracle(edges, max_iter=3), parts
 
 
 def _triangles_oracle(edges):

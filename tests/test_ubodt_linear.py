@@ -191,21 +191,3 @@ def test_sequences(graph1):
     assert [p.nodes for p in hits[2]] == [["w4", "w6", "w7"]]
     quick = search_for_seqs(graph1, path, seqs, quick_return=True)
     assert len(quick) == 1
-
-
-def test_along_df_batch(graph1, spark):
-    from networkx_graph_spark.operators.linear import along_df, attach_lengths
-
-    pdf = spark.createDataFrame(
-        [
-            ([1, 3, 4, 6, 7], 33.0, None, None, 5.0),
-            ([1, 3, 4, 6, 7], 33.0, None, None, 32.999),
-        ],
-        "nodes array<long>, dist double, start_offset double, end_offset double, offset double",
-    )
-    with_len = attach_lengths(pdf, graph1.vertices)
-    rows = along_df(with_len).collect()
-    got = {r["offset"]: (r["along_idx"], r["along_offset"]) for r in rows}
-    assert got[5.0] == (1, 5.0)
-    assert got[32.999][0] == 3
-    assert got[32.999][1] == pytest.approx(2.999)  # raw; rounding is a column op

@@ -141,14 +141,13 @@ def main(argv=None) -> int:
             edges, algorithm=args.algorithm, max_iter=args.max_iter,
             runner=runner if args.algorithm != "blocked" else None,
             name=name, resume=args.resume and args.algorithm != "blocked",
-            num_partitions=nparts,
         )
     elif args.kernel == "lpa":
         from networkx_graph_spark.kernels.lpa import label_propagation
 
         res = label_propagation(
             edges, max_iter=args.max_iter, runner=runner, name=name,
-            resume=args.resume, num_partitions=nparts,
+            resume=args.resume,
         )
     elif args.kernel == "build-graph":
         # pages/edges -> traversal-ready saved graph artifact: with
