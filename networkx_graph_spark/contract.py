@@ -155,24 +155,20 @@ TRI_HASH_EDGES_SQL = """
 """
 
 
-def q_triangle_count(spark, sf_dir):
-    from .kernels.triangles import triangle_count
-
+def _tri_hash_edges(spark, sf_dir):
+    """TRI_HASH_EDGES_SQL in Spark: the hashed lineitem edge table."""
     li = _read(spark, sf_dir, "lineitem")
-    e = li.select(
+    return li.select(
         (F.col("l_orderkey") % 500).alias("src"),
         ((F.col("l_partkey") * 13 + F.col("l_suppkey")) % 500).alias("dst"),
     ).filter(F.col("src") != F.col("dst")).distinct()
-    n = triangle_count(e)
+
+
+def q_triangle_count(spark, sf_dir):
+    from .kernels.triangles import triangle_count
+
+    n = triangle_count(_tri_hash_edges(spark, sf_dir))
     return spark.createDataFrame([(n,)], "n_triangles long")
-
-
-SQL_TRIANGLES = f"""
-WITH e AS ({TRI_HASH_EDGES_SQL}),
-und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e)
-SELECT count(*) AS n_triangles
-FROM und e1 JOIN und e2 ON e2.a = e1.b JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b
-"""
 
 
 def q_triangle_per_vertex(spark, sf_dir):
@@ -181,28 +177,8 @@ def q_triangle_per_vertex(spark, sf_dir):
     edge table as triangle_count."""
     from .kernels.triangles import triangle_count_per_vertex
 
-    li = _read(spark, sf_dir, "lineitem")
-    e = li.select(
-        (F.col("l_orderkey") % 500).alias("src"),
-        ((F.col("l_partkey") * 13 + F.col("l_suppkey")) % 500).alias("dst"),
-    ).filter(F.col("src") != F.col("dst")).distinct()
-    return triangle_count_per_vertex(e)
+    return triangle_count_per_vertex(_tri_hash_edges(spark, sf_dir))
 
-
-SQL_TRIANGLES_PER_VERTEX = f"""
-WITH e AS ({TRI_HASH_EDGES_SQL}),
-und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
-tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM und e1 JOIN und e2 ON e2.a = e1.b JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-verts AS (SELECT DISTINCT src AS v FROM e UNION SELECT DISTINCT dst AS v FROM e),
-cnt AS (
-  SELECT v, count(*) AS n FROM (
-    SELECT x AS v FROM tri UNION ALL SELECT y AS v FROM tri UNION ALL SELECT z AS v FROM tri
-  ) GROUP BY v)
-SELECT verts.v AS id, CAST(COALESCE(cnt.n, 0) AS BIGINT) AS triangles
-FROM verts LEFT JOIN cnt ON cnt.v = verts.v
-"""
 
 # K4 merged surface: per-vertex counts + the global count as an id=-1
 # sentinel row (one driver row covers both kernel entry points; vertex ids
@@ -283,21 +259,15 @@ def q_sssp_csr_dag(spark, sf_dir):
     """Same query as sssp_dag but through the CSR-blocked block-centric
     kernel — both must match the recursive-CTE oracle."""
     from .graph import SparkDiGraph
-    from .operators.sssp import NEG_INF
+    from .operators.sssp import source_seeds
     from .operators.sssp_csr import bounded_sssp_csr
+    from .session import local_df
 
     e = tri_edges(spark, sf_dir)
     g = SparkDiGraph.from_edge_df(spark, e)
     src = _read(spark, sf_dir, "orders").agg(F.min("o_custkey")).collect()[0][0]
-    seeds = (
-        g.edges_w.filter(F.col("src") == int(src))
-        .select(
-            F.lit(0).cast("long").alias("qid"),
-            F.col("dst").alias("node"),
-            F.lit(0.0).alias("dist"),
-            F.col("src").alias("prev"),
-            F.lit(NEG_INF).alias("prev_dist"),
-        )
+    seeds = source_seeds(
+        g.edges_w, local_df(spark, [(0, int(src), 0.0)], "qid long, sid long, ioff double")
     )
     state = bounded_sssp_csr(spark, g.edges_w, seeds, 1.5, num_blocks=8)
     out = state.filter(F.col("node") != int(src)).select("node", "dist")
@@ -339,14 +309,12 @@ GEO_EDGES_SQL = """
 """
 
 
-def q_cc_blocked_geo(spark, sf_dir):
-    """Same containment graph, block-centric CC (CSR-kernel reuse) — must
-    match the identical recursive-closure oracle as the two-phase run."""
-    from .kernels.components import connected_components
-
+def _geo_edges(spark, sf_dir):
+    """GEO_EDGES_SQL in Spark: the supplier->nation->region containment
+    graph."""
     nation = _read(spark, sf_dir, "nation")
     supplier = _read(spark, sf_dir, "supplier")
-    e = (
+    return (
         nation.select(
             (F.lit(100) + F.col("n_nationkey")).cast("long").alias("src"),
             F.col("n_regionkey").cast("long").alias("dst"),
@@ -359,7 +327,14 @@ def q_cc_blocked_geo(spark, sf_dir):
         )
         .distinct()
     )
-    return connected_components(e, algorithm="blocked").state
+
+
+def q_cc_blocked_geo(spark, sf_dir):
+    """Same containment graph, block-centric CC (CSR-kernel reuse) — must
+    match the identical recursive-closure oracle as the two-phase run."""
+    from .kernels.components import connected_components
+
+    return connected_components(_geo_edges(spark, sf_dir), algorithm="blocked").state
 
 
 def q_cc_full_geo(spark, sf_dir):
@@ -369,26 +344,7 @@ def q_cc_full_geo(spark, sf_dir):
     closure."""
     from .kernels.components import connected_components
 
-    nation = _read(spark, sf_dir, "nation")
-    supplier = _read(spark, sf_dir, "supplier")
-    e = (
-        nation.select(
-            (F.lit(100) + F.col("n_nationkey")).cast("long").alias("src"),
-            F.col("n_regionkey").cast("long").alias("dst"),
-        )
-        .unionByName(
-            supplier.select(
-                (F.lit(1000) + F.col("s_suppkey")).cast("long").alias("src"),
-                (F.lit(100) + F.col("s_nationkey")).cast("long").alias("dst"),
-            )
-        )
-        .distinct()
-    )
-    return connected_components(
-        # oracle-gated context: exact anti-join convergence, not the
-        # 2^-64 hash-signature shortcut (bench keeps the default)
-        e, algorithm="twophase", exact_convergence=True
-    ).state
+    return connected_components(_geo_edges(spark, sf_dir), algorithm="twophase").state
 
 
 SQL_CC_FULL_GEO = f"""
@@ -1030,12 +986,7 @@ FROM {prev}
 def q_cc_converged(spark, sf_dir):
     from .kernels.components import connected_components
 
-    e = tri_edges(spark, sf_dir)
-    return connected_components(
-        # oracle-gated context: exact anti-join convergence, not the
-        # 2^-64 hash-signature shortcut (bench keeps the default)
-        e, algorithm="twophase", exact_convergence=True
-    ).state
+    return connected_components(tri_edges(spark, sf_dir), algorithm="twophase").state
 
 
 def q_lpa(spark, sf_dir):
@@ -1145,9 +1096,6 @@ def _zigzag_dag_impl(spark, sf_dir, use_csr: bool):
     from .graph import SparkDiGraph
     from .operators.zigzag import shortest_zigzag_path
 
-    e = tri_edges(spark, sf_dir).filter(
-        (F.col("src") < 20) | (F.col("dst") >= 1_000_000)
-    )
     # keep it bounded: orders of the first customers only
     orders = tri_edges(spark, sf_dir).filter(F.col("src") < 20)
     parts = tri_edges(spark, sf_dir).join(

@@ -2,7 +2,9 @@
 
 Canonical kernel (north rule, BASELINE.json:14). Component label = the
 minimum vertex id in the (weakly) connected component — identical for all
-three algorithms, so they cross-check each other.
+three algorithms, so they cross-check each other. Each stops on an exact
+test, runs on the caller's ``SuperstepRunner`` (durable checkpoints and
+``resume`` alike), and leaves bucket checks to that runner.
 
 - ``hash-min``: the frontier min-label merge (operators/relax.py) with
   the component as the label — each superstep the vertices whose label
@@ -14,11 +16,13 @@ three algorithms, so they cross-check each other.
 - ``two-phase``: alternating large-star/small-star rewrites (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14) —
   O(log n) rounds on high-diameter graphs; the edge set itself is the
-  state and converges to stars rooted at component minima.
+  state and converges to stars rooted at component minima. A superstep
+  whose (count, hash-sum) signature equals the previous one is confirmed
+  by an anti-join, so the stop is exact.
 
-Scale: hash-min and two-phase are pure join+groupBy supersteps over
-(id-keyed) state, AQE skew handling on; state checkpoints per superstep
-via SuperstepRunner.
+Scale: hash-min and two-phase are pure join+groupBy supersteps, AQE skew
+handling on. The state's key is ``id`` (hash-min), ``node`` (blocked) or
+``u`` (two-phase); a bucketed runner must bucket by it.
 """
 
 from __future__ import annotations
@@ -75,39 +79,27 @@ def connected_components(
     runner: Optional[SuperstepRunner] = None,
     name: str = "components",
     resume: bool = False,
-    exact_convergence: bool = False,
 ) -> SuperstepResult:
     """edges (src, dst) -> state (id, component), component = min id reachable.
-    Every superstep plans with the session's shuffle partition count.
-
-    ``exact_convergence`` (twophase only): use the exact anti-join edge-set
-    comparison instead of the default (count, sum(xxhash64)) signature —
-    see ``_cc_twophase`` for the trade-off.
-    """
+    Every superstep plans with the session's shuffle partition count."""
     if algorithm == "hashmin":
         return _cc_hashmin(edges, max_iter, runner, name, resume)
     if algorithm == "twophase":
-        return _cc_twophase(edges, max_iter, runner, name, resume, exact_convergence)
+        return _cc_twophase(edges, max_iter, runner, name, resume)
     if algorithm == "blocked":
-        if runner is not None or resume:
-            raise ValueError(
-                "algorithm='blocked' does not support runner/resume — its "
-                "supersteps run on run_block_centric's non-durable runner; "
-                "use hashmin/twophase for resumable runs"
-            )
-        return _cc_blocked(edges, max_iter, name)
+        return _cc_blocked(edges, max_iter, runner, name, resume)
     raise ValueError(f"unknown algorithm: {algorithm}")
 
 
-def _cc_blocked(edges, max_iter, name):
+def _cc_blocked(edges, max_iter, runner, name, resume):
     """Block-centric CC: ``run_block_centric`` with the component as the
     label. Every vertex starts at its own id, every (symmetric) edge has
     weight 0 and passes the label on unchanged, so the fixpoint label is
     the minimum id reachable. The block-local fixpoint collapses
     arbitrarily long intra-block chains (range blocks of 1024 ids) into
     one superstep, so global rounds ≈ block-boundary crossings instead of
-    graph diameter (the high-diameter lever; twophase remains the
-    O(log n) default)."""
+    graph diameter (the high-diameter lever; twophase is the O(log n)
+    one)."""
     init = _vertices(edges).select(
         F.col("id").alias("node"), F.col("id").alias("component")
     )
@@ -119,7 +111,7 @@ def _cc_blocked(edges, max_iter, name):
     result = run_block_centric(
         spark, name, ew, init, ["node"], ["component"],
         "node long, component long", lambda lu, u, c, w: lu, float("inf"),
-        num_partitions, 1024, max_iter,
+        num_partitions, 1024, max_iter, runner=runner, resume=resume,
     )
     if not result.converged:
         raise RuntimeError(
@@ -162,33 +154,22 @@ def _cc_hashmin(edges, max_iter, runner, name, resume):
     return result
 
 
-def _cc_twophase(edges, max_iter, runner, name, resume, exact_convergence=False):
+def _cc_twophase(edges, max_iter, runner, name, resume):
     """Alternating large-star / small-star (Kiveris et al. SoCC'14).
 
     State = the edge set as parent links (u, v); converges when one
     round of large-star + small-star changes nothing; final state maps
     every vertex to the component minimum.
 
-    Convergence detection is PROBABILISTIC by default: the edge set is
-    compared between rounds via an order-insensitive (count,
-    sum(xxhash64(u,v))) signature observed on the materialize action
-    (1 Spark job per superstep). A 64-bit multiset-hash collision between
-    consecutive DIFFERENT edge sets (~2^-64 per round) would declare
-    convergence one round early and return wrong components; it also
-    burns one extra confirming superstep on an already-converged input.
-    ``exact_convergence=True`` restores the exact anti-join set comparison
-    (two extra count jobs per superstep) for correctness-gated runs.
+    The stop is exact: an order-insensitive (count, sum(xxhash64(u, v)))
+    signature rides the materialize action, and a signature that differs
+    from the previous superstep's proves the edge set changed. An equal
+    signature (the converging superstep, or a hash collision) is confirmed
+    by one anti-join against the previous state.
     """
     spark = edges.sparkSession
     num_partitions = _partitions(spark)
     runner = runner or SuperstepRunner(spark)
-    if runner.bucket_cols is not None:
-        raise ValueError(
-            "two-phase CC state is the EDGE set (u, v), not id-keyed vertex "
-            "state — bucketed co-partitioned checkpoints apply to "
-            "algorithm='hashmin'; plain durable checkpoints (no bucket_cols) "
-            "work with twophase"
-        )
     # used exactly once, in the final label join AFTER convergence — keep it
     # lazy (the former eager persist+count paid a full edge pass before the
     # first superstep for a table read once at the end)
@@ -262,20 +243,17 @@ def _cc_twophase(edges, max_iter, runner, name, resume, exact_convergence=False)
             .dropDuplicates(["u", "v"])
         )
 
-    # convergence = the edge SET stopped changing. Instead of two anti-join
-    # count() jobs per superstep, observe an order-insensitive set signature
-    # (count + sum of xxhash64(u, v)) ON the materialize action and compare
-    # driver-side with the previous superstep's record — one Spark job per
-    # superstep (same trick as PageRank's Observation metrics).
+    # convergence = the edge SET stopped changing. The set signature
+    # (count + sum of xxhash64(u, v)) rides the materialize action, so a
+    # superstep that changed the set costs no extra job; only an equal
+    # signature pays the anti-join that proves the sets equal.
     def step(state: DataFrame, i: int, prev):
         def changed(new_state, got):
-            if prev is None or prev.get("cnt") != got["cnt"]:
+            if prev is None or (prev.get("cnt"), prev.get("chk")) != (got["cnt"], got["chk"]):
                 return 1
-            if exact_convergence:
-                # equal cardinality + both sides distinct: new ⊆ old ⇒
-                # equal (the runner frees the old state only after this)
-                return new_state.join(state, ["u", "v"], "left_anti").limit(1).count()
-            return int(prev.get("chk") != got["chk"])
+            # equal cardinality + both sides distinct: new ⊆ old ⇒ equal
+            # (the runner frees the old state only after this)
+            return new_state.join(state, ["u", "v"], "left_anti").limit(1).count()
 
         return small_star(large_star(state)), {
             "cnt": F.count(F.lit(1)),

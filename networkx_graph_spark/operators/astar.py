@@ -8,12 +8,8 @@ heuristic the returned path equals Dijkstra's, which the reference's own
 API contract relies on.
 
 In a fixpoint superstep kernel there is no heap to order, so endpoints
-change nothing about the result; the value here is (a) the ``Endpoints``
-encode surface for API parity and (b) an OPTIONAL pruning predicate
-``dist(v) + h(v) > cutoff`` that shrinks the frontier when the caller
-asserts the heuristic is admissible for their graph (true for road
-networks where node lengths dominate straight-line gaps; NOT enforced).
-Pruning is off by default so results are always reference-exact.
+change no result: this module is the ``Endpoints`` encode surface and the
+reference heuristic, kept for API parity. No kernel prunes with it.
 """
 
 from __future__ import annotations

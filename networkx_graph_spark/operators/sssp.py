@@ -360,13 +360,9 @@ class PathResult:
     start_offset: Optional[float] = None
     end_offset: Optional[float] = None
     binding: Optional[tuple] = None
-    directions: Optional[list[int]] = None  # zigzag only
     graph: Optional["SparkDiGraph"] = field(default=None, repr=False, compare=False)
 
-    _FIELDS = (
-        "dist", "nodes", "start_offset", "end_offset", "binding",
-        "directions", "graph",
-    )
+    _FIELDS = ("dist", "nodes", "start_offset", "end_offset", "binding", "graph")
     # readonly keys per the reference __setitem__ guard
     # (/root/reference/src/main.cpp:2513-2523)
     _RESERVED = ("graph", "dist", "nodes", "_signature", "start", "end", "binding")
@@ -438,8 +434,6 @@ class PathResult:
         }
         if self.binding is not None:
             d["binding"] = self.binding
-        if self.directions is not None:
-            d["directions"] = list(self.directions)
         # dynamic attrs (reference py::dynamic_attr parity,
         # /root/reference/tests/test_basic.py:1291-1292)
         for k, v in self.__dict__.items():
@@ -649,8 +643,8 @@ def shortest_path(
     ``endpoints``: accepted for API parity with the reference's A* path
     (/root/reference/src/main.cpp:606-609). A* is a heap-ordering
     optimization whose result equals Dijkstra's; the fixpoint kernel has
-    no heap, so endpoints do not change results (see operators/astar.py
-    for the heuristic surface and the optional pruning rationale).
+    no heap, so endpoints do not change results (operators/astar.py holds
+    the endpoints encoding and the heuristic).
 
     Delegates to ``shortest_paths_pairs`` (a batch of one): seeding and
     the kernel are join-based and distributed — no driver-side successor

@@ -112,12 +112,14 @@ def _local_relax_factory(key, label, rule, extra, num_blocks, cutoff, block_widt
 
 def run_block_centric(
     spark, name, edges, init, key, label, schema, rule, cutoff, num_blocks,
-    block_width, max_iter, extra=(),
+    block_width, max_iter, extra=(), runner=None, resume=False,
 ) -> SuperstepResult:
     """The block-centric superstep loop of both CSR kernels. ``init`` is the
     seed state, ``schema`` the DDL of ``key + label``, ``extra`` the edge
     columns besides (src, dst, weight) that ``rule`` reads; ``num_blocks``
-    None means the session's shuffle partitions.
+    None means the session's shuffle partitions. ``runner``/``resume`` are
+    the caller's, as for every other superstep loop (default: a plain
+    non-durable runner).
 
     One Spark job per superstep: the state carries a ``_new`` frontier
     flag and the improved-row count rides the runner's checkpoint action
@@ -141,9 +143,9 @@ def run_block_centric(
         )
         return merge(state, msgs)
 
-    result = SuperstepRunner(spark).run(
+    result = (runner or SuperstepRunner(spark)).run(
         name, init.withColumn("_new", F.lit(True)), step, max_iter=max_iter,
-        converged_key="cnt",
+        converged_key="cnt", resume=resume,
     )
     return replace(result, state=result.state.select(*init.columns))
 

@@ -297,40 +297,49 @@ def test_pagerank_fused_resume_iteration_count(spark, edges_df, tmp_path):
     assert all(abs(a[k] - b[k]) < 1e-12 for k in a)
 
 
-def test_cc_twophase_exact_convergence(spark):
-    """exact_convergence=True (anti-join set comparison) must agree with
-    the default signature-based detection."""
+def test_cc_twophase_stops_exactly_under_hash_collisions(spark, monkeypatch):
+    """The two-phase stop rule is exact: with every edge hashing to the
+    same value, consecutive different edge sets of equal size share a
+    signature, and only the anti-join tells them apart. The components
+    must still be union-find's."""
     from networkx_graph_spark.kernels.components import connected_components
 
+    monkeypatch.setattr(F, "xxhash64", lambda *c: F.lit(0).cast("long"))
     rows = [(i, i + 1) for i in range(30)] + [(100, 101), (101, 102), (102, 100)]
     e = spark.createDataFrame(rows, "src long, dst long")
-    exact = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            e, algorithm="twophase", exact_convergence=True
-        ).state.collect()
-    }
-    sig = {
-        r["id"]: r["component"]
-        for r in connected_components(e, algorithm="twophase").state.collect()
-    }
-    assert exact == sig
-    assert exact[30] == 0 and exact[102] == 100
+    res = connected_components(e, algorithm="twophase")
+    assert res.converged
+    got = {r["id"]: r["component"] for r in res.state.collect()}
+    assert got == _cc_oracle(rows)
 
 
-def test_cc_blocked_rejects_runner_and_resume(spark):
-    """blocked CC runs outside the SuperstepRunner protocol — silently
-    ignoring runner/resume would fake a resumable run."""
-    import pytest as _pytest
-
+def test_cc_blocked_checkpoint_resume(spark, tmp_path):
+    """Crash/resume parity for block-centric CC on the caller's runner: a
+    chain over ids i*1024 puts every vertex in its own block, so each
+    superstep crosses one block boundary. Crash after superstep 2; the
+    resumed run re-enters at 3 and ends on the same components."""
     from networkx_graph_spark.kernels.components import connected_components
     from networkx_graph_spark.plans.supersteps import SuperstepRunner
 
-    e = spark.createDataFrame([(0, 1)], "src long, dst long")
-    with _pytest.raises(ValueError, match="blocked"):
-        connected_components(e, algorithm="blocked", runner=SuperstepRunner(spark))
-    with _pytest.raises(ValueError, match="blocked"):
-        connected_components(e, algorithm="blocked", resume=True)
+    rows = [(i * 1024, (i + 1) * 1024) for i in range(7)]
+    e = spark.createDataFrame(rows, "src long, dst long")
+    d = str(tmp_path / "ckb")
+    full = connected_components(
+        e, algorithm="blocked", runner=SuperstepRunner(spark, checkpoint_dir=d),
+        name="ccb",
+    )
+    a = {r["id"]: r["component"] for r in full.state.collect()}
+    assert a == _cc_oracle(rows)
+    assert full.iterations > 3  # crash point must be mid-fixpoint
+    _crash_after(d, "ccb", 2)
+    resumed = connected_components(
+        e, algorithm="blocked", runner=SuperstepRunner(spark, checkpoint_dir=d),
+        name="ccb", resume=True,
+    )
+    b = {r["id"]: r["component"] for r in resumed.state.collect()}
+    assert a == b
+    assert resumed.metrics[0]["iteration"] == 3
+    assert resumed.converged
 
 
 def test_cc_blocked_raises_on_max_iter_exhaustion(spark):
@@ -515,7 +524,7 @@ def test_cc_twophase_rejects_bucketed_runner(spark, tmp_path):
     r = SuperstepRunner(
         spark, checkpoint_dir=str(tmp_path / "x"), bucket_cols=["id"], bucket_count=4
     )
-    with _pytest.raises(ValueError, match="EDGE set"):
+    with _pytest.raises(ValueError, match="bucket_cols"):
         connected_components(e, algorithm="twophase", runner=r)
 
 
@@ -673,27 +682,35 @@ def test_cc_hashmin_checkpoint_resume(spark, tmp_path):
 
 
 def test_cc_twophase_checkpoint_resume(spark, tmp_path):
-    """Same parity for the two-phase star algorithm (O(log n) rounds)."""
+    """Same parity for the two-phase star algorithm (O(log n) rounds), on
+    plain parquet checkpoints and on checkpoints bucketed by the edge
+    state's key ``u`` (the resume reads those bucketed, no fallback)."""
     from networkx_graph_spark.kernels.components import connected_components
     from networkx_graph_spark.plans.supersteps import SuperstepRunner
 
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     rows = [(i, i + 1) for i in range(60)] + [(500, 501), (501, 502), (900, 900)]
     e = spark.createDataFrame(rows, "src long, dst long")
-    d = str(tmp_path / "ck2")
-    full = connected_components(
-        e, algorithm="twophase", runner=SuperstepRunner(spark, checkpoint_dir=d),
-        name="cc2",
-    )
-    a = {r["id"]: r["component"] for r in full.state.collect()}
-    assert full.iterations > 2  # crash point must be mid-fixpoint
-    _crash_after(d, "cc2", 1)
-    resumed = connected_components(
-        e, algorithm="twophase", runner=SuperstepRunner(spark, checkpoint_dir=d),
-        name="cc2", resume=True,
-    )
-    b = {r["id"]: r["component"] for r in resumed.state.collect()}
-    assert a == b
-    assert resumed.metrics[0]["iteration"] == 2
+    for leg, kw in (("ck2", {}), ("ck2u", dict(bucket_cols=["u"], bucket_count=nparts))):
+        d = str(tmp_path / leg)
+        full = connected_components(
+            e, algorithm="twophase", runner=SuperstepRunner(spark, checkpoint_dir=d, **kw),
+            name="cc2",
+        )
+        a = {r["id"]: r["component"] for r in full.state.collect()}
+        assert full.iterations > 2  # crash point must be mid-fixpoint
+        _crash_after(d, "cc2", 1)
+        resumed = connected_components(
+            e, algorithm="twophase", runner=SuperstepRunner(spark, checkpoint_dir=d, **kw),
+            name="cc2", resume=True,
+        )
+        b = {r["id"]: r["component"] for r in resumed.state.collect()}
+        assert a == b, leg
+        assert resumed.metrics[0]["iteration"] == 2
+        assert "resume_fallback" not in resumed.metrics[0]
+    for t in spark.catalog.listTables():
+        if t.name.startswith("ckpt_") and "_cc2_" in t.name:
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 def test_lpa_checkpoint_resume(spark, tmp_path):

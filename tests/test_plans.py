@@ -681,6 +681,40 @@ def test_supersteps_only_in_the_runner():
     assert found - allowed == set(), sorted(found - allowed)
 
 
+def test_kernels_run_on_the_callers_runner():
+    """Every resumable loop runs on the caller's runner: each
+    ``SuperstepRunner(`` built in ``kernels/`` or in the block-centric
+    loop (``operators/sssp_csr.py``) is the default of ``runner or ...``,
+    never a runner of its own that would drop a caller's checkpoint dir,
+    buckets or ``resume``."""
+    import ast
+    import pathlib
+
+    def is_runner(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "SuperstepRunner"
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "networkx_graph_spark"
+    paths = [*sorted((pkg / "kernels").glob("*.py")), pkg / "operators" / "sssp_csr.py"]
+    built, defaults = set(), set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if is_runner(node):
+                built.add((path.name, node.lineno))
+            if (
+                isinstance(node, ast.BoolOp)
+                and isinstance(node.op, ast.Or)
+                and [ast.unparse(v) for v in node.values[:-1]] == ["runner"]
+                and is_runner(node.values[-1])
+            ):
+                defaults.add((path.name, node.values[-1].lineno))
+    assert built, "no SuperstepRunner construction found"
+    assert built == defaults, sorted(built - defaults)
+
+
 def test_no_parallelized_tables_on_the_query_path():
     """Operators, kernels and the id indexer build their driver-side
     tables with ``session.local_df`` (a LocalRelation), never with

@@ -85,8 +85,6 @@ def test_submit_cli_rejects_invalid_combinations(tmp_path):
     # twophase (the default) and blocked CC reject bucketed runners
     assert main(["cc", *base, *ck, "--bucketed"]) == 2
     assert main(["cc", *base, *ck, "--bucketed", "--algorithm", "blocked"]) == 2
-    # blocked CC cannot resume
-    assert main(["cc", *base, *ck, "--resume", "--algorithm", "blocked"]) == 2
 
 
 def test_submit_build_graph(spark, tmp_path):

@@ -21,8 +21,10 @@ Kernels: pagerank | cc | lpa | triangles | build-graph (pages/edges ->
 saved SparkDiGraph artifact; --bucketed makes the reload exchange-free).
 
 Per-superstep metrics + lineage land in {checkpoint-dir}/{job}/metrics.jsonl;
---resume restarts mid-iteration from the newest durable checkpoint
-(--bucketed keeps the vertex state hash-co-partitioned across supersteps).
+--resume restarts mid-iteration from the newest durable checkpoint, for
+pagerank, lpa and every cc --algorithm (hashmin | twophase | blocked).
+--bucketed keeps the vertex state hash-co-partitioned by id across
+supersteps; of the cc variants only hashmin's state is keyed by id.
 The summary JSON line on stdout is machine-parseable.
 """
 
@@ -65,23 +67,16 @@ def main(argv=None) -> int:
     if bool(args.edges) == bool(args.pages):
         print("exactly one of --edges / --pages is required", file=sys.stderr)
         return 2
-    if args.kernel == "cc":
-        # the library enforces these at call time; fail fast at the CLI
+    if args.kernel == "cc" and args.bucketed and args.algorithm in ("twophase", "blocked"):
+        # the runner rejects this at call time; fail fast at the CLI
         # instead of after the session + input scan are up
-        if args.bucketed and args.algorithm in ("twophase", "blocked"):
-            print(
-                f"--bucketed is not supported with cc --algorithm "
-                f"{args.algorithm} (its state is not vertex-keyed); use "
-                f"--algorithm hashmin",
-                file=sys.stderr,
-            )
-            return 2
-        if args.resume and args.algorithm == "blocked":
-            print(
-                "--resume is not supported with cc --algorithm blocked",
-                file=sys.stderr,
-            )
-            return 2
+        print(
+            f"--bucketed is not supported with cc --algorithm "
+            f"{args.algorithm} (checkpoints bucket by id, which is not its "
+            f"state's key); use --algorithm hashmin",
+            file=sys.stderr,
+        )
+        return 2
 
     # On a cluster, spark-submit provides the session; getOrCreate attaches
     # to it. Local smoke runs get a plain builder with sane defaults.
@@ -139,8 +134,7 @@ def main(argv=None) -> int:
 
         res = connected_components(
             edges, algorithm=args.algorithm, max_iter=args.max_iter,
-            runner=runner if args.algorithm != "blocked" else None,
-            name=name, resume=args.resume and args.algorithm != "blocked",
+            runner=runner, name=name, resume=args.resume,
         )
     elif args.kernel == "lpa":
         from networkx_graph_spark.kernels.lpa import label_propagation
